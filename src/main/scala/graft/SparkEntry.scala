@@ -124,7 +124,7 @@ object SparkEntry {
           col("turn_ts").as("max_fts"),
           coalesce(col("turn_ts") > col("event_ts"), lit(false)).as("leaked"),
           lit(strategy).as("strategy"))
-      audit(pit.PointInTimeJoin.enrichMerge(ents, v), "merge")
+      audit(pit.PointInTimeJoin.enrich(ents, v), "merge")
         .unionByName(audit(pit.PointInTimeJoin.enrichJoin(ents, v), "join"))
         .unionByName(audit(pit.PointInTimeJoin.enrichJoin(ents, v,
           saltBuckets = 8, hotKeyRowThreshold = 50L), "salted"))
@@ -167,6 +167,27 @@ object SparkEntry {
             .copy(features = Seq("turn_idx", "text_len")),
           convQualityView(s, dir)),
         fullFeatureNames = true, filterByCreatedTs = true)),
+    // Two join-key groups in one retrieval: two conv-keyed views (one with
+    // created-ts versions, filtered) fuse into one as-of pass, and a view
+    // keyed by a cohort derived from the entity frame takes a second pass
+    // over the first one's output. The cohort view sits between the two
+    // conv views, so the output order is restored after grouping.
+    "pit_multiview_keygroups" -> ((s, dir) => {
+      val entity = Transcripts.entityFrame(s, dir)
+        .withColumn("cohort", pmod(expr("CAST(substring(conv_id, 6) AS BIGINT)"), lit(7L)))
+      val cohortEvents = s.read.parquet(s"$dir/events.parquet")
+        .select(pmod(col("user_id"), lit(7L)).as("cohort"), col("ts"),
+          col("value").as("cohort_value"), col("event_type"), col("event_id"))
+      Historical.getHistoricalFeatures(entity,
+        Seq(
+          turnStatsView(s, dir, ttlSec = 4 * 3600L)
+            .copy(features = Seq("turn_idx", "text_len")),
+          FeatureView("cohort_activity", cohortEvents, Seq("cohort"), "ts",
+            None, 3600L, features = Seq("cohort_value", "event_type"),
+            tieBreakCols = Seq("event_id")),
+          convQualityView(s, dir)),
+        fullFeatureNames = true, filterByCreatedTs = true)
+    }),
     // Entityless / global view via DUMMY_ENTITY (J9; feature_view.py:95-108).
     "pit_entityless" -> ((s, dir) => {
       val g = s.read.parquet(s"$dir/events.parquet")
@@ -460,7 +481,9 @@ object SparkEntry {
         mem.addData(onTime); q.processAllAvailable()
         mem.addData(late :+ flush); q.processAllAvailable()
       } finally q.stop()
-      s.table(name).select(col("k"),
+      // the flush row (k = -1) only advances the watermark; its own window
+      // never closes, and it must never reach the output if one did
+      s.table(name).filter(col("k") >= 0).select(col("k"),
         col("win_start").cast("long").as("win_start_sec"),
         col("n_rows"), col("sum_ids"))
     }),
@@ -1384,6 +1407,45 @@ object SparkEntry {
          |  ON j1.conv_id = e.conv_id AND j1.event_ts = e.event_ts
          |LEFT JOIN (SELECT * FROM j2 WHERE rn = 1) j2
          |  ON j2.conv_id = e.conv_id AND j2.event_ts = e.event_ts""".stripMargin),
+    // cohort = user_id % 7, recovered from conv_id on the entity side; the
+    // conv views match pit_multiview_created
+    "pit_multiview_keygroups" -> withTables(
+      s""", ent AS (SELECT *, CAST(substr(conv_id, 6) AS BIGINT) % 7 AS cohort FROM entity),
+         |coh AS (SELECT user_id % 7 AS cohort, ts, value AS cohort_value, event_type, event_id
+         |        FROM events),
+         |j1 AS (
+         |  SELECT e.conv_id, e.event_ts, f.turn_idx, length(f.text) AS text_len,
+         |    row_number() OVER (PARTITION BY e.conv_id, e.event_ts
+         |                       ORDER BY f.ts DESC, f.turn_idx DESC) AS rn
+         |  FROM (SELECT DISTINCT conv_id, event_ts FROM entity) e
+         |  JOIN transcript f ON f.conv_id = e.conv_id
+         |   AND f.ts <= e.event_ts AND f.ts >= e.event_ts - INTERVAL 4 HOUR),
+         |j2 AS (
+         |  SELECT e.conv_id, e.event_ts, q.score,
+         |    row_number() OVER (PARTITION BY e.conv_id, e.event_ts
+         |                       ORDER BY q.ts DESC, q.created_ts DESC, q.event_id DESC) AS rn
+         |  FROM (SELECT DISTINCT conv_id, event_ts FROM entity) e
+         |  JOIN conv_quality q ON q.conv_id = e.conv_id AND q.ts <= e.event_ts
+         |   AND q.created_ts <= e.event_ts),
+         |j3 AS (
+         |  SELECT e.cohort, e.event_ts, c.cohort_value, c.event_type,
+         |    row_number() OVER (PARTITION BY e.cohort, e.event_ts
+         |                       ORDER BY c.ts DESC, c.event_id DESC) AS rn
+         |  FROM (SELECT DISTINCT cohort, event_ts FROM ent) e
+         |  JOIN coh c ON c.cohort = e.cohort
+         |   AND c.ts <= e.event_ts AND c.ts >= e.event_ts - INTERVAL 1 HOUR)
+         |SELECT e.conv_id, e.event_ts, e.label, e.cohort,
+         |  j1.turn_idx AS turn_stats__turn_idx, j1.text_len AS turn_stats__text_len,
+         |  j3.cohort_value AS cohort_activity__cohort_value,
+         |  j3.event_type AS cohort_activity__event_type,
+         |  j2.score AS conv_quality__score
+         |FROM ent e
+         |LEFT JOIN (SELECT * FROM j1 WHERE rn = 1) j1
+         |  ON j1.conv_id = e.conv_id AND j1.event_ts = e.event_ts
+         |LEFT JOIN (SELECT * FROM j2 WHERE rn = 1) j2
+         |  ON j2.conv_id = e.conv_id AND j2.event_ts = e.event_ts
+         |LEFT JOIN (SELECT * FROM j3 WHERE rn = 1) j3
+         |  ON j3.cohort = e.cohort AND j3.event_ts = e.event_ts""".stripMargin),
     "pit_entityless" -> withTables(
       s""", g AS (SELECT ts, value AS gscore, event_id FROM events WHERE event_id % 11 = 0),
          |j AS (

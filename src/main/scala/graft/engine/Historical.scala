@@ -7,10 +7,11 @@ import org.apache.spark.sql.functions._
 
 /** get_historical_features orchestration (reference: sdk/python/feast/
   * feature_store.py:1942-2142 + the rendered multi-view template
-  * spark.py:1709-1887): sequentially enrich the entity frame with each
-  * view's point-in-time features, preserving entity rows/columns and
-  * output order = entity cols, then features per view (offline_utils.py:
-  * 210-234).
+  * spark.py:1709-1887): enrich the entity frame with each view's
+  * point-in-time features, preserving entity rows/columns and output
+  * order = entity cols, then features per view (offline_utils.py:
+  * 210-234). Views are merged one join-key group at a time, not one view
+  * at a time.
   */
 object Historical {
 
@@ -61,27 +62,35 @@ object Historical {
     // N-view retrieval must not rescan the entity frame N times
     // (reference computes the range once per job, offline_utils.py:168-189)
     val bounds = Some(PointInTimeJoin.entityBounds(entityDf, entityTsCol))
-    // Multi-view fusion: views sharing the same join keys enrich through
-    // ONE union → shuffle → sort → window pass (enrichMergeFused) instead
-    // of N sequential merges — N-1 fewer shuffles and join-backs.
-    // Created-ts filter mode fuses too (per-view visibility time + running
-    // max_by inside the same single sort). Falls back to the sequential
-    // fold for mixed keys, keyless views, or a Date entity ts (per-view
-    // type-promotion rules differ).
-    val fusable = bounded.size >= 2 &&
-      bounded.head.joinKeys.nonEmpty &&
-      bounded.forall(_.joinKeys == bounded.head.joinKeys) &&
-      entityDf.columns.contains(entityTsCol) &&
-      entityDf.schema(entityTsCol).dataType !=
-        org.apache.spark.sql.types.DateType
-    val out =
-      if (fusable)
-        PointInTimeJoin.enrichMergeFused(entityDf, bounded, entityTsCol,
-          fullFeatureNames, filterByCreatedTs, precomputedBounds = bounds)
-      else bounded.foldLeft(entityDf) { (acc, v) =>
-        PointInTimeJoin.enrich(acc, v, entityTsCol, fullFeatureNames,
+    // One as-of pass per join-key group: views sharing join keys (and, for
+    // a Date entity ts, the feature-ts type it promotes to) fuse into ONE
+    // union → shuffle → sort → window pass (enrichMergeFused), created-ts
+    // filter mode included. Groups chain — each probes the previous
+    // group's output, whose entity columns ride through the window — so a
+    // retrieval costs one shuffle per key group and no join-back. Keyless
+    // views take the join path, one view each.
+    val entityTsType = entityDf.schema(entityTsCol).dataType
+    def groupKey(v: FeatureView) =
+      (v.joinKeys, PointInTimeJoin.mergeAxisType(entityTsType, v))
+    val groups = bounded.foldLeft(Vector.empty[Vector[FeatureView]]) { (gs, v) =>
+      val i = if (v.joinKeys.isEmpty) -1 else gs.indexWhere(g => groupKey(g.head) == groupKey(v))
+      if (i < 0) gs :+ Vector(v) else gs.updated(i, gs(i) :+ v)
+    }
+    val chained = groups.foldLeft(entityDf) { (acc, g) =>
+      if (g.head.joinKeys.isEmpty)
+        PointInTimeJoin.enrich(acc, g.head, entityTsCol, fullFeatureNames,
           filterByCreatedTs, precomputedBounds = bounds)
-      }
+      else
+        PointInTimeJoin.enrichMergeFused(acc, g, entityTsCol, fullFeatureNames,
+          filterByCreatedTs, bounds)
+    }
+    // grouping moves a later view's features up next to its group's first
+    // view; restore entity cols, then features in view order
+    val out =
+      if (groups.flatten == bounded) chained
+      else chained.select((entityDf.columns.toSeq ++ bounded.flatMap(v =>
+        v.resolvedFeatures.map(PointInTimeJoin.outName(v, _, fullFeatureNames))))
+        .map(c => col(PointInTimeJoin.quote(c))): _*)
     val withOdfv = OnDemand.applyAll(out, onDemand, fullFeatureNames,
       knownPrefixes = Some(views.map(_.name).toSet))
     transform.map(_(withOdfv)).getOrElse(withOdfv)

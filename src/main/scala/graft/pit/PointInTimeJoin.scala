@@ -1,9 +1,11 @@
 package graft.pit
 
 import graft.FeatureView
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, Row}
+import org.apache.spark.sql.catalyst.expressions.KnownNotNull
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{DataType, DateType}
 
 /** Point-in-time ("as-of") join: for each entity row (join keys, event_ts),
   * attach the feature values of the **latest** source row with
@@ -18,22 +20,25 @@ import org.apache.spark.sql.expressions.Window
   * Two physical strategies, neither of which is the reference's
   * (range join → row_number → join back):
   *
-  *  1. **Merge path** ([[enrichMerge]], the default): union feature and
-  *     probe rows, one sort per key on (ts, side, created, tiebreaks), one
-  *     window pass of `last(payload, ignoreNulls)` — each probe row reads
-  *     the latest qualifying feature row directly. No join, no pair
-  *     blow-up, no aggregation: cost is a single shuffle + sort of
-  *     |features| + |probes| rows regardless of TTL width. This is the
-  *     classic sort-merge as-of algorithm expressed in pure Catalyst.
-  *     The created-ts *filter* mode stays on this path: a feature row is
-  *     visible to a probe iff `event_ts >= greatest(ts, created_ts)`, so
-  *     ordering the merge stream by that visibility time and keeping a
+  *  1. **Merge kernel** ([[enrichMergeFused]], the default and the only
+  *     merge path): union the feature rows of every view sharing the join
+  *     keys with the probe rows, one sort per key on (ts, side, created,
+  *     tiebreaks), one window pass of a running `last(payload_i,
+  *     ignoreNulls)` per view — each probe row reads each view's latest
+  *     qualifying feature row directly. No join, no pair blow-up, no
+  *     aggregation, no join-back (probe rows carry their entity columns
+  *     through the window): cost is a single shuffle + sort of
+  *     |features| + |probes| rows regardless of TTL width or view count.
+  *     This is the classic sort-merge as-of algorithm expressed in pure
+  *     Catalyst. The created-ts *filter* mode stays on this path: a feature
+  *     row is visible to a probe iff `event_ts >= greatest(ts, created_ts)`,
+  *     so ordering the merge stream by that visibility time and keeping a
   *     running `max_by(payload, (ts, created, tiebreaks))` (instead of
   *     `last`) yields the exact filtered winner with the same single
   *     sort — no join, no per-key pair blow-up at TTL = 0.
   *  2. **Join path** ([[enrichJoin]]): time-bucketed range inner join
   *     (bounded fan-out) → partial-aggregated max_by → left join back.
-  *     Needed for hot-key salting (explicit replication).
+  *     Kept for hot-key salting (explicit replication) and keyless views.
   *
   * Shared scale levers (both paths):
   *   - scan bounds [min(event_ts) − ttl, max(event_ts)] derived from the
@@ -73,7 +78,7 @@ object PointInTimeJoin {
         filterByCreatedTs, broadcastThresholdRows, saltBuckets,
         hotKeyRowThreshold, precomputedBounds)
     else
-      enrichMerge(entityDf, view, entityTsCol, fullFeatureNames,
+      enrichMergeFused(entityDf, Seq(view), entityTsCol, fullFeatureNames,
         filterByCreatedTs, precomputedBounds)
 
   /** One entity-frame (min, max) event-ts scan, shared across views of a
@@ -83,13 +88,13 @@ object PointInTimeJoin {
   def entityBounds(entityDf: DataFrame, entityTsCol: String): Row =
     entityDf.agg(min(col(entityTsCol)).as("mn"), max(col(entityTsCol)).as("mx")).head()
 
-  /** Shared prep: field mapping (P1), early projection, scan bounds from the
-    * entity range (P4/P5), date-partition predicates (P6), probe dedup (J2).
+  /** Shared source prep: field mapping (P1), early projection, scan bounds
+    * from the entity range (P4/P5), date-partition predicates (P6).
     */
   private def prepare(
       entityDf: DataFrame, view: FeatureView, entityTsCol: String,
       precomputedBounds: Option[Row]
-  ): (DataFrame, DataFrame) = {
+  ): DataFrame = {
     val keys = view.joinKeys
     val feats = view.resolvedFeatures
     val neededCols =
@@ -138,198 +143,39 @@ object PointInTimeJoin {
       lowerTs.foreach(lo =>
         src = src.filter(col(dpc) >= date_format(lo, view.datePartitionFormat)))
     }
-
-    val probe = entityDf.select((keys :+ entityTsCol).map(col): _*)
-    (src, probe)
+    src
   }
 
-  /** The sort-merge as-of path (see object doc, strategy 1).
+  /** The sort-merge as-of kernel (see object doc, strategy 1): N views
+    * sharing the SAME join keys enrich the entity frame through ONE union →
+    * ONE shuffle/sort → ONE window pass; a single view is the N = 1 case.
     *
-    * Ordering per key: (ts asc, side asc [features before probes at equal
-    * ts — `<=` semantics], created asc nulls-first [nulls lose], tiebreaks
-    * asc); the running `last` of the feature-row payload struct at each
-    * probe row is therefore exactly the max_by(ts, created, tiebreaks)
-    * winner of the prefix. The payload is one struct so a feature row's
-    * columns travel atomically (a legitimately-null feature value must NOT
-    * fall through to an older row). TTL is applied afterwards: the latest
-    * winner is the only candidate — anything older is further below the
-    * window's lower bound.
+    * Per-key order: (visibility ts, side [features before probes at equal
+    * ts — `<=` semantics], view-0 ords…, view-N ords… nulls-first [null
+    * created loses]), ords being created then tiebreaks. Each view's
+    * payload struct (columns travel atomically: a null feature value must
+    * NOT fall through to an older row) and ords are null on every other
+    * view's rows and on probes, so view i's running `last(__payload_i,
+    * ignoreNulls)` at a probe row is exactly its max_by(ts, created,
+    * tiebreaks) winner. TTL then qualifies that winner, per view — anything
+    * older is further below the window's lower bound.
     *
-    * Created-ts filter mode (`filterByCreatedTs`, reference template
-    * spark.py:1799-1801 / dask masking dask.py:1203-1226): visibility time
-    * of a feature row becomes `greatest(ts, created_ts)` — `__t <= event_ts`
-    * is then exactly `ts <= event_ts AND created_ts <= event_ts`. The
-    * stream is no longer sorted by the (ts, created, tiebreaks) winner
-    * order, so the running `last` is replaced by a running
-    * `max_by(payload, ord)` over the same window — still one sort, one
-    * pass; the TTL = 0 case stays linear instead of the join path's
-    * per-key quadratic fan-out.
-    */
-  def enrichMerge(
-      entityDf: DataFrame,
-      view: FeatureView,
-      entityTsCol: String = "event_ts",
-      fullFeatureNames: Boolean = false,
-      filterByCreatedTs: Boolean = false,
-      precomputedBounds: Option[Row] = None
-  ): DataFrame = {
-    val keys = view.joinKeys
-    val feats = view.resolvedFeatures
-    val (src0, probe) = prepare(entityDf, view, entityTsCol, precomputedBounds)
-    val minTs = lit("1900-01-01 00:00:00").cast("timestamp")
-    val createdFilter = filterByCreatedTs && view.createdTsCol.nonEmpty
-    // created-filter mode hides rows with NULL created_ts (SQL semantics of
-    // the reference's `created <= entity_ts` join predicate, spark.py:1799;
-    // dask's NaT compare masks them too, dask.py:1203-1226) — without this,
-    // greatest() below would skip the null and leave the row visible,
-    // diverging from the join path (PropertySpec pins the equivalence)
-    val src =
-      if (createdFilter) src0.filter(col(view.createdTsCol.get).isNotNull)
-      else src0
-
-    // Comparison type for the merged time axis: never cast the feature ts
-    // DOWN to a coarser entity type — a DateType entity frame would
-    // truncate feature times to midnight and leak same-day future rows
-    // (the join path's `fts <= ets` promotes instead; the two strategies
-    // must agree). Dates promote to the feature ts type; otherwise the
-    // entity type wins (e.g. tz vs ntz normalization).
-    val etsType = probe.schema(entityTsCol).dataType match {
-      case org.apache.spark.sql.types.DateType => src.schema(view.tsCol).dataType
-      case t => t
-    }
-    val ordNames = view.createdTsCol.map(_ => "__ord_created").toSeq ++
-      view.tieBreakCols.indices.map(i => s"__ord_tb$i")
-
-    // visibility time: when created-filtering, a row only becomes usable
-    // once BOTH its event ts and its created ts have passed (greatest
-    // skips nulls, so a null created_ts falls back to ts alone)
-    val visTime =
-      if (createdFilter)
-        greatest(col(view.tsCol), col(view.createdTsCol.get)).cast(etsType)
-      else col(view.tsCol).cast(etsType)
-
-    // winner order of the created-filter max_by: (ts, created nulls-lose,
-    // tiebreaks) — identical to the join path's ordering struct
-    val ordStruct =
-      if (createdFilter)
-        Seq(when(lit(true), struct((col(view.tsCol).cast(etsType).as("__o_ts") +:
-          (view.createdTsCol.map(c => coalesce(col(c), minTs).as("__o_cr")).toSeq ++
-            view.tieBreakCols.zipWithIndex.map { case (c, i) => col(c).as(s"__o_tb$i") })): _*))
-          .as("__ord"))
-      else Nil
-    val fSide = src.select(
-      keys.map(col) ++
-        Seq(visTime.as("__t"), lit(0).as("__p"),
-          lit(null).cast(etsType).as("__ets"),
-          when(lit(true), struct((feats.map(col) :+
-            col(view.tsCol).cast(etsType).as("__fts")): _*)).as("__payload")) ++
-        ordStruct ++
-        (view.createdTsCol.map(c => coalesce(col(c), minTs).as("__ord_created")).toSeq ++
-          view.tieBreakCols.zipWithIndex.map { case (c, i) => col(c).as(s"__ord_tb$i") }): _*)
-    val payloadType = fSide.schema("__payload").dataType
-    val pSide = probe.select(
-      keys.map(col) ++
-        Seq(col(entityTsCol).cast(etsType).as("__t"), lit(1).as("__p"),
-          col(entityTsCol).as("__ets"),
-          lit(null).cast(payloadType).as("__payload")) ++
-        (if (createdFilter)
-           Seq(lit(null).cast(fSide.schema("__ord").dataType).as("__ord"))
-         else Nil) ++
-        ordNames.map(n => lit(null).cast(
-          fSide.schema(n).dataType).as(n)): _*)
-
-    val w = Window.partitionBy(keys.map(col): _*)
-      .orderBy((Seq(col("__t").asc, col("__p").asc) ++
-        ordNames.map(n => col(n).asc_nulls_first)): _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-
-    // Slim fast path: when the entity frame is exactly (keys, event_ts),
-    // the final left join's only job is restoring entity-side columns and
-    // duplicate multiplicity — but every probe row already flows through
-    // the window pass (duplicates are adjacent and read the same running
-    // `last`), so the window output IS the result. Saves the join-back
-    // (one full shuffle of both sides) and the second entity scan — the
-    // whole retrieval becomes scan → one shuffle → sort+window → project.
-    val slim = entityDf.columns.toSet == (keys :+ entityTsCol).toSet
-
-    // running winner: the sorted-stream `last` in normal mode; a running
-    // max_by over (ts, created, tiebreaks) in created-filter mode, where
-    // the stream is visibility-ordered, not winner-ordered (probe rows
-    // carry a null ord and are skipped by max_by)
-    val runningBest =
-      if (createdFilter) max_by(col("__payload"), col("__ord")).over(w)
-      else last(col("__payload"), ignoreNulls = true).over(w)
-    val unioned = fSide.unionByName(pSide)
-      .withColumn("__best", runningBest)
-    val filled =
-      if (slim) unioned.filter(col("__p") === 1)
-      else {
-        // Duplicate entity rows collapse WITHOUT a dedup exchange:
-        // duplicates are adjacent under this sort, so a lag() over the same
-        // window spec (one physical sort serves both functions) marks all
-        // but the first; the join-back below restores multiplicity.
-        val wLag = Window.partitionBy(keys.map(col): _*)
-          .orderBy((Seq(col("__t").asc, col("__p").asc) ++
-            ordNames.map(n => col(n).asc_nulls_first)): _*)
-        unioned
-          .withColumn("__dupProbe",
-            col("__p") === 1 && lag(col("__p"), 1).over(wLag) === 1 &&
-              lag(col("__t"), 1).over(wLag) === col("__t"))
-          .filter(col("__p") === 1 && !coalesce(col("__dupProbe"), lit(false)))
-      }
-
-    val qualified =
-      if (view.ttlSeconds > 0)
-        filled.withColumn("__best",
-          when(col("__best.__fts") >=
-            col("__ets") - expr(s"INTERVAL ${view.ttlSeconds} SECONDS"),
-            col("__best")))
-      else filled
-
-    if (slim)
-      // original entity column order, then features
-      qualified.select(
-        entityDf.columns.toSeq.map(c =>
-          if (c == entityTsCol) col("__ets").as(entityTsCol) else col(c)) ++
-          feats.map(f => col("__best." + f).as(outName(view, f, fullFeatureNames))): _*)
-    else {
-      val latest = qualified.select(
-        keys.map(col) ++ Seq(col("__ets").as(entityTsCol)) ++
-          feats.map(f => col("__best." + f).as(outName(view, f, fullFeatureNames))): _*)
-      entityDf.join(latest, keys :+ entityTsCol, "left")
-    }
-  }
-
-  /** Fused multi-view merge path: N views sharing the SAME join keys enrich
-    * the entity frame through ONE union → ONE shuffle/sort → ONE window pass,
-    * instead of N sequential merges — which cost N full shuffles of the
-    * probe+feature stream plus, for every view after the first, a join-back
-    * (the accumulated frame is no longer slim). At cluster scale the fused
-    * plan reads every source once, shuffles once on the shared keys, and
-    * sorts once.
+    * Created-ts filter mode (reference template spark.py:1799-1801 / dask
+    * masking dask.py:1203-1226): a view's merge axis becomes the visibility
+    * time `greatest(ts, created_ts)`, so `__t <= event_ts` is exactly
+    * `ts <= event_ts AND created_ts <= event_ts`; that stream is not in
+    * winner order, so the running `last` becomes a running `max_by(payload,
+    * (ts, created, tiebreaks))` under the same sort — linear at TTL = 0.
     *
-    * Mechanics: each view contributes its own payload struct and order
-    * columns, null on every other view's rows and on probe rows. The global
-    * per-key sort is (visibility ts, side, view-0 ord…, view-N ord…): two
-    * rows of the SAME view order among themselves by that view's ord columns
-    * (all other views' ord columns are null on both, comparing equal), and
-    * rows of other views are invisible to view i's running
-    * `last(__payload_i, ignoreNulls)` — so each view's winner is exactly its
-    * single-view merge winner. TTL qualification stays per view.
+    * No join-back: probe rows carry every entity column in one `__ent`
+    * struct through the exchange and the sort.
+    * Duplicate probes are adjacent and read the same running winner, so the
+    * window output already is the result, multiplicity kept.
     *
-    * Created-ts filter mode fuses too (`filterByCreatedTs`): each view with
-    * a created column contributes a per-view visibility time
-    * `greatest(ts, created)` as its merge axis and a per-view running
-    * `max_by(payload_i, (ts, created, tiebreaks))` winner — exactly the
-    * single-view created-filter mechanics ([[enrichMerge]]), per view,
-    * under the same single sort. Views without a created column keep the
-    * running-`last` winner; the two winner kinds coexist in one window
-    * pass because every view's payload and order columns are null on
-    * every other view's rows.
-    *
-    * Preconditions (the caller, [[graft.engine.Historical]], falls back to
-    * the sequential fold otherwise): ≥ 2 views, identical non-empty
-    * joinKeys, non-Date entity timestamp.
+    * Time axis ([[mergeAxisType]]): a DateType entity ts promotes to the
+    * views' (shared) feature-ts type — casting feature times down to dates
+    * would leak same-day future rows, and the join path promotes too;
+    * otherwise the entity type wins (e.g. tz vs ntz normalization).
     */
   def enrichMergeFused(
       entityDf: DataFrame,
@@ -342,73 +188,63 @@ object PointInTimeJoin {
     val keys = views.head.joinKeys
     require(keys.nonEmpty && views.forall(_.joinKeys == keys),
       "fused merge requires identical non-empty join keys across views")
-    // Enforce the documented precondition, don't just document it: a
-    // DateType entity ts would cast every feature ts down to midnight here
-    // (no per-view promotion in the fused axis) and leak same-day future
-    // rows — the single-view path promotes instead (enrichMerge), so a
-    // direct caller must go through Historical's fallback for Date frames.
-    require(entityDf.schema(entityTsCol).dataType !=
-      org.apache.spark.sql.types.DateType,
-      "fused merge requires a non-Date entity timestamp; " +
-        "use the sequential enrich path for DateType entity frames")
+    val entityTsType = entityDf.schema(entityTsCol).dataType
+    val etsType = mergeAxisType(entityTsType, views.head)
+    require(views.forall(v => mergeAxisType(entityTsType, v) == etsType),
+      "fused merge of a Date entity timestamp requires one feature-ts type " +
+        "across views; merge views with differing ts types separately")
     val bounds = precomputedBounds.getOrElse(entityBounds(entityDf, entityTsCol))
-    val prepared = views.map(v => prepare(entityDf, v, entityTsCol, Some(bounds)))
-    val probe = prepared.head._2
-    val etsType = probe.schema(entityTsCol).dataType
     val minTs = lit("1900-01-01 00:00:00").cast("timestamp")
+    def typeOf(df: DataFrame, e: Column): DataType = df.select(e.as("x")).schema("x").dataType
 
     // per-view column descriptors: payload struct + (ord name, expr, type).
     // A created-filtered view additionally carries (a) a visibility merge
     // axis greatest(ts, created) and (b) an order STRUCT for its running
     // max_by — null on every other view's rows and on probes, so max_by
-    // skips them (mirrors the single-view created-filter path).
+    // skips them.
     case class ViewCols(
         view: FeatureView, src: DataFrame, feats: Seq[String],
-        visTime: Column,
-        payload: Column, payloadType: org.apache.spark.sql.types.DataType,
-        ordStruct: Option[(String, Column, org.apache.spark.sql.types.DataType)],
-        ords: Seq[(String, Column, org.apache.spark.sql.types.DataType)])
+        visTime: Column, payload: Column, payloadType: DataType,
+        ordStruct: Option[(String, Column, DataType)],
+        ords: Seq[(String, Column, DataType)])
     val infos = views.zipWithIndex.map { case (v, i) =>
       val createdFilter = filterByCreatedTs && v.createdTsCol.nonEmpty
-      // created-filter mode hides NULL-created rows (SQL semantics of the
-      // reference's `created <= entity_ts` join predicate) — same filter
-      // as the single-view path; PropertySpec pins the equivalence
+      // created-filter mode hides rows with NULL created_ts (SQL semantics
+      // of the reference's `created <= entity_ts` join predicate,
+      // spark.py:1799; dask's NaT compare masks them too) — without this,
+      // greatest() would skip the null and leave the row visible, diverging
+      // from the join path (PropertySpec pins the equivalence)
+      val src0 = prepare(entityDf, v, entityTsCol, Some(bounds))
       val src =
-        if (createdFilter) prepared(i)._1.filter(col(v.createdTsCol.get).isNotNull)
-        else prepared(i)._1
+        if (createdFilter) src0.filter(col(v.createdTsCol.get).isNotNull) else src0
       val feats = v.resolvedFeatures
       val payload = struct((feats.map(col) :+
         col(v.tsCol).cast(etsType).as("__fts")): _*)
-      val payloadType = src.select(payload.as("p")).schema("p").dataType
       val visTime =
         if (createdFilter)
           greatest(col(v.tsCol), col(v.createdTsCol.get)).cast(etsType)
         else col(v.tsCol).cast(etsType)
+      val ords = (v.createdTsCol.map(c => coalesce(col(c), minTs)).toSeq ++
+        v.tieBreakCols.map(col)).zipWithIndex.map { case (e, k) =>
+          (s"__ord_${i}_$k", e, typeOf(src, e))
+        }
+      // winner order of the created-filter max_by: (ts, ords…)
       val ordStruct =
-        if (createdFilter) {
-          val e = struct((col(v.tsCol).cast(etsType).as("__o_ts") +:
-            (v.createdTsCol.map(c => coalesce(col(c), minTs).as("__o_cr")).toSeq ++
-              v.tieBreakCols.zipWithIndex.map { case (c, k) =>
-                col(c).as(s"__o_tb$k")
-              })): _*)
-          Some((s"__mord_$i", e, src.select(e.as("o")).schema("o").dataType))
-        } else None
-      val ords =
-        v.createdTsCol.map { c =>
-          val e = coalesce(col(c), minTs)
-          (s"__ord_${i}_cr", e, src.select(e.as("o")).schema("o").dataType)
-        }.toSeq ++
-          v.tieBreakCols.zipWithIndex.map { case (c, k) =>
-            (s"__ord_${i}_tb$k", col(c), src.schema(c).dataType)
-          }
-      ViewCols(v, src, feats, visTime, payload, payloadType, ordStruct, ords)
+        if (!createdFilter) None
+        else {
+          val e = struct((col(v.tsCol).cast(etsType) +: ords.map(_._2))
+            .zipWithIndex.map { case (e, k) => e.as(s"__o$k") }: _*)
+          Some((s"__mord_$i", e, typeOf(src, e)))
+        }
+      ViewCols(v, src, feats, visTime, payload, typeOf(src, payload), ordStruct, ords)
     }
-    val allOrds = infos.zipWithIndex.flatMap { case (inf, i) =>
-      inf.ords.map { case (name, e, dt) => (name, i, e, dt) }
+    val owned = infos.zipWithIndex.flatMap { case (inf, i) =>
+      (inf.ords ++ inf.ordStruct).map { case (name, e, dt) => (name, i, e, dt) }
     }
-    val allOrdStructs = infos.zipWithIndex.flatMap { case (inf, i) =>
-      inf.ordStruct.map { case (name, e, dt) => (name, i, e, dt) }
-    }
+
+    // every entity column, as one struct on the probe side
+    val entity = struct(entityDf.columns.toSeq.map(c => col(quote(c)).as(c)): _*)
+    val entityType = typeOf(entityDf, entity)
 
     def sideSelect(df: DataFrame, head: Seq[Column], ownerIdx: Int): DataFrame =
       df.select(
@@ -417,78 +253,62 @@ object PointInTimeJoin {
             if (j == ownerIdx) inf.payload.as(s"__payload_$j")
             else lit(null).cast(inf.payloadType).as(s"__payload_$j")
           } ++
-          allOrds.map { case (name, owner, e, dt) =>
-            if (owner == ownerIdx) e.as(name) else lit(null).cast(dt).as(name)
-          } ++
-          allOrdStructs.map { case (name, owner, e, dt) =>
+          owned.map { case (name, owner, e, dt) =>
             if (owner == ownerIdx) e.as(name) else lit(null).cast(dt).as(name)
           }: _*)
 
     val fSides = infos.zipWithIndex.map { case (inf, i) =>
-      sideSelect(inf.src, Seq(
-        inf.visTime.as("__t"), lit(0).as("__p"),
-        lit(null).cast(etsType).as("__ets")), i)
+      sideSelect(inf.src, Seq(inf.visTime.as("__t"), lit(0).as("__p"),
+        lit(null).cast(entityType).as("__ent")), i)
     }
-    val pSide = sideSelect(probe, Seq(
-      col(entityTsCol).cast(etsType).as("__t"), lit(1).as("__p"),
-      col(entityTsCol).as("__ets")), ownerIdx = -1)
+    val pSide = sideSelect(entityDf, Seq(
+      col(quote(entityTsCol)).cast(etsType).as("__t"), lit(1).as("__p"),
+      entity.as("__ent")), ownerIdx = -1)
 
-    val sortCols = Seq(col("__t").asc, col("__p").asc) ++
-      allOrds.map { case (name, _, _, _) => col(name).asc_nulls_first }
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(sortCols: _*)
+    val w = Window.partitionBy(keys.map(col): _*)
+      .orderBy((Seq(col("__t").asc, col("__p").asc) ++
+        infos.flatMap(_.ords).map { case (name, _, _) => col(name).asc_nulls_first }): _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
 
-    val slim = entityDf.columns.toSet == (keys :+ entityTsCol).toSet
     val unioned = (fSides :+ pSide).reduce(_ unionByName _)
     // per-view running winner: the sorted-stream `last` normally; a running
     // max_by over the view's own (ts, created, tiebreaks) struct in
     // created-filter mode, where the stream is visibility-ordered rather
     // than winner-ordered (other views' rows and probes carry a null ord
-    // and are skipped)
-    val withBests = infos.zipWithIndex.foldLeft(unioned) { case (acc, (inf, i)) =>
+    // and are skipped). TTL qualifies each winner against the probe's
+    // (axis-typed) event ts.
+    val bests = infos.zipWithIndex.map { case (inf, i) =>
       val best = inf.ordStruct match {
         case Some((name, _, _)) => max_by(col(s"__payload_$i"), col(name)).over(w)
         case None => last(col(s"__payload_$i"), ignoreNulls = true).over(w)
       }
-      acc.withColumn(s"__best_$i", best)
+      s"__best_$i" -> best
     }
-    val filled =
-      if (slim) withBests.filter(col("__p") === 1)
-      else {
-        // duplicate probes are adjacent under the sort (all ord columns
-        // null); mark all but the first with a lag over the same window
-        // spec — one physical sort serves every window function here
-        val wLag = Window.partitionBy(keys.map(col): _*).orderBy(sortCols: _*)
-        withBests
-          .withColumn("__dupProbe",
-            col("__p") === 1 && lag(col("__p"), 1).over(wLag) === 1 &&
-              lag(col("__t"), 1).over(wLag) === col("__t"))
-          .filter(col("__p") === 1 && !coalesce(col("__dupProbe"), lit(false)))
-      }
-    val qualified = infos.zipWithIndex.foldLeft(filled) { case (acc, (inf, i)) =>
-      if (inf.view.ttlSeconds > 0)
-        acc.withColumn(s"__best_$i",
-          when(col(s"__best_$i.__fts") >=
-            col("__ets") - expr(s"INTERVAL ${inf.view.ttlSeconds} SECONDS"),
-            col(s"__best_$i")))
-      else acc
-    }
-
+    val filled = unioned.withColumns(bests.toMap).filter(col("__p") === 1)
     val featCols = infos.zipWithIndex.flatMap { case (inf, i) =>
-      inf.feats.map(f =>
-        col(s"__best_$i." + f).as(outName(inf.view, f, fullFeatureNames)))
+      val best = col(s"__best_$i")
+      val qualified =
+        if (inf.view.ttlSeconds > 0)
+          when(best("__fts") >=
+            col("__t") - expr(s"INTERVAL ${inf.view.ttlSeconds} SECONDS"), best)
+        else best
+      inf.feats.map(f => qualified(f).as(outName(inf.view, f, fullFeatureNames)))
     }
-    if (slim)
-      qualified.select(
-        entityDf.columns.toSeq.map(c =>
-          if (c == entityTsCol) col("__ets").as(entityTsCol) else col(c)) ++
-          featCols: _*)
-    else {
-      val latest = qualified.select(
-        keys.map(col) ++ Seq(col("__ets").as(entityTsCol)) ++ featCols: _*)
-      entityDf.join(latest, keys :+ entityTsCol, "left")
-    }
+    // the entity frame as it came in, then features per view; a probe row
+    // always carries its struct, so entity columns keep their nullability
+    val ent = GraftColumnBridge.column(KnownNotNull(GraftColumnBridge.expression(col("__ent"))))
+    filled.select(entityDf.columns.toSeq.map(c => ent.getField(c).as(c)) ++ featCols: _*)
   }
+
+  /** The merge kernel's time-axis type for `view` against an entity ts of
+    * type `entityTsType`: the entity type, except that a DateType entity ts
+    * promotes to the view's feature-ts type (see [[enrichMergeFused]]).
+    */
+  private[graft] def mergeAxisType(entityTsType: DataType, view: FeatureView): DataType =
+    entityTsType match {
+      case DateType => view.mappedSource.schema(view.tsCol).dataType
+      case t => t
+    }
 
   /** The bucketed range-join path (see object doc, strategy 2). */
   def enrichJoin(
@@ -504,9 +324,10 @@ object PointInTimeJoin {
   ): DataFrame = {
     val keys = view.joinKeys
     val feats = view.resolvedFeatures
-    val (src, probeAll) = prepare(entityDf, view, entityTsCol, precomputedBounds)
+    val src = prepare(entityDf, view, entityTsCol, precomputedBounds)
     // J2: deduplicated probe side — one row per (keys, event_ts).
-    val probeRaw = probeAll.dropDuplicates(keys :+ entityTsCol)
+    val probeRaw = entityDf.select((keys :+ entityTsCol).map(col): _*)
+      .dropDuplicates(keys :+ entityTsCol)
 
     // Hot-conversation salting (north rule; graft.skew.Salting): split keys
     // with > hotKeyRowThreshold source rows into saltBuckets sub-keys. The
@@ -586,8 +407,11 @@ object PointInTimeJoin {
     entityDf.join(latest, keys :+ entityTsCol, "left")
   }
 
-  private def outName(view: FeatureView, feat: String, full: Boolean): String =
+  private[graft] def outName(view: FeatureView, feat: String, full: Boolean): String =
     if (full) s"${view.name}__$feat" else feat
+
+  /** A column name as an identifier: dots and backticks stay literal. */
+  private[graft] def quote(c: String): String = "`" + c.replace("`", "``") + "`"
 
   private def shouldBroadcast(df: DataFrame, thresholdRows: Long): Boolean = {
     // Cheap static heuristic: trust Catalyst/AQE unless the caller forces it.

@@ -151,6 +151,53 @@ class PlanContractSpec extends SparkTestBase {
         out.queryExecution.executedPlan)
   }
 
+  test("non-slim single-view retrieval is ONE shuffle, no broadcast") {
+    val src = (1 to 500).map { i =>
+      (s"conv${i % 20}", new Timestamp(1700000000000L + i * 60000L), i)
+    }.toDF("conv_id", "ts", "turn_idx")
+    val entity = (1 to 50).map { i =>
+      (s"conv${i % 20}", new Timestamp(1700000000000L + i * 600000L), i * 0.5)
+    }.toDF("conv_id", "event_ts", "label")
+    val view = FeatureView("turns", src, Seq("conv_id"), "ts",
+      ttlSeconds = 86400L, features = Seq("turn_idx"))
+    // the label rides through the window inside the probe rows: no
+    // join-back, so neither a second shuffle nor a broadcast of either side
+    val out = engine.Historical.getHistoricalFeatures(entity, Seq(view))
+    assert(shuffles(out) == 1 && broadcasts(out) == 0,
+      "non-slim retrieval grew a join-back:\n" + out.queryExecution.executedPlan)
+  }
+
+  test("two key groups cost one shuffle each, created filter and non-slim entity") {
+    val conv1 = (1 to 500).map { i =>
+      (s"conv${i % 20}", new Timestamp(1700000000000L + i * 60000L), i)
+    }.toDF("conv_id", "ts", "turn_idx")
+    val conv2 = (1 to 300).map { i =>
+      (s"conv${i % 20}", new Timestamp(1700000000000L + i * 90000L),
+        new Timestamp(1700000000000L + i * 90000L + (i % 3) * 86400000L), i * 1.5)
+    }.toDF("conv_id", "ts", "created_ts", "score")
+    val users = (1 to 100).map { i =>
+      (s"user${i % 5}", new Timestamp(1700000000000L + i * 300000L), i.toLong)
+    }.toDF("user_id", "ts", "credits")
+    val entity = (1 to 50).map { i =>
+      (s"conv${i % 20}", s"user${i % 5}", new Timestamp(1700000000000L + i * 600000L),
+        i * 0.5)
+    }.toDF("conv_id", "user_id", "event_ts", "label")
+    val views = Seq(
+      FeatureView("turns", conv1, Seq("conv_id"), "ts",
+        ttlSeconds = 86400L, features = Seq("turn_idx")),
+      FeatureView("users", users, Seq("user_id"), "ts", features = Seq("credits")),
+      FeatureView("quality", conv2, Seq("conv_id"), "ts",
+        createdTsCol = Some("created_ts"), features = Seq("score")))
+    // conv group (turns + quality) -> ONE exchange, user group -> ONE
+    // exchange; the sequential per-view fold paid 3 plus join-backs
+    val out = engine.Historical.getHistoricalFeatures(entity, views,
+      fullFeatureNames = true, filterByCreatedTs = true)
+    assert(shuffles(out) == 2, "key-group retrieval grew shuffles:\n" +
+      out.queryExecution.executedPlan)
+    assert(out.columns.toSeq == Seq("conv_id", "user_id", "event_ts", "label",
+      "turns__turn_idx", "users__credits", "quality__score"))
+  }
+
   test("TTL-derived scan bounds push into the parquet source scan") {
     val dir = java.nio.file.Files.createTempDirectory("graft_plancontract").toString
     (1 to 500).map { i =>

@@ -93,7 +93,7 @@ class PointInTimeJoinSpec extends SparkTestBase {
       features = Seq("v"), tieBreakCols = Seq("v"))
     // both physical strategies must agree: the date promotes to midnight,
     // feature timestamps keep their time-of-day
-    val m = PointInTimeJoin.enrichMerge(entity, v)
+    val m = PointInTimeJoin.enrich(entity, v)
     val j = PointInTimeJoin.enrichJoin(entity, v)
     assert(m.select("v").as[Int].head() == 42, "merge path leaked a future row")
     assert(j.select("v").as[Int].head() == 42)
@@ -165,10 +165,10 @@ class PointInTimeJoinSpec extends SparkTestBase {
     // duplicate probe rows included — multiplicity must be preserved
     val slimEnts = (entities.map { case (c, t, _) => (c, t) } ++
       entities.take(4).map { case (c, t, _) => (c, t) }).toDF("conv_id", "event_ts")
-    val fast = PointInTimeJoin.enrichMerge(slimEnts, view(3600L))
-    // same rows through the general path (extra column forces the join-back)
+    val fast = PointInTimeJoin.enrich(slimEnts, view(3600L))
+    // same rows with an extra entity column riding through the window
     val general = PointInTimeJoin
-      .enrichMerge(slimEnts.withColumn("label", lit(0.0)), view(3600L))
+      .enrich(slimEnts.withColumn("label", lit(0.0)), view(3600L))
       .drop("label")
     assert(fast.columns.toSeq == Seq("conv_id", "event_ts", "turn_idx", "turn_ts"))
     val key = (r: org.apache.spark.sql.Row) => r.toSeq.map(String.valueOf).mkString("|")
@@ -193,8 +193,8 @@ class PointInTimeJoinSpec extends SparkTestBase {
     val views = Seq(view(3600L), qualityView)
     val rowKey = (r: org.apache.spark.sql.Row) =>
       r.toSeq.map(String.valueOf).mkString("|")
-    // non-slim entity (label column forces the join-back), plus a duplicated
-    // probe row — multiplicity must be preserved through the single join-back
+    // non-slim entity (label rides through the window), plus a duplicated
+    // probe row — multiplicity must be preserved without a join-back
     val entity = entityDf.union(entityDf.limit(1))
     val fused = PointInTimeJoin.enrichMergeFused(entity, views,
       fullFeatureNames = true)
@@ -211,17 +211,62 @@ class PointInTimeJoinSpec extends SparkTestBase {
       sequential.collect().map(rowKey).sorted.toSeq)
   }
 
-  test("fused multi-view merge rejects DateType entity timestamps loudly") {
-    // the fused axis has no per-view Date promotion: a DateType entity ts
-    // would truncate feature times to midnight and leak same-day future
-    // rows — the precondition must be enforced, not just documented
-    // (Historical falls back to the sequential path for Date frames)
+  test("fused multi-view merge of a DateType entity ts equals the join path") {
+    // the fused axis promotes a Date entity ts to the views' feature-ts
+    // type (midnight); casting feature times down to a date instead would
+    // leak same-day rows that are later than the probe
     val dateEntity = entityDf.select(col("conv_id"),
-      col("event_ts").cast("date").as("event_ts"))
-    val e = intercept[IllegalArgumentException] {
-      PointInTimeJoin.enrichMergeFused(dateEntity, Seq(view(3600L), qualityView))
-    }
-    assert(e.getMessage.contains("non-Date entity timestamp"))
+      col("event_ts").cast("date").as("event_ts"), col("label"))
+    val views = Seq(view(0L), qualityView.copy(ttlSeconds = 3 * 86400L))
+    val fused = PointInTimeJoin.enrichMergeFused(dateEntity, views,
+      fullFeatureNames = true)
+    val joined = views.foldLeft(dateEntity)((acc, v) =>
+      PointInTimeJoin.enrichJoin(acc, v, fullFeatureNames = true))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("conv_id", "event_ts", "label", "turn_stats__turn_idx",
+        "quality__score").collect().map(_.toSeq.map(String.valueOf).mkString("|"))
+        .sorted.toSeq
+    assert(fused.schema == joined.schema)
+    assert(rows(fused) == rows(joined))
+    assert(fused.count() == dateEntity.count())
+    // the fixture bites: end-of-day probes (what a cast down to date would
+    // see) pick up same-day rows later than midnight, for both views
+    val endOfDay = dateEntity.withColumn("event_ts",
+      col("event_ts").cast("timestamp") + expr("INTERVAL 86399 SECONDS"))
+    val leaky = views.foldLeft(endOfDay)((acc, v) =>
+      PointInTimeJoin.enrichJoin(acc, v, fullFeatureNames = true))
+    for (f <- Seq("turn_stats__turn_idx", "quality__score"))
+      assert(fused.select("conv_id", "label", f).except(
+        leaky.select("conv_id", "label", f)).count() > 0,
+        s"fixture too weak: no same-day later row for $f")
+  }
+
+  test("duplicate entity rows keep their own extra columns") {
+    // two probe rows at the same (key, ts) whose other columns differ ride
+    // through the window as separate rows: each keeps its own values and
+    // both read the same winner — single view, and across two key groups
+    val first = turns.filter(_.conv_id == "conv_000002").maxBy(_.turn_idx)
+    val e = Seq(
+      (first.conv_id, first.ts, 1.0, "a", "u1"),
+      (first.conv_id, first.ts, 2.0, "b", "u2"),
+      (first.conv_id, first.ts, 2.0, "b", "u2")
+    ).toDF("conv_id", "event_ts", "label", "tag", "user_id")
+    val single = PointInTimeJoin.enrich(e, view(0L))
+      .select("label", "tag", "user_id", "turn_idx").as[(Double, String, String, Int)]
+      .collect().sorted.toSeq
+    assert(single == Seq((1.0, "a", "u1", first.turn_idx),
+      (2.0, "b", "u2", first.turn_idx), (2.0, "b", "u2", first.turn_idx)))
+    val users = Seq(("u1", ts("2020-01-01 00:00:00"), 10L),
+      ("u2", ts("2020-01-01 00:00:00"), 20L)).toDF("user_id", "ts", "credits")
+    val userView = FeatureView("users", users, Seq("user_id"), "ts",
+      features = Seq("credits"))
+    val grouped = Historical.getHistoricalFeatures(e, Seq(view(0L), userView))
+    assert(grouped.columns.toSeq == Seq("conv_id", "event_ts", "label", "tag",
+      "user_id", "turn_idx", "turn_ts", "credits"))
+    assert(grouped.select("label", "tag", "turn_idx", "credits")
+      .as[(Double, String, Int, Long)].collect().sorted.toSeq ==
+      Seq((1.0, "a", first.turn_idx, 10L), (2.0, "b", first.turn_idx, 20L),
+        (2.0, "b", first.turn_idx, 20L)))
   }
 
   test("fused multi-view merge: slim entity frame, dupes kept") {
@@ -257,8 +302,8 @@ class PointInTimeJoinSpec extends SparkTestBase {
     def values(df: org.apache.spark.sql.DataFrame): Seq[(String, Any)] =
       df.select(col("conv_id"), col("turn_idx")).collect()
         .map(r => (r.getAs[String](0), r.get(1))).sortBy(x => String.valueOf(x._1)).toSeq
-    val slim = values(PointInTimeJoin.enrichMerge(ents, v, "event_ts"))
-    val nonSlim = values(PointInTimeJoin.enrichMerge(
+    val slim = values(PointInTimeJoin.enrich(ents, v, "event_ts"))
+    val nonSlim = values(PointInTimeJoin.enrich(
       ents.withColumn("extra", lit(1)), v, "event_ts"))
     val salted = values(PointInTimeJoin.enrichJoin(ents, v, "event_ts",
       saltBuckets = 4))

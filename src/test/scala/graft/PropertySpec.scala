@@ -82,7 +82,7 @@ class PropertySpec extends SparkTestBase {
       val view = FeatureView("v", src, Seq("k"), "ts", Some("created_ts"), ttl,
         features = Seq("v"), tieBreakCols = Seq("tb"))
       for (cf <- Seq(false, true)) {
-        val m = PointInTimeJoin.enrichMerge(entityDf, view, filterByCreatedTs = cf)
+        val m = PointInTimeJoin.enrich(entityDf, view, filterByCreatedTs = cf)
         val j = PointInTimeJoin.enrichJoin(entityDf, view, filterByCreatedTs = cf)
         assert(m.except(j).isEmpty && j.except(m).isEmpty,
           s"physical paths diverge at ttl=$ttl createdFilter=$cf")

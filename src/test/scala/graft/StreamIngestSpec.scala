@@ -24,9 +24,10 @@ class StreamIngestSpec extends SparkTestBase {
     val q = StreamIngest.ingest(mem.toDF(), Seq("conv_id"), "ts",
       Seq("turn_idx"), s"$tmp/out", s"$tmp/ckpt", created)
     val (b0, b1) = turns.splitAt(turns.length / 2)
-    mem.addData(b0); q.processAllAvailable()
-    mem.addData(b1); q.processAllAvailable()
-    q.stop()
+    try {
+      mem.addData(b0); q.processAllAvailable()
+      mem.addData(b1); q.processAllAvailable()
+    } finally q.stop()
 
     val out = spark.read.parquet(s"$tmp/out")
     // one row per (conv_id, batch) that saw the conv
@@ -49,9 +50,10 @@ class StreamIngestSpec extends SparkTestBase {
     val mem = MemoryStream[Turn]
     val q = StreamIngest.ingest(mem.toDF(), Seq("conv_id"), "ts",
       Seq("turn_idx"), s"$tmp/typed-out", s"$tmp/typed-ckpt", created)
-    mem.addData(turns.take(4)); q.processAllAvailable()
-    mem.addData(turns.drop(4).take(4)); q.processAllAvailable()
-    q.stop()
+    try {
+      mem.addData(turns.take(4)); q.processAllAvailable()
+      mem.addData(turns.drop(4).take(4)); q.processAllAvailable()
+    } finally q.stop()
     // batch_id lives as a Hive partition directory on disk (idempotent
     // replay overwrite); inference would surface it as IntegerType — the
     // reader seam must hand consumers the LongType the pre-partitioned
@@ -71,9 +73,10 @@ class StreamIngestSpec extends SparkTestBase {
       Seq("turn_idx"), s"$tmp/out_pb", s"$tmp/ckpt_pb",
       (batchId: Long) => new Timestamp(created.getTime + batchId * 60000L))
     val (b0, b1) = turns.splitAt(turns.length / 2)
-    mem.addData(b0); q.processAllAvailable()
-    mem.addData(b1); q.processAllAvailable()
-    q.stop()
+    try {
+      mem.addData(b0); q.processAllAvailable()
+      mem.addData(b1); q.processAllAvailable()
+    } finally q.stop()
     val out = spark.read.parquet(s"$tmp/out_pb")
     val stamps = out.select("batch_id", "created_ts").distinct()
       .as[(Long, Timestamp)].collect().toMap
@@ -90,14 +93,15 @@ class StreamIngestSpec extends SparkTestBase {
       aggs = Seq(count(lit(1)).as("n_turns"), sum(length(col("text"))).as("sum_len")))
     val q = agged.writeStream.format("memory").queryName("winagg")
       .outputMode("append").start()
-    mem.addData(turns)
-    q.processAllAvailable()
-    // advance the watermark far past every event so all windows finalize
-    val flush = turns.head.copy(conv_id = "conv_flush",
-      ts = new Timestamp(turns.map(_.ts.getTime).max + 7 * 24 * 3600 * 1000L))
-    mem.addData(Seq(flush))
-    q.processAllAvailable()
-    q.stop()
+    try {
+      mem.addData(turns)
+      q.processAllAvailable()
+      // advance the watermark far past every event so all windows finalize
+      val flush = turns.head.copy(conv_id = "conv_flush",
+        ts = new Timestamp(turns.map(_.ts.getTime).max + 7 * 24 * 3600 * 1000L))
+      mem.addData(Seq(flush))
+      q.processAllAvailable()
+    } finally q.stop()
 
     val streamed = spark.table("winagg")
       .filter(col("conv_id") =!= "conv_flush")
@@ -122,16 +126,17 @@ class StreamIngestSpec extends SparkTestBase {
     val q = agged.writeStream.format("memory").queryName("wm_drop")
       .outputMode("append").start()
     // batch 1: two on-time rows in one window
-    mem.addData(Seq(("a", ts("2026-01-11 00:00:10"), 1L),
-      ("a", ts("2026-01-11 00:05:00"), 2L)))
-    q.processAllAvailable()
-    // batch 2: a LATE row for the same key ten days below the watermark
-    // (must be dropped, NOT merged into a's window) plus a flush row that
-    // advances the watermark past every real window
-    mem.addData(Seq(("a", ts("2026-01-01 00:00:10"), 100L),
-      ("zz_flush", ts("2026-01-31 00:00:00"), 0L)))
-    q.processAllAvailable()
-    q.stop()
+    try {
+      mem.addData(Seq(("a", ts("2026-01-11 00:00:10"), 1L),
+        ("a", ts("2026-01-11 00:05:00"), 2L)))
+      q.processAllAvailable()
+      // batch 2: a LATE row for the same key ten days below the watermark
+      // (must be dropped, NOT merged into a's window) plus a flush row that
+      // advances the watermark past every real window
+      mem.addData(Seq(("a", ts("2026-01-01 00:00:10"), 100L),
+        ("zz_flush", ts("2026-01-31 00:00:00"), 0L)))
+      q.processAllAvailable()
+    } finally q.stop()
     val rows = spark.table("wm_drop").filter(col("k") === "a")
       .select("n", "s").as[(Long, Long)].collect().toSeq
     assert(rows == Seq((2L, 3L)),
@@ -158,14 +163,15 @@ class StreamIngestSpec extends SparkTestBase {
     // Batch 1 carries 00:00:00 and 00:19:59 — 1199 s apart, two DISJOINT
     // state entries — and only batch 2's 00:09:59 bridges them, so the
     // first session reaches its final extent by STATE MERGE alone.
-    mem.addData(Seq(("a", ts("2026-01-11 00:00:00")),
-      ("a", ts("2026-01-11 00:19:59"))))
-    q.processAllAvailable()
-    mem.addData(Seq(("a", ts("2026-01-11 00:09:59")),
-      ("a", ts("2026-01-11 00:30:00")),
-      ("zz_flush", ts("2027-06-01 00:00:00"))))
-    q.processAllAvailable()
-    q.stop()
+    try {
+      mem.addData(Seq(("a", ts("2026-01-11 00:00:00")),
+        ("a", ts("2026-01-11 00:19:59"))))
+      q.processAllAvailable()
+      mem.addData(Seq(("a", ts("2026-01-11 00:09:59")),
+        ("a", ts("2026-01-11 00:30:00")),
+        ("zz_flush", ts("2027-06-01 00:00:00"))))
+      q.processAllAvailable()
+    } finally q.stop()
     val rows = spark.table("sess_gap").filter(col("conv_id") === "a")
       .select("session_start", "n_turns")
       .as[(Timestamp, Long)].collect().toSeq.sortBy(_._1.getTime)
@@ -182,13 +188,14 @@ class StreamIngestSpec extends SparkTestBase {
       mem.toDF().toDF("k", "ts"), Seq("k"), "ts", watermarkSec = 3600)
     val q = deduped.writeStream.format("memory").queryName("dedup_wm")
       .outputMode("append").start()
-    mem.addData(("a", ts("2026-02-01 00:00:00")), ("a", ts("2026-02-01 00:00:10")),
-      ("b", ts("2026-02-01 00:00:05")))
-    q.processAllAvailable()
-    // a second batch re-sends "a" within the watermark horizon — still dropped
-    mem.addData(("a", ts("2026-02-01 00:00:20")), ("c", ts("2026-02-01 00:00:21")))
-    q.processAllAvailable()
-    q.stop()
+    try {
+      mem.addData(("a", ts("2026-02-01 00:00:00")), ("a", ts("2026-02-01 00:00:10")),
+        ("b", ts("2026-02-01 00:00:05")))
+      q.processAllAvailable()
+      // a second batch re-sends "a" within the watermark horizon — still dropped
+      mem.addData(("a", ts("2026-02-01 00:00:20")), ("c", ts("2026-02-01 00:00:21")))
+      q.processAllAvailable()
+    } finally q.stop()
     val out = spark.table("dedup_wm").select("k").as[String].collect().toSeq.sorted
     assert(out == Seq("a", "b", "c"), s"got $out")
   }
@@ -200,12 +207,13 @@ class StreamIngestSpec extends SparkTestBase {
       gapSec = 1800L, watermarkSec = 60L)
     val q = sess.writeStream.format("memory").queryName("sess")
       .outputMode("append").start()
-    mem.addData(turns)
-    val flush = turns.head.copy(conv_id = "conv_flush",
-      ts = new Timestamp(turns.map(_.ts.getTime).max + 7 * 24 * 3600 * 1000L))
-    mem.addData(Seq(flush))
-    q.processAllAvailable()
-    q.stop()
+    try {
+      mem.addData(turns)
+      val flush = turns.head.copy(conv_id = "conv_flush",
+        ts = new Timestamp(turns.map(_.ts.getTime).max + 7 * 24 * 3600 * 1000L))
+      mem.addData(Seq(flush))
+      q.processAllAvailable()
+    } finally q.stop()
 
     // batch dual: sessionize counts per (conv, session)
     val batchSessions = graft.feat.TranscriptFeatures
