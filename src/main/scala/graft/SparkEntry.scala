@@ -612,6 +612,11 @@ object SparkEntry {
       TranscriptFeatures.toolUsage(Transcripts.fromEvents(s, dir), 4 * 3600L)),
     "feat_sessionize" -> ((s, dir) =>
       TranscriptFeatures.sessionize(Transcripts.fromEvents(s, dir), 1800L)),
+    // all four in one pass: one conv_id exchange, one sort per ordering
+    "feat_all" -> ((s, dir) =>
+      TranscriptFeatures.featureSet(transcriptLen(s, dir), TranscriptFeatures.Spec(
+        lagLead = true, rollingPerRole = Some("text_len" -> 3600L),
+        toolUsageSec = Some(4 * 3600L), sessionGapSec = Some(1800L)))),
 
     // ------------------------------------------------- training-data pipeline
     // Exact dedup by content hash over the documents corpus.
@@ -1171,6 +1176,51 @@ object SparkEntry {
        |SELECT e.conv_id, e.event_ts, e.label, j.turn_idx, j.role, j.text_len, j.is_tool, j.turn_ts
        |FROM entity e LEFT JOIN (SELECT * FROM j WHERE rn = 1) j
        |  ON j.conv_id = e.conv_id AND j.event_ts = e.event_ts""".stripMargin)
+
+  // Oracles of the four feat_* queries, shared with feat_all (which joins
+  // them on the transcript key). featSessionCtes extends the WITH list.
+  private val featLagLeadSql =
+    """SELECT conv_id, turn_idx, role,
+      |  lag(role) OVER w AS prev_role,
+      |  lead(role) OVER w AS next_role,
+      |  epoch_us(ts) - lag(epoch_us(ts)) OVER w AS gap_prev_us,
+      |  lead(epoch_us(ts)) OVER w - epoch_us(ts) AS gap_next_us
+      |FROM transcript WINDOW w AS (PARTITION BY conv_id ORDER BY turn_idx)""".stripMargin
+
+  private val featRollingRoleSql =
+    """SELECT conv_id, turn_idx, role,
+      |  count(text_len) OVER w AS role_cnt_w,
+      |  CAST(sum(text_len) OVER w AS BIGINT) AS role_sum_w,
+      |  avg(text_len) OVER w AS role_avg_w
+      |FROM (SELECT conv_id, turn_idx, role, text_len, epoch_us(ts) AS tus FROM tlen)
+      |WINDOW w AS (PARTITION BY conv_id, role ORDER BY tus
+      |             RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)""".stripMargin
+
+  private val featToolUsageSql =
+    """SELECT conv_id, turn_idx,
+      |  count(tool) OVER w AS tool_cnt_w,
+      |  count(*) OVER w AS turn_cnt_w
+      |FROM (SELECT conv_id, turn_idx, tool, epoch_us(ts) AS tus FROM transcript)
+      |WINDOW w AS (PARTITION BY conv_id ORDER BY tus
+      |             RANGE BETWEEN 14400000000 PRECEDING AND CURRENT ROW)""".stripMargin
+
+  private val featSessionCtes =
+    """, flagged AS (
+      |  SELECT conv_id, turn_idx,
+      |    CASE WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER w > 1800000000
+      |         THEN 1 ELSE 0 END AS nf
+      |  FROM transcript WINDOW w AS (PARTITION BY conv_id ORDER BY turn_idx)),
+      |sess AS (
+      |  SELECT conv_id, turn_idx,
+      |    CAST(sum(nf) OVER (PARTITION BY conv_id ORDER BY turn_idx
+      |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
+      |  FROM flagged)""".stripMargin
+
+  private val featSessionSql =
+    """SELECT conv_id, turn_idx, session_id,
+      |  CAST(row_number() OVER (PARTITION BY conv_id, session_id ORDER BY turn_idx) AS INT)
+      |    AS turn_in_session
+      |FROM sess""".stripMargin
 
   /** Marker-occurrence score: Σ (len(p) − len(replace(p, m))) / len(m) —
     * the same length/replace identity TextAnalysis.occurrences uses.
@@ -1743,43 +1793,26 @@ object SparkEntry {
         |  WHERE ts >= TIMESTAMP '2024-01-10 00:00:00'
         |    AND ts <= TIMESTAMP '2024-01-20 00:00:00') WHERE rn = 1""".stripMargin),
 
-    "feat_lag_lead" -> withTables(
-      """SELECT conv_id, turn_idx, role,
-        |  lag(role) OVER w AS prev_role,
-        |  lead(role) OVER w AS next_role,
-        |  epoch_us(ts) - lag(epoch_us(ts)) OVER w AS gap_prev_us,
-        |  lead(epoch_us(ts)) OVER w - epoch_us(ts) AS gap_next_us
-        |FROM transcript WINDOW w AS (PARTITION BY conv_id ORDER BY turn_idx)""".stripMargin),
-    "feat_rolling_role" -> withTables(
-      """SELECT conv_id, turn_idx, role,
-        |  count(text_len) OVER w AS role_cnt_w,
-        |  CAST(sum(text_len) OVER w AS BIGINT) AS role_sum_w,
-        |  avg(text_len) OVER w AS role_avg_w
-        |FROM (SELECT conv_id, turn_idx, role, text_len, epoch_us(ts) AS tus FROM tlen)
-        |WINDOW w AS (PARTITION BY conv_id, role ORDER BY tus
-        |             RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)""".stripMargin),
-    "feat_tool_usage" -> withTables(
-      """SELECT conv_id, turn_idx,
-        |  count(tool) OVER w AS tool_cnt_w,
-        |  count(*) OVER w AS turn_cnt_w
-        |FROM (SELECT conv_id, turn_idx, tool, epoch_us(ts) AS tus FROM transcript)
-        |WINDOW w AS (PARTITION BY conv_id ORDER BY tus
-        |             RANGE BETWEEN 14400000000 PRECEDING AND CURRENT ROW)""".stripMargin),
-    "feat_sessionize" -> withTables(
-      """, flagged AS (
-        |  SELECT conv_id, turn_idx,
-        |    CASE WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER w > 1800000000
-        |         THEN 1 ELSE 0 END AS nf
-        |  FROM transcript WINDOW w AS (PARTITION BY conv_id ORDER BY turn_idx)),
-        |sess AS (
-        |  SELECT conv_id, turn_idx,
-        |    CAST(sum(nf) OVER (PARTITION BY conv_id ORDER BY turn_idx
-        |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-        |  FROM flagged)
-        |SELECT conv_id, turn_idx, session_id,
-        |  CAST(row_number() OVER (PARTITION BY conv_id, session_id ORDER BY turn_idx) AS INT)
-        |    AS turn_in_session
-        |FROM sess""".stripMargin),
+    "feat_lag_lead" -> withTables(featLagLeadSql),
+    "feat_rolling_role" -> withTables(featRollingRoleSql),
+    "feat_tool_usage" -> withTables(featToolUsageSql),
+    "feat_sessionize" -> withTables(featSessionCtes + "\n" + featSessionSql),
+    "feat_all" -> withTables(
+      s"""$featSessionCtes,
+         |ll AS ($featLagLeadSql),
+         |rr AS ($featRollingRoleSql),
+         |tu AS ($featToolUsageSql),
+         |ss AS ($featSessionSql)
+         |SELECT t.conv_id, t.turn_idx, t.role, t.text, t.tool, t.ts, t.text_len,
+         |  ll.prev_role, ll.next_role, ll.gap_prev_us, ll.gap_next_us,
+         |  ss.session_id, ss.turn_in_session,
+         |  rr.role_cnt_w, rr.role_sum_w, rr.role_avg_w,
+         |  tu.tool_cnt_w, tu.turn_cnt_w
+         |FROM tlen t
+         |  JOIN ll ON ll.conv_id = t.conv_id AND ll.turn_idx = t.turn_idx
+         |  JOIN ss ON ss.conv_id = t.conv_id AND ss.turn_idx = t.turn_idx
+         |  JOIN rr ON rr.conv_id = t.conv_id AND rr.turn_idx = t.turn_idx
+         |  JOIN tu ON tu.conv_id = t.conv_id AND tu.turn_idx = t.turn_idx""".stripMargin),
 
     "dedup_exact" -> withTables(
       """, h AS (SELECT doc_id, sha256(text) AS content_hash FROM documents

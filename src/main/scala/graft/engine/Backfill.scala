@@ -230,9 +230,9 @@ object Backfill {
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
 
-  /** spark-submit entry point: backfill the transcript feature pack
-    * (sessionize + lag/lead gaps + rolling tool usage) over a day-partitioned
-    * transcript table.
+  /** spark-submit entry point: backfill the daily transcript features
+    * ([[dailyFeatureJob]]: text_len, sessions by a 30-minute gap and tool
+    * usage over a 4-hour window) over a day-partitioned transcript table.
     *
     *   spark-submit --class graft.engine.Backfill <jar> \
     *     <sourceDir> <outDir> <checkpointDir> [maxPartitions]
@@ -255,16 +255,21 @@ object Backfill {
     spark.stop()
   }
 
-  /** The default backfill job: per-turn transcript features over the slice.
-    * Keeps `ds` so the partition filter applies to the output.
+  /** The default backfill job: per-turn transcript features over the slice
+    * in one [[graft.feat.TranscriptFeatures.featureSet]] pass (one scan, one
+    * conv_id exchange). Keeps `ds` so the partition filter applies to the
+    * output. Rows with a null conv_id or turn_idx are dropped; every other
+    * input row gives exactly one output row.
     */
   def dailyFeatureJob(slice: DataFrame): DataFrame = {
     import graft.feat.TranscriptFeatures
-    val withLen = slice.withColumn("text_len", length(col("text")))
-    val sess = TranscriptFeatures.sessionize(slice, gapSec = 1800L)
-    val tools = TranscriptFeatures.toolUsage(slice, windowSec = 4 * 3600L)
-    withLen
-      .join(sess, Seq("conv_id", "turn_idx"))
-      .join(tools, Seq("conv_id", "turn_idx"))
+    val spec = TranscriptFeatures.Spec(toolUsageSec = Some(4 * 3600L), sessionGapSec = Some(1800L))
+    // the null-key filter sits above the windows, as the inner joins it
+    // replaces did: a null-turn_idx row still counts in its conversation's
+    // windows (the conv_id half is a partition key; Catalyst pushes it below)
+    val out = TranscriptFeatures.featureSet(slice.withColumn("text_len", length(col("text"))), spec)
+      .filter(col("conv_id").isNotNull && col("turn_idx").isNotNull)
+    val keys = Seq("conv_id", "turn_idx")
+    out.select((keys ++ out.columns.filterNot(keys.contains)).map(c => col(s"`$c`")): _*)
   }
 }

@@ -306,6 +306,56 @@ class BackfillSpec extends SparkTestBase {
       snapshotId = snap1).count() == 1L)
   }
 
+  private def dayRows = Transcripts.synthetic(spark, nConvs = 6, turnsPerConv = 10, seed = 5L)
+    .withColumn("ds", lit("2026-01-01"))
+
+  test("daily job drops rows with a null conv_id or turn_idx") {
+    val day = dayRows
+    val nulls = day.filter(col("turn_idx") === 0).withColumn("conv_id", lit(null).cast("string"))
+      .union(day.filter(col("turn_idx") === 1).withColumn("turn_idx", lit(null).cast("int")))
+    val out = Backfill.dailyFeatureJob(day.union(nulls))
+    assert(out.count() == day.count())
+    assert(out.filter(col("conv_id").isNull || col("turn_idx").isNull).isEmpty)
+  }
+
+  test("daily job gives one output row per input row, duplicates included") {
+    val day = dayRows
+    // k copies of a (conv_id, turn_idx) key: the old join-back of three
+    // per-key frames emitted k^3 rows for it; one pass keeps k
+    val twice = day.filter(col("turn_idx") === 3)
+    val thrice = day.filter(col("turn_idx") === 5)
+    val out = Backfill.dailyFeatureJob(day.union(twice).union(thrice).union(thrice))
+    assert(out.count() == day.count() + twice.count() + 2 * thrice.count())
+    val perKey = out.groupBy("conv_id", "turn_idx").count()
+    assert(perKey.filter(col("turn_idx") === 3 && col("count") =!= 2).isEmpty)
+    assert(perKey.filter(col("turn_idx") === 5 && col("count") =!= 3).isEmpty)
+    assert(out.columns.toSeq == Seq("conv_id", "turn_idx", "role", "text", "tool", "ts", "ds",
+      "text_len", "session_id", "turn_in_session", "tool_cnt_w", "turn_cnt_w"))
+  }
+
+  test("manifest input_rows counts the whole slice, lookback included, observed once") {
+    val ckpt = s"$tmp/ckpt_inrows"
+    val results = Backfill.run(spark, source, "ds", s"$tmp/out_inrows", ckpt, job,
+      lookbackPartitions = 1)
+    val days = source.select(col("ds").cast("string")).distinct().orderBy("ds")
+      .collect().map(_.getString(0)).toIndexedSeq
+    assert(results.length == days.length)
+    for (r <- results) {
+      val i = days.indexOf(r.partition)
+      val visible = days.slice(math.max(0, i - 1), i + 1)
+      val expected = source.filter(col("ds").cast("string").isin(visible: _*)).count()
+      assert(r.inputRows == expected, s"${r.partition}: ${r.inputRows} != $expected")
+      val json = new String(Files.readAllBytes(java.nio.file.Paths.get(ckpt, s"${r.partition}.json")))
+      assert(json.contains(s"\"input_rows\": $expected,"), json)
+    }
+    // the slice's Observation sits once in the job's plan (the join-back
+    // version carried it into each of its three scans)
+    val obs = org.apache.spark.sql.Observation("inrows_plan")
+    val plan = job(source.observe(obs, count(lit(1)).as("n")))
+      .queryExecution.executedPlan.toString
+    assert(plan.linesIterator.count(_.contains("CollectMetrics")) == 1, plan)
+  }
+
   test("torn manifest is not treated as complete") {
     val ckpt = s"$tmp/ckpt3"
     Files.createDirectories(java.nio.file.Paths.get(ckpt))

@@ -67,6 +67,66 @@ class FeaturesSpec extends SparkTestBase {
     assert(out.toSeq == Seq((0L, 1L), (1L, 2L), (2L, 3L), (2L, 4L)))
   }
 
+  test("featureSet with all four parts equals the join of the reference windows") {
+    // synthetic gaps fall on both sides of 1800 s; the extra conversations
+    // add an exact-1800 s gap (same session: the rule is strictly greater)
+    // and a single-turn conversation; non-tool turns carry a null tool
+    val extra = Seq(
+      Turn("edge_exact", 0, "user", "aa", null, at(0)),
+      Turn("edge_exact", 1, "tool", "bbb", "bash", at(1800)),
+      Turn("edge_exact", 2, "assistant", "c", null, at(3601)),
+      Turn("edge_single", 0, "user", "dddd", null, at(50))).toDF()
+    val t = Transcripts.synthetic(spark, nConvs = 12, turnsPerConv = 30, seed = 7L)
+      .union(extra).withColumn("text_len", length(col("text")))
+    val got = TranscriptFeatures.featureSet(t, TranscriptFeatures.Spec(
+      lagLead = true, rollingPerRole = Some("text_len" -> 3600L),
+      toolUsageSec = Some(4 * 3600L), sessionGapSec = Some(1800L)))
+
+    // reference frames: the per-function window formulas, one frame each
+    import org.apache.spark.sql.expressions.Window
+    val us = unix_micros(col("ts").cast("timestamp"))
+    val byTurn = Window.partitionBy(col("conv_id")).orderBy(col("turn_idx"))
+    def trailing(w: org.apache.spark.sql.expressions.WindowSpec, sec: Long) =
+      w.orderBy(us).rangeBetween(-sec * 1000000L, 0L)
+    val ll = t.select(col("conv_id"), col("turn_idx"),
+      lag(col("role"), 1).over(byTurn).as("prev_role"),
+      lead(col("role"), 1).over(byTurn).as("next_role"),
+      (us - lag(us, 1).over(byTurn)).as("gap_prev_us"),
+      (lead(us, 1).over(byTurn) - us).as("gap_next_us"))
+    val flagged = t.select(col("conv_id"), col("turn_idx"),
+      when(us - lag(us, 1).over(byTurn) > 1800L * 1000000L, 1L).otherwise(0L).as("nf"))
+      .withColumn("session_id",
+        sum(col("nf")).over(byTurn.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+    val ss = flagged.withColumn("turn_in_session", row_number().over(
+      Window.partitionBy(col("conv_id"), col("session_id")).orderBy(col("turn_idx"))))
+      .drop("nf")
+    val roleW = trailing(Window.partitionBy(col("conv_id"), col("role")), 3600L)
+    val rr = t.select(col("conv_id"), col("turn_idx"),
+      count(col("text_len")).over(roleW).as("role_cnt_w"),
+      sum(col("text_len")).over(roleW).as("role_sum_w"),
+      avg(col("text_len")).over(roleW).as("role_avg_w"))
+    val toolW = trailing(Window.partitionBy(col("conv_id")), 4 * 3600L)
+    val tu = t.select(col("conv_id"), col("turn_idx"),
+      count(col("tool")).over(toolW).as("tool_cnt_w"),
+      count(lit(1)).over(toolW).as("turn_cnt_w"))
+    val keys = Seq("conv_id", "turn_idx")
+    val expected = t.join(ll, keys).join(ss, keys).join(rr, keys).join(tu, keys)
+
+    val gaps = ll.select("gap_prev_us").as[Option[Long]].collect().flatten
+    assert(gaps.exists(_ > 1800000000L) && gaps.exists(_ < 1800000000L) &&
+      gaps.contains(1800000000L), "fixture must straddle the 1800 s gap")
+    assert(got.schema == expected.schema,
+      s"${got.schema.treeString}\nvs\n${expected.schema.treeString}")
+    val (g, e) = (got.collect(), expected.collect())
+    assert(g.length == t.count() && g.length == e.length)
+    assert(g.toSet == e.toSet)
+    // the edge conversations: the exact-1800 s gap stays in session 0, the
+    // 1801 s gap opens session 1; a single turn is session 0, position 1
+    val edges = got.filter(col("conv_id").startsWith("edge_")).orderBy("conv_id", "turn_idx")
+      .select("session_id", "turn_in_session").as[(Long, Int)].collect().toSeq
+    assert(edges == Seq((0L, 1), (0L, 2), (1L, 1), (0L, 1)))
+  }
+
   test("tiled windowed agg equals brute force on dense+sparse data") {
     val turns = Transcripts.syntheticRows(3, 40, seed = 13L)
     val df = spark.createDataset(turns).toDF()

@@ -198,6 +198,46 @@ class PlanContractSpec extends SparkTestBase {
       "turns__turn_idx", "users__credits", "quality__score"))
   }
 
+  private def planLines(df: DataFrame, node: String): Int =
+    df.queryExecution.executedPlan.toString.linesIterator.count(_.contains(node))
+
+  private lazy val transcript: DataFrame = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_plantranscript").toString
+    Transcripts.synthetic(spark, nConvs = 20, turnsPerConv = 12, seed = 5L)
+      .withColumn("ds", date_format(col("ts"), "yyyy-MM-dd"))
+      .write.partitionBy("ds").mode("overwrite").parquet(dir)
+    spark.read.option("basePath", dir).parquet(dir)
+  }
+
+  test("transcript feature set is ONE shuffle and one sort per ordering") {
+    val out = feat.TranscriptFeatures.featureSet(
+      transcript.withColumn("text_len", length(col("text"))),
+      feat.TranscriptFeatures.Spec(lagLead = true, rollingPerRole = Some("text_len" -> 3600L),
+        toolUsageSec = Some(4 * 3600L), sessionGapSec = Some(1800L)))
+    // (conv_id, turn_idx) for lag/lead + sessions, (conv_id, ts) for tool
+    // usage, (conv_id, role, ts) for per-role rolling: the conv_id hash
+    // already clusters the last, so it adds a sort but no exchange
+    assert(shuffles(out) == 1 && broadcasts(out) == 0 && planLines(out, "Sort [") == 3,
+      "feature set grew an exchange, a join-back or a sort:\n" + out.queryExecution.executedPlan)
+  }
+
+  test("daily backfill job is one scan, ONE shuffle, two sorts, no join-back") {
+    val out = engine.Backfill.dailyFeatureJob(transcript)
+    assert(shuffles(out) == 1 && broadcasts(out) == 0 && planLines(out, "Sort [") == 2 &&
+      planLines(out, "FileScan") == 1,
+      "daily feature job re-scans or joins back:\n" + out.queryExecution.executedPlan)
+  }
+
+  test("each single transcript feature is ONE shuffle") {
+    val t = transcript.withColumn("text_len", length(col("text")))
+    for ((name, df) <- Seq(
+        "lagLead" -> feat.TranscriptFeatures.lagLead(t),
+        "rollingPerRole" -> feat.TranscriptFeatures.rollingPerRole(t, "text_len", 3600L),
+        "toolUsage" -> feat.TranscriptFeatures.toolUsage(t, 4 * 3600L),
+        "sessionize" -> feat.TranscriptFeatures.sessionize(t, 1800L)))
+      assert(shuffles(df) == 1, s"$name grew a shuffle:\n" + df.queryExecution.executedPlan)
+  }
+
   test("TTL-derived scan bounds push into the parquet source scan") {
     val dir = java.nio.file.Files.createTempDirectory("graft_plancontract").toString
     (1 to 500).map { i =>
