@@ -17,18 +17,6 @@ import org.apache.spark.sql.functions._
   */
 object Bench {
 
-  private def session(cores: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-bench-$cores")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
   private def timeSec(body: => Unit): Double = {
     val t0 = System.nanoTime()
     body
@@ -120,7 +108,7 @@ object Bench {
     // with a per-query rep budget (a 40 s query runs once — tripling the
     // O(n²) oracle baselines would drown the sweep); a failing query is
     // recorded as an error, never as a fast time. ----
-    var spark = session(cpus)
+    val spark = LocalSession(s"graft-bench-$cpus", cpus)
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     val repBudgetSec = 20.0
     val results = if (!blocks("sweep")) Seq.empty else {
@@ -180,29 +168,20 @@ object Bench {
     // wall-clock gaps are environmental, not algorithmic.
     def sessionMin(cores: Int, reps: Int,
         job: (SparkSession, String) => DataFrame, path: String): (Double, Double) = {
-      val s = SparkSession.builder()
-        .master(s"local[$cores]")
-        .appName(s"graft-bench-scale-$cores")
-        .config("spark.sql.shuffle.partitions", 8 * cpus)
-        // Coalesce post-shuffle partitions by DATA SIZE, not driver
-        // parallelism. AQE's default parallelismFirst=true shrinks each
-        // stage to ≈ core count — at 8 cores the join path's dominant SMJ
-        // stage became 10 tasks = 1.25 waves, so its tail wave ran 2 tasks
-        // on 8 cores and ~40% of the wall was idle (measured: that stage
-        // alone 21 s @ 10 tasks → 11.5 s @ 86 tasks; block efficiency
-        // 0.73 → 0.83). Size-based coalescing is also the honest cluster
-        // stand-in: at 100 TB partitions are sized in bytes and the task
-        // count dwarfs the core count, so wave packing never depends on
-        // cluster size — exactly the property the N→4N comparison needs.
-        // Identical config at both levels, overridable for experiments.
-        .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-          sys.env.getOrElse("SPARK_GRAFT_SCALE_PARALLELISM_FIRST", "false"))
-        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-          sys.env.getOrElse("SPARK_GRAFT_SCALE_ADVISORY_BYTES", "8388608"))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
+      val s = LocalSession(s"graft-bench-scale-$cores", cores, 8 * cpus)
+      // Coalesce post-shuffle partitions by DATA SIZE, not driver
+      // parallelism. AQE's default parallelismFirst=true shrinks each
+      // stage to ≈ core count — at 8 cores the join path's dominant SMJ
+      // stage became 10 tasks = 1.25 waves, so its tail wave ran 2 tasks
+      // on 8 cores and ~40% of the wall was idle (measured: that stage
+      // alone 21 s @ 10 tasks → 11.5 s @ 86 tasks; block efficiency
+      // 0.73 → 0.83). Size-based coalescing is also the honest cluster
+      // stand-in: at 100 TB partitions are sized in bytes and the task
+      // count dwarfs the core count, so wave packing never depends on
+      // cluster size — exactly the property the N→4N comparison needs.
+      // Identical config at both levels.
+      s.conf.set("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
+      s.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", 8L * 1024 * 1024)
       val taskMs = new java.util.concurrent.atomic.AtomicLong
       s.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
         override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
@@ -305,59 +284,6 @@ object Bench {
       floorHunt(retrievalSaltedJoin, joinScalePath, joinTurns,
         sys.env.getOrElse("SPARK_GRAFT_SCALE_JOIN_BUDGET_MIN", "12").toLong, reps = 2)
 
-    // ---- best-recorded carry-forward. Hypervisor steal drifts single
-    // runs across ≈[0.70, 0.85+] efficiency on this box (BASELINE.md
-    // "Scaling-measurement robustness"), so one re-run landing in a steal
-    // window must not ERASE previously recorded green evidence: each
-    // block's best-efficiency record persists in a side file and rides
-    // along in the printed record as scaling_best / scaling_join_best,
-    // stamped with its recording time. The fresh measurement is always
-    // reported verbatim next to it — the carry never replaces it. ----
-    def carryBest(fresh: String, bestFile: String): String = {
-      val effRe = """"efficiency":([0-9.]+)""".r
-      def effOf(s: String): Double =
-        effRe.findFirstMatchIn(s).map(_.group(1).toDouble).getOrElse(-1.0)
-      // efficiencies are only comparable on the same workload: a targeted
-      // hunt at a non-default input size or core pair (the knobs exist for
-      // exactly that) must not overwrite the canonical record with a number
-      // measured on an incomparable configuration
-      def configOf(s: String): String =
-        Seq(""""cores_n":\d+""", """"cores_4n":\d+""", """"turns":\d+""")
-          .flatMap(re => re.r.findFirstIn(s)).mkString(",")
-      def read(path: String): String = {
-        val p = java.nio.file.Paths.get(path)
-        if (java.nio.file.Files.exists(p)) java.nio.file.Files.readString(p).trim
-        else ""
-      }
-      val base = read(bestFile)
-      // a fresh record at ANOTHER configuration (a different machine's
-      // auto-derived core pair, or a targeted hunt at a non-default input
-      // size) gets its OWN side file keyed by config — neither silently
-      // dropped (first-writer-wins would freeze the canonical file's
-      // machine forever) nor allowed to overwrite the canonical record
-      // with an incomparable number
-      val target =
-        if (fresh == "null" || base.isEmpty || configOf(base) == configOf(fresh))
-          bestFile
-        else {
-          val md = java.security.MessageDigest.getInstance("MD5")
-            .digest(configOf(fresh).getBytes("UTF-8"))
-          bestFile.stripSuffix(".json") + "-" +
-            md.take(4).map("%02x".format(_)).mkString + ".json"
-        }
-      val prior = if (target == bestFile) base else read(target)
-      if (fresh != "null" && effOf(fresh) > effOf(prior)) {
-        val stamped = fresh.dropRight(1) +
-          s""","recorded_at":"${java.time.Instant.now()}"}"""
-        java.nio.file.Files.writeString(java.nio.file.Paths.get(target), stamped + "\n")
-        stamped
-      } else if (prior.nonEmpty) prior
-      else if (base.nonEmpty) base
-      else "null"
-    }
-    val scalingBest = carryBest(scaling, "bench_best_scaling.json")
-    val scalingJoinBest = carryBest(scalingJoin, "bench_best_scaling_join.json")
-
     val qs = results.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
       .mkString("{", ",", "}")
     val errs = errors.map { case (k, v) =>
@@ -367,8 +293,7 @@ object Bench {
     val record =
       f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,""" +
         s""""errors":$errs,"sf":"$sfDir","flagship":"pit_latest_turn",""" +
-        s""""scaling":$scaling,"scaling_join":$scalingJoin,""" +
-        s""""scaling_best":$scalingBest,"scaling_join_best":$scalingJoinBest}"""
+        s""""scaling":$scaling,"scaling_join":$scalingJoin}"""
     println(record)
     // the record also goes to a FILE: the driver captures the process log
     // TAIL, which has truncated per-query timings out of past rounds'

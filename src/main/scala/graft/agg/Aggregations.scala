@@ -44,23 +44,19 @@ object Aggregations {
     df.groupBy(keys.map(col): _*).agg(aggColumn(specs.head), specs.tail.map(aggColumn): _*)
   }
 
-  /** Tumbling-window aggregation (nodes.py:375-392). Output carries
-    * `win_start`/`win_end` instead of the opaque window struct so results
-    * are plain-SQL comparable.
+  /** Tumbling-window aggregation (nodes.py:375-392): a [[sliding]] window
+    * whose slide is its width, as Spark's `window(ts, d)` is
+    * `window(ts, d, d)`.
     */
   def tumbling(df: DataFrame, keys: Seq[String], tsCol: String,
-               windowSec: Long, specs: Seq[Aggregation]): DataFrame = {
-    requireSpecs(specs)
-    df.groupBy((keys.map(col) :+ window(col(tsCol), s"$windowSec seconds")): _*)
-      .agg(aggColumn(specs.head), specs.tail.map(aggColumn): _*)
-      .withColumn("win_start", col("window.start"))
-      .withColumn("win_end", col("window.end"))
-      .drop("window")
-  }
+               windowSec: Long, specs: Seq[Aggregation]): DataFrame =
+    sliding(df, keys, tsCol, windowSec, windowSec, specs)
 
   /** Sliding-window aggregation — the reference declares `slide_interval`
     * (aggregation/__init__.py:44-47) but its Spark node ignores it; we
-    * implement it natively with window(ts, win, slide).
+    * implement it natively with window(ts, win, slide). Output carries
+    * `win_start`/`win_end` instead of the opaque window struct so results
+    * are plain-SQL comparable.
     */
   def sliding(df: DataFrame, keys: Seq[String], tsCol: String,
               windowSec: Long, slideSec: Long, specs: Seq[Aggregation]): DataFrame = {

@@ -51,7 +51,7 @@ import org.apache.spark.sql.types.{DataType, DateType}
   */
 object PointInTimeJoin {
 
-  val DefaultBroadcastRows = 4000000L
+  private val DefaultBroadcastRows = 4000000L
 
   /** Enrich `entityDf` with the features of `view` as of each row's
     * `entityTsCol`. Preserves every entity row and column; feature columns
@@ -68,14 +68,13 @@ object PointInTimeJoin {
       entityTsCol: String = "event_ts",
       fullFeatureNames: Boolean = false,
       filterByCreatedTs: Boolean = false,
-      broadcastThresholdRows: Long = DefaultBroadcastRows,
       saltBuckets: Int = 0,
       hotKeyRowThreshold: Long = 5000000L,
       precomputedBounds: Option[Row] = None
   ): DataFrame =
     if (saltBuckets > 1 || view.joinKeys.isEmpty)
       enrichJoin(entityDf, view, entityTsCol, fullFeatureNames,
-        filterByCreatedTs, broadcastThresholdRows, saltBuckets,
+        filterByCreatedTs, saltBuckets,
         hotKeyRowThreshold, precomputedBounds)
     else
       enrichMergeFused(entityDf, Seq(view), entityTsCol, fullFeatureNames,
@@ -317,7 +316,6 @@ object PointInTimeJoin {
       entityTsCol: String = "event_ts",
       fullFeatureNames: Boolean = false,
       filterByCreatedTs: Boolean = false,
-      broadcastThresholdRows: Long = DefaultBroadcastRows,
       saltBuckets: Int = 0,
       hotKeyRowThreshold: Long = 5000000L,
       precomputedBounds: Option[Row] = None
@@ -365,7 +363,7 @@ object PointInTimeJoin {
 
     val probe =
       if (saltKeys.isEmpty && bucketKeys.isEmpty &&
-        shouldBroadcast(entityDf, broadcastThresholdRows))
+        shouldBroadcast(entityDf))
         broadcast(probeB)
       else probeB
 
@@ -413,13 +411,13 @@ object PointInTimeJoin {
   /** A column name as an identifier: dots and backticks stay literal. */
   private[graft] def quote(c: String): String = "`" + c.replace("`", "``") + "`"
 
-  private def shouldBroadcast(df: DataFrame, thresholdRows: Long): Boolean = {
-    // Cheap static heuristic: trust Catalyst/AQE unless the caller forces it.
-    // We only auto-broadcast when the plan's row-count estimate is known and
-    // small; otherwise the join still benefits from AQE's runtime broadcast.
+  private def shouldBroadcast(df: DataFrame): Boolean = {
+    // Cheap static heuristic: auto-broadcast only when the plan's row-count
+    // estimate is known and small; otherwise the join still benefits from
+    // AQE's runtime broadcast.
     try {
       val stats = df.queryExecution.optimizedPlan.stats
-      stats.rowCount.exists(_ <= BigInt(thresholdRows)) ||
+      stats.rowCount.exists(_ <= BigInt(DefaultBroadcastRows)) ||
       stats.sizeInBytes <= 64L * 1024 * 1024
     } catch { case _: Throwable => false }
   }

@@ -6,13 +6,7 @@ import org.scalatest.BeforeAndAfterAll
 
 /** Shared local session for all specs (one JVM, reused across suites). */
 object SparkTestBase {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = LocalSession("graft-test", 4)
 }
 
 abstract class SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
