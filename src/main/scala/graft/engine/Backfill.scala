@@ -1,9 +1,14 @@
 package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.util.concurrent.Executors
+import java.util.concurrent.atomic.{AtomicInteger, AtomicReference}
 import scala.jdk.CollectionConverters._
 
 /** Resumable, per-partition checkpointed backfill (north rule).
@@ -28,6 +33,15 @@ import scala.jdk.CollectionConverters._
   * not queued on — so each partition's job and manifest write happen exactly
   * once across drivers and the drivers work disjoint partitions in parallel.
   *
+  * Control plane: partition values come from the file index, with no Spark
+  * job, when `source` is an unfiltered partitioned file scan, else from one
+  * `distinct()` job. Within one driver, up to K claimed partitions run at
+  * once on a per-call pool, K = min(pending, maxPartitions, the context's
+  * default parallelism, 8) — the driver-side work (claims, planning,
+  * commits, manifests) of one partition overlaps the Spark jobs of the
+  * others, and the same claims keep threads and drivers on disjoint
+  * partitions. `maxPartitions` counts partitions actually run.
+  *
   * Scale design: the *loop* is over source partitions (days of `ts` — the
   * Iceberg `days(ts)` layout; plain parquet `ds=` directories stand in here
   * because the sandbox has no Iceberg runtime). Each iteration is a fully
@@ -49,7 +63,24 @@ object Backfill {
   )
 
   /** One backfill pass. Returns the per-partition results of THIS run
-    * (skipped partitions excluded).
+    * (skipped partitions excluded), in partition order.
+    *
+    * Partitions are listed from the file index, with no Spark job, when
+    * `source` is an unfiltered partitioned file scan (its analyzed plan is
+    * exactly a file relation whose partition schema holds `partitionCol`);
+    * every other source (filtered or projected frames, DSv2, in-memory)
+    * is listed by a `distinct()` job over the column. The two listings
+    * differ in one case: a partition directory whose files hold zero rows
+    * is listed by the file index, so it gets a job, a manifest with
+    * `output_rows` 0, and counts as a lookback step. A null partition value
+    * fails the run before any partition starts.
+    *
+    * Up to K claimed partitions run at once, K = min(pending partitions,
+    * `maxPartitions`, the context's default parallelism,
+    * [[MaxConcurrentPartitions]]), on a pool created for this call; each
+    * keeps its own claim, slice, observations, output directory and
+    * manifest. The first failure stops further partitions from starting;
+    * `run` rethrows it once the running ones finish.
     *
     * @param source       partitioned source (must contain `partitionCol`)
     * @param partitionCol partition column, e.g. `ds` = date of `ts`
@@ -58,8 +89,9 @@ object Backfill {
     *                     `partitionCol` in its output
     * @param lookbackPartitions extra trailing partitions visible to `job`
     *                     (TTL windows / session lookback)
-    * @param maxPartitions stop after N partitions (test hook simulating a
-    *                     killed run)
+    * @param maxPartitions stop after running N partitions (test hook
+    *                     simulating a killed run); partitions skipped because
+    *                     they are complete or claimed elsewhere do not count
     */
   def run(
       spark: SparkSession,
@@ -73,61 +105,132 @@ object Backfill {
       sourceSnapshot: Option[String] = None
   ): Seq[PartitionResult] = {
     Files.createDirectories(Paths.get(checkpointDir))
-    val partitions = source
-      .select(col(partitionCol).cast("string"))
-      .distinct()
-      .collect()
-      .map(_.getString(0))
-      .sorted
-      .toIndexedSeq
+    val partitions = listPartitions(source, partitionCol)
+    val position = partitions.zipWithIndex.toMap
     val pending = partitions.filterNot(p => isComplete(checkpointDir, p))
 
-    // The budget counts partitions this driver actually RAN: the lazy
-    // iterator + trailing take means a partition skipped because another
-    // driver claimed (or already finished) it does not consume the
+    def runPartition(p: String): PartitionResult = {
+      val idx = position(p)
+      val visible = partitions.slice(math.max(0, idx - lookbackPartitions), idx + 1)
+      val t0 = System.currentTimeMillis()
+      val slice = source.filter(col(partitionCol).cast("string").isin(visible: _*))
+      // Observation metrics: input AND output rows counted inside the write
+      // job itself (stays in whole-stage codegen — no second action over the
+      // input, no accumulator map). The input observe sits on the slice so
+      // one pass yields both counts; a truthful input count has to see every
+      // slice row anyway, so the metrics barrier costs nothing the old
+      // separate `slice.count()` scan didn't.
+      val inObs = org.apache.spark.sql.Observation(s"backfill_in_$p")
+      val outObs = org.apache.spark.sql.Observation(s"backfill_out_$p")
+      val observed = slice.observe(inObs, count(lit(1)).as("in_rows"))
+      val outRaw = job(observed).filter(col(partitionCol).cast("string") === p)
+      outRaw.observe(outObs, count(lit(1)).as("out_rows"))
+        .write.mode("overwrite").parquet(s"$outDir/$partitionCol=${escapeDirValue(p)}")
+      val outputRows = outObs.get("out_rows").asInstanceOf[Long]
+      val inputRows = inObs.get("in_rows").asInstanceOf[Long]
+      val dur = System.currentTimeMillis() - t0
+      val lineage = slice.inputFiles.toSeq.sorted
+      writeManifest(checkpointDir, p, inputRows, outputRows, lineage, t0, dur,
+        sourceSnapshot)
+      PartitionResult(p, "complete", inputRows, outputRows, dur)
+    }
+
+    // Workers take pending partitions in order from a shared cursor. The
+    // budget counts partitions this driver actually RAN: it is reserved
+    // inside the claim, after the re-check, so a partition skipped because
+    // another driver claimed (or already finished) it does not consume the
     // caller's maxPartitions allowance — a pre-claim take would let two
     // contending drivers split one window and both stop early with work
     // still pending.
-    pending.iterator.flatMap { p =>
-      // Cross-driver claim: two drivers resuming the same backfill both
-      // compute `pending` from the same manifests — without a lock they'd
-      // run (and CONCURRENTLY overwrite) the same partition output, which
-      // mode("overwrite") does not make safe (one delete interleaving the
-      // other's write leaves mixed files). The per-partition OS file lock
-      // makes the claim exclusive; tryLock (not a blocking lock) means a
-      // partition someone else is ALREADY running is simply skipped — the
-      // two drivers share the partition list instead of queueing — and the
-      // isComplete RE-CHECK inside the lock skips work that finished
-      // between the pending listing and the claim.
-      Locks.withTryFileLock(manifestPath(checkpointDir, p).toString) {
-        if (isComplete(checkpointDir, p)) None
-        else Some {
-          val idx = partitions.indexOf(p)
-          val visible = partitions.slice(math.max(0, idx - lookbackPartitions), idx + 1)
-          val t0 = System.currentTimeMillis()
-          val slice = source.filter(col(partitionCol).cast("string").isin(visible: _*))
-          // Observation metrics: input AND output rows counted inside the write
-          // job itself (stays in whole-stage codegen — no second action over the
-          // input, no accumulator map). The input observe sits on the slice so
-          // one pass yields both counts; a truthful input count has to see every
-          // slice row anyway, so the metrics barrier costs nothing the old
-          // separate `slice.count()` scan didn't.
-          val inObs = org.apache.spark.sql.Observation(s"backfill_in_$p")
-          val outObs = org.apache.spark.sql.Observation(s"backfill_out_$p")
-          val observed = slice.observe(inObs, count(lit(1)).as("in_rows"))
-          val outRaw = job(observed).filter(col(partitionCol).cast("string") === p)
-          outRaw.observe(outObs, count(lit(1)).as("out_rows"))
-            .write.mode("overwrite").parquet(s"$outDir/$partitionCol=${escapeDirValue(p)}")
-          val outputRows = outObs.get("out_rows").asInstanceOf[Long]
-          val inputRows = inObs.get("in_rows").asInstanceOf[Long]
-          val dur = System.currentTimeMillis() - t0
-          val lineage = slice.inputFiles.toSeq.sorted
-          writeManifest(checkpointDir, p, inputRows, outputRows, lineage, t0, dur,
-            sourceSnapshot)
-          PartitionResult(p, "complete", inputRows, outputRows, dur)
+    val next = new AtomicInteger(0)
+    val budget = new AtomicInteger(maxPartitions)
+    val failure = new AtomicReference[Throwable]()
+    val results = new Array[PartitionResult](pending.size)
+    def work(): Unit = {
+      var i = next.getAndIncrement()
+      while (i < pending.size && failure.get == null && budget.get > 0) {
+        val p = pending(i)
+        // Cross-driver claim: two drivers resuming the same backfill both
+        // compute `pending` from the same manifests — without a lock they'd
+        // run (and CONCURRENTLY overwrite) the same partition output, which
+        // mode("overwrite") does not make safe (one delete interleaving the
+        // other's write leaves mixed files). The per-partition OS file lock
+        // makes the claim exclusive; tryLock (not a blocking lock) means a
+        // partition someone else is ALREADY running is simply skipped — the
+        // two drivers share the partition list instead of queueing — and the
+        // isComplete RE-CHECK inside the lock skips work that finished
+        // between the pending listing and the claim. Threads of one call
+        // never contend: each takes a distinct partition.
+        try Locks.withTryFileLock(manifestPath(checkpointDir, p).toString) {
+          if (!isComplete(checkpointDir, p) && failure.get == null &&
+              budget.getAndDecrement() > 0)
+            results(i) = runPartition(p)
         }
-      }.flatten // None = claimed by another driver OR completed meanwhile
-    }.take(maxPartitions).toSeq
+        catch { case e: Throwable => failure.compareAndSet(null, e) }
+        i = next.getAndIncrement()
+      }
+    }
+
+    val k = Seq(pending.size, maxPartitions, spark.sparkContext.defaultParallelism,
+      MaxConcurrentPartitions).min
+    if (k == 1) work()
+    else if (k > 1) {
+      // Created here, outside any SQL execution: pool threads start on the
+      // first submits below and inherit this thread's Spark local
+      // properties (job group, scheduler pool), so their jobs are
+      // attributed to the caller.
+      val pool = Executors.newFixedThreadPool(k, { (r: Runnable) =>
+        val t = new Thread(r, "graft-backfill")
+        t.setDaemon(true)
+        t
+      })
+      try (1 to k).map(_ => pool.submit((() => work()): Runnable)).foreach(_.get())
+      finally pool.shutdownNow()
+    }
+    Option(failure.get).foreach(e => throw e)
+    results.toSeq.filter(_ != null)
+  }
+
+  /** Cap on the partitions one [[run]] call runs at once: a backfill over
+    * thousands of pending days must not start thousands of driver threads,
+    * and each running partition already fans its job out over the cluster.
+    */
+  private val MaxConcurrentPartitions = 8
+
+  /** Sorted distinct partition values as strings (`cast("string")`
+    * semantics, session time zone), from the file index when `source` is an
+    * unfiltered partitioned file scan, else from a `distinct()` job.
+    */
+  private def listPartitions(source: DataFrame, partitionCol: String): IndexedSeq[String] = {
+    val values = fileIndexPartitions(source, partitionCol).getOrElse(
+      source.select(col(partitionCol).cast("string")).distinct().collect().map(_.getString(0)).toSeq)
+    // `isin` never selects a null, so those rows could never be written
+    require(!values.contains(null), s"partition column '$partitionCol' holds nulls: " +
+      "rows with a null partition value cannot be backfilled")
+    values.distinct.sorted.toIndexedSeq
+  }
+
+  private def fileIndexPartitions(source: DataFrame, partitionCol: String): Option[Seq[String]] = {
+    val conf = source.sparkSession.sessionState.conf
+    source.queryExecution.analyzed match {
+      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) => fs.location match {
+        case index: PartitioningAwareFileIndex =>
+          val spec = index.partitionSpec()
+          val i = spec.partitionColumns.fields.indexWhere(f => conf.resolver(f.name, partitionCol))
+          if (i < 0) None
+          else {
+            val dt = spec.partitionColumns(i).dataType
+            Some(spec.partitions.map { pp =>
+              // a Hive default partition (`__HIVE_DEFAULT_PARTITION__`) reads as null
+              val v = Cast(Literal(pp.values.get(i, dt), dt), StringType,
+                Some(conf.sessionLocalTimeZone)).eval()
+              if (v == null) null else v.toString
+            })
+          }
+        case _ => None
+      }
+      case _ => None
+    }
   }
 
   /** Read the backfilled output back (partition-discovering parquet read). */

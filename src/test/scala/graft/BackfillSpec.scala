@@ -1,8 +1,13 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DateType, StringType}
 import graft.engine.Backfill
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
 
 /** Resumable-backfill properties (north rule): kill mid-run → resume skips
   * completed partitions; re-run is a no-op; the resumed output equals a
@@ -354,6 +359,190 @@ class BackfillSpec extends SparkTestBase {
     val plan = job(source.observe(obs, count(lit(1)).as("n")))
       .queryExecution.executedPlan.toString
     assert(plan.linesIterator.count(_.contains("CollectMetrics")) == 1, plan)
+  }
+
+  private def days(df: DataFrame, c: String = "ds"): IndexedSeq[String] =
+    df.select(col(c).cast("string")).distinct().orderBy(c).collect().map(_.getString(0)).toIndexedSeq
+
+  private def sameRows(a: DataFrame, b: DataFrame): Boolean =
+    a.count() == b.count() && a.except(b).isEmpty && b.except(a).isEmpty
+
+  private val timingFields = Seq("started_at_ms", "duration_ms", "rows_per_sec")
+
+  /** Manifest file name -> its text without the timing fields. */
+  private def manifests(ckpt: String): Map[String, String] = {
+    val stream = Files.list(Paths.get(ckpt))
+    try stream.iterator().asScala.filter(_.getFileName.toString.endsWith(".json")).map { f =>
+      f.getFileName.toString -> Files.readAllLines(f).asScala
+        .filterNot(l => timingFields.exists(t => l.contains(s"\"$t\""))).mkString("\n")
+    }.toMap
+    finally stream.close()
+  }
+
+  /** Spark jobs started while `body` runs, as a listener counts them. */
+  private def jobsStartedBy(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val (before, after) = ("backfill-spec-before", "backfill-spec-after")
+    val jobs = new AtomicInteger(-1)
+    val drained = new CountDownLatch(1)
+    // the bus delivers events in order, and late events of earlier jobs
+    // too: count only the jobs between the two marker jobs
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.job.description")).orNull match {
+          case `before` => jobs.set(0)
+          case `after` => drained.countDown()
+          case _ => if (jobs.get >= 0) jobs.incrementAndGet()
+        }
+    }
+    def marker(name: String): Unit = {
+      sc.setJobDescription(name)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker(before)
+      body
+      marker(after)
+      assert(drained.await(30, TimeUnit.SECONDS), "listener bus did not drain")
+      jobs.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a null partition value fails loudly, on the file-index and the job listing") {
+    import spark.implicits._
+    val rows = Seq((Some("2024-01-01"), "a", 1L), (None, "b", 2L)).toDF("grp", "k", "v")
+    val dir = s"$tmp/src_null"
+    rows.write.partitionBy("grp").parquet(dir) // the null lands in __HIVE_DEFAULT_PARTITION__
+    for ((src, i) <- Seq(rows, spark.read.parquet(dir)).zipWithIndex) {
+      val e = intercept[IllegalArgumentException] {
+        Backfill.run(spark, src, "grp", s"$tmp/out_null$i", s"$tmp/ckpt_null$i", (d: DataFrame) => d)
+      }
+      assert(e.getMessage.contains("'grp'") && e.getMessage.contains("null partition value"),
+        e.getMessage)
+      assert(Backfill.completedPartitions(s"$tmp/ckpt_null$i").isEmpty)
+    }
+  }
+
+  test("a concurrent run equals a one-partition-at-a-time run: output and manifests") {
+    val all = days(source)
+    assert(all.length >= 3, s"fixture must span at least 3 day partitions, got $all")
+    val (seqOut, seqCkpt) = (s"$tmp/out_seq", s"$tmp/ckpt_seq")
+    def step() = Backfill.run(spark, source, "ds", seqOut, seqCkpt, job,
+      lookbackPartitions = 1, maxPartitions = 1)
+    val sequential = Iterator.continually(step()).takeWhile(_.nonEmpty).flatten.toSeq
+    val (concOut, concCkpt) = (s"$tmp/out_conc", s"$tmp/ckpt_conc")
+    val concurrent = Backfill.run(spark, source, "ds", concOut, concCkpt, job, lookbackPartitions = 1)
+    assert(sequential.map(_.partition) == all && concurrent.map(_.partition) == all)
+    assert(concurrent.map(r => (r.inputRows, r.outputRows)) ==
+      sequential.map(r => (r.inputRows, r.outputRows)))
+    assert(sameRows(Backfill.readOutput(spark, seqOut), Backfill.readOutput(spark, concOut)))
+    assert(manifests(seqCkpt) == manifests(concCkpt))
+    // the concurrent call did overlap its partitions
+    val started = "\"started_at_ms\": (\\d+)".r
+    val spans = concurrent.map { r =>
+      val json = new String(Files.readAllBytes(Paths.get(concCkpt, s"${r.partition}.json")))
+      (started.findFirstMatchIn(json).get.group(1).toLong, r.durationMs)
+    }
+    assert(spans.combinations(2).exists { case Seq((s1, d1), (s2, d2)) =>
+      s1 < s2 + d2 && s2 < s1 + d1 }, spans.toString)
+  }
+
+  test("file-index listing equals the job listing: partitions, output and manifests") {
+    import spark.implicits._
+    val slashDir = s"$tmp/src_slash"
+    Seq(("2024/01/01", "a", 1L), ("2024/01/01", "b", 2L), ("2024/01/02", "c", 3L))
+      .toDF("grp", "k", "v").write.partitionBy("grp").parquet(slashDir)
+    val slash = spark.read.parquet(slashDir)
+    assert(slash.schema("grp").dataType == StringType)
+    assert(source.schema("ds").dataType == DateType)
+    val cases = Seq(("slash", slash, "grp", (d: DataFrame) => d), ("date", source, "ds", job _))
+    for ((name, src, c, f) <- cases) {
+      // `filter(lit(true))` keeps a Filter over the scan, so it is listed by a job
+      val runs = Seq("fi" -> src, "job" -> src.filter(lit(true))).map { case (how, s) =>
+        val (out, ckpt) = (s"$tmp/out_${how}_$name", s"$tmp/ckpt_${how}_$name")
+        (Backfill.run(spark, s, c, out, ckpt, f, lookbackPartitions = 1), out, ckpt)
+      }
+      val Seq((fi, fiOut, fiCkpt), (viaJob, jobOut, jobCkpt)) = runs
+      def counts(rs: Seq[Backfill.PartitionResult]) = rs.map(r => (r.partition, r.inputRows, r.outputRows))
+      assert(fi.map(_.partition) == days(src, c), name)
+      assert(counts(fi) == counts(viaJob), name)
+      assert(sameRows(Backfill.readOutput(spark, fiOut), Backfill.readOutput(spark, jobOut)), name)
+      assert(manifests(fiCkpt) == manifests(jobCkpt), name)
+    }
+  }
+
+  test("file-index listing: a no-op resume starts no Spark job; a zero-row day is listed") {
+    import spark.implicits._
+    val dir = s"$tmp/src_gap"
+    Seq(("2024-01-01", "a", 1L), ("2024-01-01", "b", 2L), ("2024-01-03", "c", 3L))
+      .toDF("ds", "k", "v").write.partitionBy("ds").parquet(dir)
+    // a day whose directory holds only a file with zero rows
+    Seq.empty[(String, Long)].toDF("k", "v").write.parquet(s"$dir/ds=2024-01-02")
+    val src = spark.read.parquet(dir)
+    val (out, ckpt) = (s"$tmp/out_gap", s"$tmp/ckpt_gap")
+    def backfill(s: DataFrame, o: String, c: String) =
+      Backfill.run(spark, s, "ds", o, c, (d: DataFrame) => d, lookbackPartitions = 1)
+    // the file index lists the zero-row day: it runs, gets a manifest with
+    // output_rows 0, and is 2024-01-03's lookback step
+    val r = backfill(src, out, ckpt)
+    assert(r.map(_.partition) == Seq("2024-01-01", "2024-01-02", "2024-01-03"))
+    assert(r(1).inputRows == 2 && r(1).outputRows == 0) // its slice is 2024-01-01 plus itself
+    assert(new String(Files.readAllBytes(Paths.get(ckpt, "2024-01-02.json")))
+      .contains("\"output_rows\": 0,"))
+    assert(r(2).inputRows == 1)
+    // a job listing sees only days with rows
+    val viaJob = backfill(src.filter(lit(true)), s"$tmp/out_gap_job", s"$tmp/ckpt_gap_job")
+    assert(viaJob.map(_.partition) == Seq("2024-01-01", "2024-01-03"))
+    assert(viaJob(1).inputRows == 3)
+    // resuming over a complete checkpoint lists from the index and runs nothing
+    assert(jobsStartedBy(assert(backfill(src, out, ckpt).isEmpty)) == 0)
+  }
+
+  test("a failing partition fails the run loudly, nothing starts after it, resume finishes") {
+    final class Boom extends RuntimeException("boom")
+    val (out, ckpt) = (s"$tmp/out_fail", s"$tmp/ckpt_fail")
+    val all = days(source)
+    val k = math.min(all.length, spark.sparkContext.defaultParallelism)
+    assert(all.length > k, s"need more day partitions than pool threads: $all")
+    val bad = all.head
+    val firstWave = new CountDownLatch(k - 1)
+    val starts = new ConcurrentLinkedQueue[(String, Long)]()
+    @volatile var failedAt = Long.MaxValue
+    // lookback 0: each slice selects one day
+    def partitionOf(d: DataFrame) = {
+      val plan = d.queryExecution.analyzed.toString
+      all.find(p => plan.contains(s"IN ($p)")).getOrElse(fail(plan))
+    }
+    val failing = (d: DataFrame) => {
+      val t = System.nanoTime()
+      val p = partitionOf(d)
+      starts.add(p -> t)
+      if (p != bad) { firstWave.countDown(); job(d) }
+      else {
+        // fail once the other first-wave partitions are running
+        firstWave.await(60, TimeUnit.SECONDS)
+        failedAt = System.nanoTime()
+        throw new Boom
+      }
+    }
+    intercept[Boom](Backfill.run(spark, source, "ds", out, ckpt, failing))
+    val started = starts.asScala.toSeq
+    assert(started.forall(_._2 < failedAt), started.toString)
+    assert(started.map(_._1).sorted == all.take(k), started.toString)
+    assert(!Files.exists(Paths.get(ckpt, s"$bad.json")))
+    assert(Backfill.completedPartitions(ckpt) == all.take(k).filterNot(_ == bad))
+    // the call's pool is shut down: its threads exit
+    def poolThreads = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.isAlive && t.getName == "graft-backfill")
+    val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(10)
+    while (poolThreads.nonEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+    assert(poolThreads.isEmpty, poolThreads.map(_.getName).toString)
+    // a resume runs exactly what is left
+    val resumed = Backfill.run(spark, source, "ds", out, ckpt, job)
+    assert(resumed.map(_.partition) == all.filterNot(all.take(k).filterNot(_ == bad).contains))
+    assert(Backfill.completedPartitions(ckpt) == all)
   }
 
   test("torn manifest is not treated as complete") {
