@@ -286,13 +286,11 @@ object Bench {
 
     val qs = results.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
       .mkString("{", ",", "}")
-    val errs = errors.map { case (k, v) =>
-      "\"" + k + "\":\"" + Json.escape(v) + "\""
-    }.mkString("{", ",", "}")
     val total = results.map(_._2).sum
     val record =
       f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,""" +
-        s""""errors":$errs,"sf":"$sfDir","flagship":"pit_latest_turn",""" +
+        s""""errors":${JsonCodec.compact(errors)},"sf":${JsonCodec.compact(sfDir)},""" +
+        s""""flagship":"pit_latest_turn",""" +
         s""""scaling":$scaling,"scaling_join":$scalingJoin}"""
     println(record)
     // the record also goes to a FILE: the driver captures the process log

@@ -21,10 +21,8 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(_.contains(k)) }
-      .map { case (k, v) => s""""${Json.escape(k)}": "${Json.escape(v)}"""" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    val sql = SparkEntry.oracleSql.filter { case (k, _) => only.forall(_.contains(k)) }
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), JsonCodec.compact(sql))
     spark.stop()
   }
 }

@@ -1,12 +1,14 @@
 package graft.engine
 
+import graft.JsonCodec
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
+import org.apache.spark.sql.execution.FileSourceScanLike
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.Executors
 import java.util.concurrent.atomic.{AtomicInteger, AtomicReference}
 import scala.jdk.CollectionConverters._
@@ -19,19 +21,24 @@ import scala.jdk.CollectionConverters._
   * infra/compute_engines/spark_application/main.py:95-99) — from coarse
   * time-interval bookkeeping to **one lineage manifest per source partition**:
   *
-  *   checkpointDir/<partition>.json   {partition, status, input_rows,
-  *     output_rows, input_files, started_at_ms, duration_ms, rows_per_sec}
+  *   checkpointDir/<partition>.json   {partition, source_snapshot?, status,
+  *     input_rows, output_rows, input_files, started_at_ms, duration_ms,
+  *     rows_per_sec}
   *
-  * A partition is skipped on re-run iff its manifest says `complete`, so a
-  * backfill killed mid-run resumes exactly where it stopped; the manifest is
-  * written atomically (temp file + move) so a crash mid-write re-runs that
-  * partition rather than trusting a torn file. Partition outputs are
-  * `overwrite` so re-running a partition is idempotent. Two drivers resuming
-  * the same backfill SHARE the partition list: each partition is claimed with
-  * a non-blocking OS file lock ([[Locks.withTryFileLock]]) plus an isComplete
-  * re-check inside it — a partition another driver is running is skipped,
-  * not queued on — so each partition's job and manifest write happen exactly
-  * once across drivers and the drivers work disjoint partitions in parallel.
+  * A manifest is a typed record ([[PartitionManifest]]) written and parsed
+  * by [[graft.JsonCodec]]; `input_files` lists the files the partition's
+  * slice reads (the partition and its lookback, after partition pruning).
+  * A partition is skipped on re-run iff its manifest parses and says
+  * `complete`, so a backfill killed mid-run resumes exactly where it
+  * stopped; the manifest is written atomically (temp file + move) so a
+  * crash mid-write re-runs that partition rather than trusting a torn
+  * file. Partition outputs are `overwrite` so re-running a partition is
+  * idempotent. Two drivers resuming the same backfill SHARE the partition
+  * list: each partition is claimed with a non-blocking OS file lock
+  * ([[Locks.withTryFileLock]]) plus an isComplete re-check inside it — a
+  * partition another driver is running is skipped, not queued on — so each
+  * partition's job and manifest write happen exactly once across drivers
+  * and the drivers work disjoint partitions in parallel.
   *
   * Control plane: partition values come from the file index, with no Spark
   * job, when `source` is an unfiltered partitioned file scan, else from one
@@ -60,6 +67,24 @@ object Backfill {
       inputRows: Long,
       outputRows: Long,
       durationMs: Long
+  )
+
+  /** The manifest record, fields in file order; `source_snapshot` is left
+    * out of the file when None.
+    */
+  private final case class PartitionManifest(
+      partition: String,
+      // Iceberg source: the snapshot id the whole backfill run is pinned to
+      // (reference analog: materialization_intervals records time ranges,
+      // feature_view.py:482-490 — a snapshot id is the stronger lineage fact)
+      source_snapshot: Option[String],
+      status: String,
+      input_rows: Long,
+      output_rows: Long,
+      input_files: Seq[String],
+      started_at_ms: Long,
+      duration_ms: Long,
+      rows_per_sec: Double
   )
 
   /** One backfill pass. Returns the per-partition results of THIS run
@@ -129,9 +154,9 @@ object Backfill {
       val outputRows = outObs.get("out_rows").asInstanceOf[Long]
       val inputRows = inObs.get("in_rows").asInstanceOf[Long]
       val dur = System.currentTimeMillis() - t0
-      val lineage = slice.inputFiles.toSeq.sorted
-      writeManifest(checkpointDir, p, inputRows, outputRows, lineage, t0, dur,
-        sourceSnapshot)
+      val rps = if (dur > 0) inputRows * 1000.0 / dur else 0.0
+      JsonCodec.writeAtomic(manifestPath(checkpointDir, p), JsonCodec.pretty(PartitionManifest(
+        p, sourceSnapshot, "complete", inputRows, outputRows, sliceFiles(slice), t0, dur, rps)))
       PartitionResult(p, "complete", inputRows, outputRows, dur)
     }
 
@@ -233,23 +258,43 @@ object Backfill {
     }
   }
 
+  /** The files `slice` reads, sorted. `Dataset.inputFiles` reads the
+    * optimized plan, where a path-based source is still its whole file
+    * index (Spark prunes its partitions at physical planning), so file scans
+    * are read off the physical plan, after static partition pruning; a
+    * slice without a file scan keeps `inputFiles`. Planning runs no job,
+    * and pruning reads the index's cached listing.
+    */
+  private def sliceFiles(slice: DataFrame): Seq[String] = {
+    val scans = slice.queryExecution.sparkPlan.collect { case s: FileSourceScanLike => s }
+    val files =
+      if (scans.isEmpty) slice.inputFiles.toSeq
+      else scans.flatMap(_.selectedPartitions.filePartitionIterator.flatMap(_.files)
+        .map(_.getPath.toUri.toString))
+    files.distinct.sorted
+  }
+
   /** Read the backfilled output back (partition-discovering parquet read). */
   def readOutput(spark: SparkSession, outDir: String): DataFrame =
     spark.read.option("basePath", outDir).parquet(outDir)
 
+  /** The manifest of a file, or None when it is torn or not a manifest. */
+  private def readManifest(f: Path): Option[PartitionManifest] =
+    JsonCodec.tryRead[PartitionManifest](new String(Files.readAllBytes(f), StandardCharsets.UTF_8))
+
   def isComplete(checkpointDir: String, partition: String): Boolean = {
     val f = manifestPath(checkpointDir, partition)
-    Files.exists(f) && {
-      val txt = new String(Files.readAllBytes(f), StandardCharsets.UTF_8)
-      // verify the partition FIELD too: filenames are sanitized, so two
-      // values can collide on one manifest file — a collision must read
-      // as incomplete (re-run, wasteful but safe), never alias another
-      // partition's completion
-      txt.contains("\"status\": \"complete\"") &&
-      txt.contains("\"partition\": \"" + graft.Json.escape(partition) + "\"")
-    }
+    // check the partition FIELD too: filenames are sanitized, so two
+    // values can collide on one manifest file — a collision must read as
+    // incomplete (re-run, wasteful but safe), never alias another
+    // partition's completion
+    Files.exists(f) &&
+      readManifest(f).exists(m => m.status == "complete" && m.partition == partition)
   }
 
+  /** Partition values with a complete manifest, sorted; the true value is
+    * the manifest's `partition` field, not the (sanitized) filename.
+    */
   def completedPartitions(checkpointDir: String): Seq[String] = {
     val d = Paths.get(checkpointDir)
     if (!Files.exists(d)) Nil
@@ -257,18 +302,11 @@ object Backfill {
       // Files.list holds an open directory handle until closed — a driver
       // polling this in a loop would leak fds
       val stream = Files.list(d)
-      // the true partition value lives in the manifest's `partition`
-      // field, not the (sanitized) filename — recover it from the JSON
-      val partField = "\"partition\"\\s*:\\s*\"([^\"\\\\]*(?:\\\\.[^\"\\\\]*)*)\"".r
       try
         stream.iterator().asScala
           .filter(_.getFileName.toString.endsWith(".json"))
-          .flatMap { f =>
-            val txt = new String(Files.readAllBytes(f), StandardCharsets.UTF_8)
-            if (!txt.contains("\"status\": \"complete\"")) None
-            else partField.findFirstMatchIn(txt)
-              .map(m => graft.Json.unescape(m.group(1)))
-          }
+          .flatMap(readManifest)
+          .collect { case m if m.status == "complete" => m.partition }
           .toSeq
           .sorted
       finally stream.close()
@@ -303,36 +341,6 @@ object Backfill {
   private def manifestPath(dir: String, partition: String): Path =
     Paths.get(dir, s"${safeFileName(partition)}.json")
 
-  private def writeManifest(
-      dir: String, partition: String, inputRows: Long, outputRows: Long,
-      inputFiles: Seq[String], startedAtMs: Long, durationMs: Long,
-      sourceSnapshot: Option[String]): Unit = {
-    val rps = if (durationMs > 0) inputRows * 1000.0 / durationMs else 0.0
-    val files = inputFiles.map(f => "\"" + graft.Json.escape(f) + "\"").mkString("[", ", ", "]")
-    // Iceberg source: the snapshot id the whole backfill run is pinned to
-    // (reference analog: materialization_intervals records time ranges,
-    // feature_view.py:482-490 — a snapshot id is the stronger lineage fact)
-    val snapshotLine = sourceSnapshot
-      .map(s => s"""  "source_snapshot": "${graft.Json.escape(s)}",\n""")
-      .getOrElse("")
-    val json =
-      s"""{
-         |  "partition": "${graft.Json.escape(partition)}",
-         |$snapshotLine  "status": "complete",
-         |  "input_rows": $inputRows,
-         |  "output_rows": $outputRows,
-         |  "input_files": $files,
-         |  "started_at_ms": $startedAtMs,
-         |  "duration_ms": $durationMs,
-         |  "rows_per_sec": $rps
-         |}
-         |""".stripMargin
-    val tmp = Paths.get(dir, s".${safeFileName(partition)}.json.tmp")
-    Files.write(tmp, json.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, manifestPath(dir, partition),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
-
   /** spark-submit entry point: backfill the daily transcript features
     * ([[dailyFeatureJob]]: text_len, sessions by a 30-minute gap and tool
     * usage over a 4-hour window) over a day-partitioned transcript table.
@@ -352,8 +360,8 @@ object Backfill {
     val results = run(spark, source, "ds", outDir, checkpointDir,
       dailyFeatureJob, lookbackPartitions = 1, maxPartitions = maxParts)
     results.foreach { r =>
-      println(s"""{"partition":"${r.partition}","input_rows":${r.inputRows},""" +
-        s""""output_rows":${r.outputRows},"duration_ms":${r.durationMs}}""")
+      println(JsonCodec.compact(scala.collection.immutable.ListMap("partition" -> r.partition,
+        "input_rows" -> r.inputRows, "output_rows" -> r.outputRows, "duration_ms" -> r.durationMs)))
     }
     spark.stop()
   }

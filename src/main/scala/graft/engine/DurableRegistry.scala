@@ -1,6 +1,6 @@
 package graft.engine
 
-import graft.{FeatureService, FeatureView, OnDemandView, Projection}
+import graft.{FeatureService, FeatureView, JsonCodec, OnDemandView, Projection}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.expr
 
@@ -168,9 +168,6 @@ case class RegistryFile(
   */
 object DurableRegistry {
 
-  private implicit val formats: org.json4s.Formats =
-    org.json4s.DefaultFormats
-
   /** Reference `feast apply` semantics (feature_store.py:1556): merge the
     * given definitions into the registry file by name — an existing name is
     * replaced in place (its position kept), new names append in given
@@ -232,25 +229,14 @@ object DurableRegistry {
   private def withFileLock[T](path: String)(body: => T): T =
     Locks.withFileLock(path)(body)
 
-  /** Atomic write: serialize to a sibling temp file, then rename over the
-    * target — a concurrent reader sees either the old or the new registry,
-    * never a torn file.
+  /** Atomic replace ([[graft.JsonCodec.writeAtomic]]): a concurrent reader
+    * sees either the old or the new registry, never a torn file.
     */
-  def save(path: String, file: RegistryFile): Unit = {
-    val json = org.json4s.jackson.Serialization.writePretty(file)
-    val target = java.nio.file.Paths.get(path)
-    Option(target.getParent).foreach(java.nio.file.Files.createDirectories(_))
-    val tmp = target.resolveSibling(target.getFileName.toString + ".tmp")
-    java.nio.file.Files.writeString(tmp, json)
-    java.nio.file.Files.move(tmp, target,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-  }
+  def save(path: String, file: RegistryFile): Unit =
+    JsonCodec.writeAtomic(java.nio.file.Paths.get(path), JsonCodec.pretty(file))
 
-  def load(path: String): RegistryFile = {
-    val json = java.nio.file.Files.readString(java.nio.file.Paths.get(path))
-    org.json4s.jackson.Serialization.read[RegistryFile](json)
-  }
+  def load(path: String): RegistryFile =
+    JsonCodec.read[RegistryFile](java.nio.file.Files.readString(java.nio.file.Paths.get(path)))
 
   /** Look up a registered entity by name (reference feature_store.py
     * `get_entity` → registry.py `get_entity`): the durable answer to

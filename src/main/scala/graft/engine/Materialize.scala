@@ -1,6 +1,6 @@
 package graft.engine
 
-import graft.FeatureView
+import graft.{FeatureView, JsonCodec}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import java.nio.charset.StandardCharsets
@@ -38,52 +38,48 @@ object Materialize {
   // feature_view.py:482-490). Interval bookkeeping is a per-view jsonl
   // ledger next to the backfill manifests. -------------------------------
 
-  /** View names reach the ledger FILENAME and the JSON line: path
-    * separators or quotes in a name would escape the interval directory or
-    * corrupt the jsonl (writeManifest escapes its interpolations; the
-    * ledger must too). Filenames sanitize to a safe charset; JSON strings
-    * escape quotes/backslashes/control chars.
+  /** One ledger line: a completed (start, end] interval of `view`, times
+    * in `Timestamp.toString` form.
+    */
+  private final case class Interval(view: String, start: String, end: String)
+
+  /** View names reach the ledger FILENAME: path separators in a name
+    * would escape the interval directory, so filenames sanitize to a safe
+    * charset (the JSON line carries the true name).
     */
   private def safeFileName(viewName: String): String = {
     require(viewName.nonEmpty, "view name must be non-empty")
     viewName.replaceAll("[^A-Za-z0-9._-]", "_")
   }
 
-  private def jsonEscape(s: String): String = graft.Json.escape(s)
-
   private def ledgerPath(dir: String, viewName: String) =
     Paths.get(dir, s"${safeFileName(viewName)}.intervals.jsonl")
 
-  /** Most recent materialized end time of `viewName`, if any. Lines are
-    * matched on the JSON `view` field, not just the (sanitized) filename:
-    * distinct names like `a/b` and `a:b` collapse onto one ledger FILE, and
-    * resuming from another view's interval would silently skip data. The
-    * field is matched with a whitespace-tolerant regex, not an exact line
-    * prefix — a formatting tweak to [[recordInterval]] must not silently
-    * orphan all prior intervals and restart materialization from scratch
-    * (MaterializeSpec couples the reader and writer formats).
+  /** Most recent materialized end time of `viewName`, if any. Each line is
+    * parsed as an [[Interval]] and kept only if its `view` field is
+    * `viewName`, not just because it sits in the (sanitized) file: distinct
+    * names like `a/b` and `a:b` collapse onto one ledger FILE, and resuming
+    * from another view's interval would silently skip data. Parsing, not a
+    * line prefix, means a formatting change in [[recordInterval]] never
+    * orphans prior intervals; a line that does not parse is skipped.
     */
   def mostRecentEnd(intervalDir: String, viewName: String): Option[Timestamp] = {
     val p = ledgerPath(intervalDir, viewName)
     if (!Files.exists(p)) None
     else {
-      val viewField =
-        ("\"view\"\\s*:\\s*\"" +
-          java.util.regex.Pattern.quote(jsonEscape(viewName)) + "\"").r
       val ends = Files.readAllLines(p, StandardCharsets.UTF_8).asScala
-        .filter(viewField.findFirstIn(_).nonEmpty)
-        .flatMap("\"end\"\\s*:\\s*\"([^\"]+)\"".r.findFirstMatchIn(_))
-        .map(m => Timestamp.valueOf(m.group(1)))
+        .flatMap(JsonCodec.tryRead[Interval])
+        .filter(_.view == viewName)
+        .map(i => Timestamp.valueOf(i.end))
       ends.sorted(Ordering.by((t: Timestamp) => t.getTime)).lastOption
     }
   }
 
-  /** Record a completed (start, end] interval (atomic append). */
+  /** Record a completed (start, end] interval: one serialized line appended. */
   def recordInterval(intervalDir: String, viewName: String,
                      start: Timestamp, end: Timestamp): Unit = {
     Files.createDirectories(Paths.get(intervalDir))
-    val line =
-      s"""{"view": "${jsonEscape(viewName)}", "start": "$start", "end": "$end"}\n"""
+    val line = JsonCodec.compact(Interval(viewName, start.toString, end.toString)) + "\n"
     Files.write(ledgerPath(intervalDir, viewName),
       line.getBytes(StandardCharsets.UTF_8),
       StandardOpenOption.CREATE, StandardOpenOption.APPEND)

@@ -24,37 +24,21 @@ import org.apache.spark.sql.functions._
   */
 object Salting {
 
-  /** Broadcastable frame of hot keys `(keys..., __nsalt)`.
-    *
-    * Detection is a map-side-combined count per key — cheap next to the join
-    * it protects. At very large inputs pass `sampleFraction < 1` and the
-    * threshold is scaled accordingly (hot keys are by definition frequent,
-    * so sampling finds them reliably).
+  /** Broadcastable frame of hot keys `(keys..., __nsalt)`: keys with at
+    * least `rowThreshold` rows. Detection is a map-side-combined count per
+    * key — cheap next to the join it protects.
     */
   def detectHotKeys(
       src: DataFrame,
       keys: Seq[String],
       rowThreshold: Long,
-      buckets: Int,
-      sampleFraction: Double = 1.0
+      buckets: Int
   ): DataFrame = {
     require(buckets > 1, "need at least 2 salt buckets")
-    // a sample too thin to RESOLVE the threshold must fail loudly: with
-    // rowThreshold·sampleFraction < ~4 the scaled cutoff truncates toward
-    // the max(1,·) floor and every key that appears in the sample at all
-    // is flagged hot — the "protection" then replicates nearly the whole
-    // probe side × buckets instead of just the genuinely hot keys
-    val scaled = rowThreshold * sampleFraction
-    require(sampleFraction >= 1.0 || scaled >= 4.0,
-      f"sampleFraction $sampleFraction%.2g cannot resolve rowThreshold " +
-        f"$rowThreshold (expected in-sample count $scaled%.2f < 4); " +
-        "raise sampleFraction to at least " + (4.0 / rowThreshold))
-    val base = if (sampleFraction < 1.0) src.sample(withReplacement = false, sampleFraction, seed = 7L) else src
-    val eff = math.max(1L, math.round(scaled))
-    base
+    src
       .groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("__cnt"))
-      .filter(col("__cnt") >= eff)
+      .filter(col("__cnt") >= math.max(1L, rowThreshold))
       .select(keys.map(col) :+ lit(buckets).as("__nsalt"): _*)
   }
 

@@ -545,6 +545,99 @@ class BackfillSpec extends SparkTestBase {
     assert(Backfill.completedPartitions(ckpt) == all)
   }
 
+  /** `input_files` of a manifest, as `<partition dir>/<file name>`. */
+  private def manifestFiles(ckpt: String, partition: String): Seq[String] = {
+    import org.json4s._
+    implicit val formats: Formats = DefaultFormats
+    val json = org.json4s.jackson.JsonMethods.parse(Files.readString(Paths.get(ckpt, s"$partition.json")))
+    (json \ "input_files").extract[Seq[String]].map { f =>
+      val p = new org.apache.hadoop.fs.Path(f)
+      s"${p.getParent.getName}/${p.getName}"
+    }.sorted
+  }
+
+  test("manifest input_files lists exactly the slice's files: the day and its lookback") {
+    val ckpt = s"$tmp/ckpt_lineage"
+    val all = days(source)
+    // the source's data files per day directory (Spark skips `_` and `.` files)
+    def filesOf(day: String): Seq[String] = {
+      val stream = Files.list(Paths.get(srcDir, s"ds=$day"))
+      try stream.iterator().asScala.map(_.getFileName.toString)
+        .filterNot(n => n.startsWith("_") || n.startsWith(".")).map(n => s"ds=$day/$n").toSeq
+      finally stream.close()
+    }
+    assert(all.length >= 3 && all.forall(d => filesOf(d).nonEmpty), all.toString)
+    Backfill.run(spark, source, "ds", s"$tmp/out_lineage", ckpt, job, lookbackPartitions = 1)
+    for ((d, i) <- all.zipWithIndex) {
+      val expected = all.slice(math.max(0, i - 1), i + 1).flatMap(filesOf).sorted
+      assert(manifestFiles(ckpt, d) == expected, d)
+    }
+  }
+
+  test("a checkpoint written in the earlier hand-written format resumes with no job") {
+    import spark.implicits._
+    import java.sql.Timestamp
+    import graft.engine.Materialize
+    val dir = s"$tmp/src_legacy"
+    Seq(("2024/01/01", "a", 1L), ("2024-01-02", "b", 2L)).toDF("grp", "k", "v")
+      .write.partitionBy("grp").parquet(dir)
+    val src = spark.read.parquet(dir)
+    val ckpt = s"$tmp/ckpt_legacy"
+    Files.createDirectories(Paths.get(ckpt))
+    // the earlier writer's exact text: one field per line, `"key": value`,
+    // `[]`-style arrays, a trailing newline; `source_snapshot` after
+    // `partition`; a lossy-sanitized value's file name carries an MD5 suffix
+    def legacy(partition: String, snapshot: Option[String]) = {
+      val snapshotLine = snapshot.map(s => s"""  "source_snapshot": "$s",\n""").getOrElse("")
+      s"""{
+         |  "partition": "$partition",
+         |$snapshotLine  "status": "complete",
+         |  "input_rows": 1,
+         |  "output_rows": 1,
+         |  "input_files": ["file:/data/part-00000.parquet", "file:/data/part-00001.parquet"],
+         |  "started_at_ms": 1760000000000,
+         |  "duration_ms": 120,
+         |  "rows_per_sec": 8.333333333333334
+         |}
+         |""".stripMargin
+    }
+    val digest = java.security.MessageDigest.getInstance("MD5")
+      .digest("2024/01/01".getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
+    Files.writeString(Paths.get(ckpt, s"2024_01_01-$digest.json"), legacy("2024/01/01", None))
+    Files.writeString(Paths.get(ckpt, "2024-01-02.json"), legacy("2024-01-02", Some("8772871634897")))
+    assert(Backfill.isComplete(ckpt, "2024/01/01") && Backfill.isComplete(ckpt, "2024-01-02"))
+    assert(Backfill.completedPartitions(ckpt) == Seq("2024-01-02", "2024/01/01"))
+    assert(jobsStartedBy(assert(Backfill.run(spark, src, "grp", s"$tmp/out_legacy", ckpt,
+      (d: DataFrame) => d).isEmpty)) == 0)
+
+    // a one-line manifest with no spaces reads as complete as well
+    val compactCkpt = s"$tmp/ckpt_compact"
+    Files.createDirectories(Paths.get(compactCkpt))
+    Files.writeString(Paths.get(compactCkpt, "2026-01-01.json"),
+      """{"partition":"2026-01-01","status":"complete","input_rows":3,"output_rows":2,""" +
+        """"input_files":[],"started_at_ms":1760000000000,"duration_ms":10,"rows_per_sec":300.0}""")
+    assert(Backfill.isComplete(compactCkpt, "2026-01-01"))
+    assert(Backfill.completedPartitions(compactCkpt) == Seq("2026-01-01"))
+
+    // the earlier ledger line format, two views sharing one sanitized file
+    val ledger = s"$tmp/intervals_legacy"
+    Files.createDirectories(Paths.get(ledger))
+    Files.writeString(Paths.get(ledger, "sales_eu.intervals.jsonl"),
+      """{"view": "sales/eu", "start": "1970-01-01 00:00:00.0", "end": "2026-02-01 00:00:00.0"}""" + "\n" +
+        """{"view": "sales:eu", "start": "1970-01-01 00:00:00.0", "end": "2026-03-01 00:00:00.0"}""" + "\n")
+    val end = Timestamp.valueOf("2026-02-01 00:00:00")
+    assert(Materialize.mostRecentEnd(ledger, "sales/eu").contains(end))
+    val view = FeatureView("sales/eu", Transcripts.synthetic(spark, nConvs = 2, turnsPerConv = 3, seed = 1L),
+      Seq("conv_id"), "ts", None, 0L, features = Seq("turn_idx"), tieBreakCols = Seq("turn_idx"))
+    val (_, (start, _)) = Materialize.incremental(view, Timestamp.valueOf("2026-04-01 00:00:00"), ledger)
+    assert(start == end)
+    // a line appended by the new writer is read next to the old ones
+    val end2 = Timestamp.valueOf("2026-04-01 00:00:00")
+    Materialize.recordInterval(ledger, "sales/eu", end, end2)
+    assert(Materialize.mostRecentEnd(ledger, "sales/eu").contains(end2))
+    assert(Materialize.mostRecentEnd(ledger, "sales:eu").contains(Timestamp.valueOf("2026-03-01 00:00:00")))
+  }
+
   test("torn manifest is not treated as complete") {
     val ckpt = s"$tmp/ckpt3"
     Files.createDirectories(java.nio.file.Paths.get(ckpt))
