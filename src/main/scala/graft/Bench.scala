@@ -54,36 +54,31 @@ object Bench {
     engine.Historical.getHistoricalFeatures(entity, Seq(view))
   }
 
-  /** The second scaling workload: the SAME retrieval forced down the
-    * salted time-bucketed JOIN path (the pit_salted shape — the skew
-    * machinery of the north rule). hotKeyRowThreshold 1000 < the 3000-turn
-    * hot conversations of the synthetic table, so the 1% hot keys really
-    * are salted into 8 subkeys; results are byte-identical to the merge
-    * path (SaltingSpec / path-equivalence specs pin this at test scale).
+  /** The second scaling workload: the SAME retrieval with every key split
+    * into 8 time chunks inside the merge kernel (the chunked shape of the
+    * hot-key machinery of the north rule: chunk tagging, the carried
+    * winners, a (key, chunk) window). Results are byte-identical to the
+    * plain kernel (PropertySpec / ChunkingSpec pin this at test scale).
     */
   private def retrievalSaltedJoin(spark: SparkSession, path: String): DataFrame = {
     val (entity, view) = scaleInputs(spark, path)
-    pit.PointInTimeJoin.enrich(entity, view,
-      saltBuckets = 8, hotKeyRowThreshold = 1000L)
+    pit.PointInTimeJoin.enrichMergeFused(entity, Seq(view),
+      chunking = pit.PointInTimeJoin.Chunking.EveryKey(8))
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    // The scaling pair is 2 vs 8 threads (BASELINE.md has the full ladder):
-    // this box advertises 32 CPUs but the upper 16 are hyperthread siblings,
-    // and past ~8 concurrent cores the shared socket memory bandwidth
-    // saturates — a pure-CPU microbenchmark caps 8→32 at 0.74-0.84 and
-    // 4→16 at ~0.83 efficiency, so no job can evidence 4× there. Both
-    // levels of 2→8 sit on physical cores BELOW bandwidth saturation
-    // (microbench 0.78-0.98), which is the honest stand-in for N vs 4N
-    // *executors*: separate cluster executors do not share one socket's
-    // bandwidth, so per-executor bandwidth stays constant as the cluster
-    // grows. The 4→16 pair (measured wall 0.70 with task-second
-    // work_ratio 1.24 ⇒ at that hardware ceiling) is documented in
-    // BASELINE.md as the saturated-socket data point.
-    val nSmall = sys.env.getOrElse("SPARK_GRAFT_SCALE_N", "2").toInt
-    val nLarge = sys.env.getOrElse("SPARK_GRAFT_SCALE_4N", "8").toInt
+    // The scaling pair N → 4N defaults to (max(1, cpus/4), cpus), capped at
+    // 2 → 8: past ~8 concurrent cores a shared socket's memory bandwidth
+    // saturates (a pure-CPU microbenchmark caps 8→32 at 0.74-0.84 and
+    // 4→16 at ~0.83 efficiency), so no job can evidence 4× there, while
+    // separate cluster executors do not share one socket's bandwidth.
+    // BASELINE.md has the full ladder, including the saturated 4→16 pair.
+    val nSmall = sys.env.get("SPARK_GRAFT_SCALE_N").map(_.toInt)
+      .getOrElse(math.min(math.max(1, cpus / 4), 2))
+    val nLarge = sys.env.get("SPARK_GRAFT_SCALE_4N").map(_.toInt)
+      .getOrElse(math.min(cpus, 8))
     // sized so the retrieval is compute-bound (several seconds at N cores):
     // smaller inputs finish inside fixed job overhead at every parallelism
     // and can't evidence scaling
@@ -133,10 +128,9 @@ object Bench {
       }.filterNot(_._2.isNaN)
     }
 
-    // ---- scale-input generation (still in the sweep session). The join-
-    // path block gets a quarter-size table: the bucketed join does ~4× the
-    // merge path's work per turn, so this keeps both blocks' wall time
-    // comparable within the bench budget. ----
+    // ---- scale-input generation (still in the sweep session). The
+    // chunked block runs on a quarter-size table, as the block it replaced
+    // did, so its records stay comparable across rounds. ----
     val turns = if (!blocks("scaling")) 0L else {
       if (!new java.io.File(s"$scalePath/_SUCCESS").exists())
         Transcripts.syntheticDistributed(spark, scaleConvs, turnsPerConv = 60)
@@ -171,7 +165,7 @@ object Bench {
       val s = LocalSession(s"graft-bench-scale-$cores", cores, 8 * cpus)
       // Coalesce post-shuffle partitions by DATA SIZE, not driver
       // parallelism. AQE's default parallelismFirst=true shrinks each
-      // stage to ≈ core count — at 8 cores the join path's dominant SMJ
+      // stage to ≈ core count — at 8 cores the former range-join path's SMJ
       // stage became 10 tasks = 1.25 waves, so its tail wave ran 2 tasks
       // on 8 cores and ~40% of the wall was idle (measured: that stage
       // alone 21 s @ 10 tasks → 11.5 s @ 86 tasks; block efficiency
@@ -277,9 +271,9 @@ object Bench {
     val scaling = if (!blocks("scaling")) "null" else
       floorHunt(retrieval, scalePath, turns,
         sys.env.getOrElse("SPARK_GRAFT_SCALE_BUDGET_MIN", "25").toLong, reps = 3)
-    // second block: the salted time-bucketed join path (skew machinery) on
-    // the quarter-size table — evidences that the join path, not just the
-    // merge path, scales N→4N with work_ratio ≈ 1
+    // second block: the every-key chunked kernel (skew machinery) on the
+    // quarter-size table — evidences that the split path, not just the
+    // plain kernel, scales N→4N with work_ratio ≈ 1
     val scalingJoin = if (!blocks("scaling_join")) "null" else
       floorHunt(retrievalSaltedJoin, joinScalePath, joinTurns,
         sys.env.getOrElse("SPARK_GRAFT_SCALE_JOIN_BUDGET_MIN", "12").toLong, reps = 2)

@@ -101,19 +101,22 @@ object SparkEntry {
       Historical.getHistoricalFeatures(
         Transcripts.entityFrame(s, dir),
         Seq(turnStatsView(s, dir, ttlSec = 4 * 3600L)))),
-    // Hot-key salted variant of the same join (north rule skew handling;
-    // graft.skew.Salting) — must produce identical rows to pit_latest_turn.
+    // Hot-key chunked variant of the same join (north rule skew handling:
+    // conversations with >= 80 merge rows, about half of them, split into
+    // time chunks inside the merge kernel) — must produce identical rows
+    // to pit_latest_turn.
     "pit_salted" -> ((s, dir) =>
-      pit.PointInTimeJoin.enrich(
+      pit.PointInTimeJoin.enrichMergeFused(
         Transcripts.entityFrame(s, dir),
-        turnStatsView(s, dir, ttlSec = 4 * 3600L),
-        saltBuckets = 8, hotKeyRowThreshold = 50L)),
+        Seq(turnStatsView(s, dir, ttlSec = 4 * 3600L)),
+        chunking = pit.PointInTimeJoin.Chunking.HotKeys(80L))),
     // North-star zero-temporal-leakage audit (BASELINE.json north rule):
-    // the SAME retrieval through all three physical strategies (merge,
-    // plain join, salted join), carrying the contributing feature
-    // timestamp and emitting leaked = max_fts > event_ts per output row.
+    // the SAME retrieval through three physical paths of the merge kernel
+    // ("merge": plain, "join": every key chunked, "salted": hot keys
+    // chunked), carrying the contributing feature timestamp and emitting
+    // leaked = max_fts > event_ts per output row.
     // The oracle recomputes max_fts and leaked independently, so a leak
-    // on ANY strategy is a hash mismatch — and the all-false leaked
+    // on ANY path is a hash mismatch — and the all-false leaked
     // column is durable per-row evidence in the correctness artifact.
     "pit_leakage_audit" -> ((s, dir) => {
       val ents = Transcripts.entityFrame(s, dir)
@@ -124,10 +127,11 @@ object SparkEntry {
           col("turn_ts").as("max_fts"),
           coalesce(col("turn_ts") > col("event_ts"), lit(false)).as("leaked"),
           lit(strategy).as("strategy"))
+      def chunked(c: pit.PointInTimeJoin.Chunking) =
+        pit.PointInTimeJoin.enrichMergeFused(ents, Seq(v), chunking = c)
       audit(pit.PointInTimeJoin.enrich(ents, v), "merge")
-        .unionByName(audit(pit.PointInTimeJoin.enrichJoin(ents, v), "join"))
-        .unionByName(audit(pit.PointInTimeJoin.enrichJoin(ents, v,
-          saltBuckets = 8, hotKeyRowThreshold = 50L), "salted"))
+        .unionByName(audit(chunked(pit.PointInTimeJoin.Chunking.EveryKey(8)), "join"))
+        .unionByName(audit(chunked(pit.PointInTimeJoin.Chunking.HotKeys(80L)), "salted"))
     }),
     // No-TTL variant (offline_utils.py:144-147 — ttl 0 = unbounded below).
     "pit_no_ttl" -> ((s, dir) =>

@@ -68,21 +68,17 @@ object Historical {
     // filter mode included. Groups chain — each probes the previous
     // group's output, whose entity columns ride through the window — so a
     // retrieval costs one shuffle per key group and no join-back. Keyless
-    // views take the join path, one view each.
+    // views are one more key group (the one-key case).
     val entityTsType = entityDf.schema(entityTsCol).dataType
     def groupKey(v: FeatureView) =
       (v.joinKeys, PointInTimeJoin.mergeAxisType(entityTsType, v))
     val groups = bounded.foldLeft(Vector.empty[Vector[FeatureView]]) { (gs, v) =>
-      val i = if (v.joinKeys.isEmpty) -1 else gs.indexWhere(g => groupKey(g.head) == groupKey(v))
+      val i = gs.indexWhere(g => groupKey(g.head) == groupKey(v))
       if (i < 0) gs :+ Vector(v) else gs.updated(i, gs(i) :+ v)
     }
     val chained = groups.foldLeft(entityDf) { (acc, g) =>
-      if (g.head.joinKeys.isEmpty)
-        PointInTimeJoin.enrich(acc, g.head, entityTsCol, fullFeatureNames,
-          filterByCreatedTs, precomputedBounds = bounds)
-      else
-        PointInTimeJoin.enrichMergeFused(acc, g, entityTsCol, fullFeatureNames,
-          filterByCreatedTs, bounds)
+      PointInTimeJoin.enrichMergeFused(acc, g, entityTsCol, fullFeatureNames,
+        filterByCreatedTs, bounds)
     }
     // grouping moves a later view's features up next to its group's first
     // view; restore entity cols, then features in view order
@@ -175,21 +171,17 @@ object Historical {
       fullFeatureNames = fullFeatureNames)
 
   /** Entityless ("global") view support: the reference joins such views via
-    * a DUMMY_ENTITY literal (feature_view.py:95-108; spark.py:150). We add
-    * the dummy key to both sides and delegate to the normal path.
+    * a DUMMY_ENTITY literal (feature_view.py:95-108; spark.py:150). A
+    * keyless view is the merge kernel's one-key case, so it needs no dummy
+    * key.
     */
   def enrichEntityless(
       entityDf: DataFrame,
       view: FeatureView,
       entityTsCol: String = "event_ts",
       fullFeatureNames: Boolean = false
-  ): DataFrame = {
-    val dummy = "__dummy_id"
-    val left = entityDf.withColumn(dummy, lit(""))
-    val src = view.source.withColumn(dummy, lit(""))
-    val v = view.copy(source = src, joinKeys = Seq(dummy))
-    PointInTimeJoin.enrich(left, v, entityTsCol, fullFeatureNames).drop(dummy)
-  }
+  ): DataFrame =
+    PointInTimeJoin.enrich(entityDf, view, entityTsCol, fullFeatureNames)
 
   /** Non-entity retrieval mode (reference spark.py:1336-1387 W5): discover
     * the entity universe as UNION DISTINCT of each view's keys, stamp every

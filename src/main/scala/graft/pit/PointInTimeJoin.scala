@@ -5,7 +5,9 @@ import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, Row}
 import org.apache.spark.sql.catalyst.expressions.KnownNotNull
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.types.{DataType, DateType}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{ArrayType, DataType, DateType, StructField, StructType}
+import scala.jdk.CollectionConverters._
 
 /** Point-in-time ("as-of") join: for each entity row (join keys, event_ts),
   * attach the feature values of the **latest** source row with
@@ -17,41 +19,62 @@ import org.apache.spark.sql.types.{DataType, DateType}
   * contrib/spark_offline_store/spark.py:1709-1887 — J1..J7 in SURVEY.md §2.3)
   * and the dask dataframe program (infra/offline_stores/dask.py:1093-1270).
   *
-  * Two physical strategies, neither of which is the reference's
-  * (range join → row_number → join back):
+  * One physical strategy, not the reference's (range join → row_number →
+  * join back): the **sort-merge kernel** ([[enrichMergeFused]]). It unions
+  * the feature rows of every view sharing the join keys with the probe
+  * rows, sorts once per key on (ts, side, created, tiebreaks), and runs one
+  * window pass of a running `last(payload_i, ignoreNulls)` per view — each
+  * probe row reads each view's latest qualifying feature row directly. No
+  * join, no pair blow-up, no aggregation, no join-back (probe rows carry
+  * their entity columns through the window): cost is a single shuffle +
+  * sort of |features| + |probes| rows regardless of TTL width or view
+  * count. The created-ts *filter* mode stays on this path: a feature row is
+  * visible to a probe iff `event_ts >= greatest(ts, created_ts)`, so
+  * ordering the merge stream by that visibility time and keeping a running
+  * `max_by(payload, (ts, created, tiebreaks))` (instead of `last`) yields
+  * the exact filtered winner with the same single sort. A keyless view is
+  * the one-key case.
   *
-  *  1. **Merge kernel** ([[enrichMergeFused]], the default and the only
-  *     merge path): union the feature rows of every view sharing the join
-  *     keys with the probe rows, one sort per key on (ts, side, created,
-  *     tiebreaks), one window pass of a running `last(payload_i,
-  *     ignoreNulls)` per view — each probe row reads each view's latest
-  *     qualifying feature row directly. No join, no pair blow-up, no
-  *     aggregation, no join-back (probe rows carry their entity columns
-  *     through the window): cost is a single shuffle + sort of
-  *     |features| + |probes| rows regardless of TTL width or view count.
-  *     This is the classic sort-merge as-of algorithm expressed in pure
-  *     Catalyst. The created-ts *filter* mode stays on this path: a feature
-  *     row is visible to a probe iff `event_ts >= greatest(ts, created_ts)`,
-  *     so ordering the merge stream by that visibility time and keeping a
-  *     running `max_by(payload, (ts, created, tiebreaks))` (instead of
-  *     `last`) yields the exact filtered winner with the same single
-  *     sort — no join, no per-key pair blow-up at TTL = 0.
-  *  2. **Join path** ([[enrichJoin]]): time-bucketed range inner join
-  *     (bounded fan-out) → partial-aggregated max_by → left join back.
-  *     Kept for hot-key salting (explicit replication) and keyless views.
+  * Hot keys split by time inside the same kernel. The window partitions by
+  * `(keys, __chunk)`: `__chunk` is 0 for a cold key and a time chunk of the
+  * merge axis for a hot key. Each chunk is seeded with one carried row per
+  * view, the winner of all of that key's earlier chunks (a per-chunk
+  * `max_by` over (ts, created, tiebreaks), then a running `max_by` across
+  * chunks). The carried row keeps its own axis time, so it sorts before
+  * everything in its chunk; an empty chunk still passes the winner on, and
+  * TTL still qualifies the winner after the window. A key is hot when its
+  * merge rows (counted over a sample) are estimated above Spark's
+  * `spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes`, and gets
+  * chunks of about `spark.sql.adaptive.advisoryPartitionSizeInBytes`
+  * (nothing is split when `spark.sql.adaptive.skewJoin.enabled` is off). A
+  * key group whose plan-estimated input is below the threshold can hold no
+  * hot key: it runs no detection job and plans exactly as the unsplit
+  * kernel.
   *
-  * Shared scale levers (both paths):
+  * Scale levers:
   *   - scan bounds [min(event_ts) − ttl, max(event_ts)] derived from the
   *     entity frame are pushed into the source scan (reference
   *     offline_utils.py:168-189), plus derived date-partition predicates
   *   - only (keys, ts, created, features) survive into the shuffle — wide
   *     columns like `text` never shuffle unless they are requested features
-  *   - join path: time-bucket equi-keys, optional hot-key salting
-  *     (graft.skew.Salting), AQE skew join.
   */
 object PointInTimeJoin {
 
-  private val DefaultBroadcastRows = 4000000L
+  /** How [[enrichMergeFused]] splits keys into time chunks. Retrievals use
+    * [[Chunking.Auto]]; the forced modes are for the driver queries, the
+    * bench and the specs, which must reach the split kernel at small sizes.
+    */
+  private[graft] sealed trait Chunking
+  private[graft] object Chunking {
+    /** Hot keys from the data and Spark's skew settings (see object doc). */
+    case object Auto extends Chunking
+    /** Keys with at least `minRows` merge rows, in chunks of about
+      * `minRows` rows. */
+    case class HotKeys(minRows: Long) extends Chunking
+    /** Every key, split at the same `chunks` time quantiles of the whole
+      * merge stream. */
+    case class EveryKey(chunks: Int) extends Chunking
+  }
 
   /** Enrich `entityDf` with the features of `view` as of each row's
     * `entityTsCol`. Preserves every entity row and column; feature columns
@@ -68,17 +91,10 @@ object PointInTimeJoin {
       entityTsCol: String = "event_ts",
       fullFeatureNames: Boolean = false,
       filterByCreatedTs: Boolean = false,
-      saltBuckets: Int = 0,
-      hotKeyRowThreshold: Long = 5000000L,
       precomputedBounds: Option[Row] = None
   ): DataFrame =
-    if (saltBuckets > 1 || view.joinKeys.isEmpty)
-      enrichJoin(entityDf, view, entityTsCol, fullFeatureNames,
-        filterByCreatedTs, saltBuckets,
-        hotKeyRowThreshold, precomputedBounds)
-    else
-      enrichMergeFused(entityDf, Seq(view), entityTsCol, fullFeatureNames,
-        filterByCreatedTs, precomputedBounds)
+    enrichMergeFused(entityDf, Seq(view), entityTsCol, fullFeatureNames,
+      filterByCreatedTs, precomputedBounds)
 
   /** One entity-frame (min, max) event-ts scan, shared across views of a
     * retrieval (reference computes it once per job too,
@@ -100,11 +116,10 @@ object PointInTimeJoin {
       (keys :+ view.tsCol) ++ view.createdTsCol.toSeq ++ feats ++
         view.tieBreakCols ++ view.datePartitionCol.toSeq
     var src = view.mappedSource.select(neededCols.distinct.map(col): _*)
-    // SQL join semantics for NULL keys, on BOTH physical strategies: a
-    // null-key source row matches no probe (NULL = NULL is never true in
-    // the reference's join template), so drop it here — otherwise the
-    // merge path's window partitioning would group null keys together and
-    // attach features the join path (and the reference) never would. A
+    // SQL join semantics for NULL keys: a null-key source row matches no
+    // probe (NULL = NULL is never true in the reference's join template),
+    // so drop it here — otherwise the window partitioning would group null
+    // keys together and attach features the reference never would. A
     // null-key PROBE row still flows through and comes back with null
     // features (left-join semantics). Also a free scan predicate.
     if (keys.nonEmpty)
@@ -145,48 +160,27 @@ object PointInTimeJoin {
     src
   }
 
-  /** The sort-merge as-of kernel (see object doc, strategy 1): N views
-    * sharing the SAME join keys enrich the entity frame through ONE union →
-    * ONE shuffle/sort → ONE window pass; a single view is the N = 1 case.
-    *
-    * Per-key order: (visibility ts, side [features before probes at equal
-    * ts — `<=` semantics], view-0 ords…, view-N ords… nulls-first [null
-    * created loses]), ords being created then tiebreaks. Each view's
-    * payload struct (columns travel atomically: a null feature value must
-    * NOT fall through to an older row) and ords are null on every other
-    * view's rows and on probes, so view i's running `last(__payload_i,
-    * ignoreNulls)` at a probe row is exactly its max_by(ts, created,
-    * tiebreaks) winner. TTL then qualifies that winner, per view — anything
-    * older is further below the window's lower bound.
-    *
-    * Created-ts filter mode (reference template spark.py:1799-1801 / dask
-    * masking dask.py:1203-1226): a view's merge axis becomes the visibility
-    * time `greatest(ts, created_ts)`, so `__t <= event_ts` is exactly
-    * `ts <= event_ts AND created_ts <= event_ts`; that stream is not in
-    * winner order, so the running `last` becomes a running `max_by(payload,
-    * (ts, created, tiebreaks))` under the same sort — linear at TTL = 0.
-    *
-    * No join-back: probe rows carry every entity column in one `__ent`
-    * struct through the exchange and the sort.
-    * Duplicate probes are adjacent and read the same running winner, so the
-    * window output already is the result, multiplicity kept.
-    *
-    * Time axis ([[mergeAxisType]]): a DateType entity ts promotes to the
-    * views' (shared) feature-ts type — casting feature times down to dates
-    * would leak same-day future rows, and the join path promotes too;
-    * otherwise the entity type wins (e.g. tz vs ntz normalization).
+  /** One view's columns in the merge stream: payload struct, the ords that
+    * break ts ties (created then tiebreaks), and in created-filter mode the
+    * visibility axis and the order struct of its running max_by.
     */
-  def enrichMergeFused(
-      entityDf: DataFrame,
-      views: Seq[FeatureView],
-      entityTsCol: String = "event_ts",
-      fullFeatureNames: Boolean = false,
-      filterByCreatedTs: Boolean = false,
-      precomputedBounds: Option[Row] = None
-  ): DataFrame = {
+  private case class ViewCols(
+      view: FeatureView, src: DataFrame, feats: Seq[String],
+      visTime: Column, payload: Column, payloadType: DataType,
+      ordStruct: Option[(String, Column, DataType)],
+      ords: Seq[(String, Column, DataType)])
+
+  /** The merge stream of a key group: every view's feature rows (`__p` 0)
+    * and the probe rows (`__p` 1) on one axis `__t`, keyed by the views'
+    * shared join keys. See [[enrichMergeFused]].
+    */
+  private def mergeStream(
+      entityDf: DataFrame, views: Seq[FeatureView], entityTsCol: String,
+      filterByCreatedTs: Boolean, precomputedBounds: Option[Row]
+  ): (DataFrame, Seq[ViewCols]) = {
     val keys = views.head.joinKeys
-    require(keys.nonEmpty && views.forall(_.joinKeys == keys),
-      "fused merge requires identical non-empty join keys across views")
+    require(views.forall(_.joinKeys == keys),
+      "fused merge requires identical join keys across views")
     val entityTsType = entityDf.schema(entityTsCol).dataType
     val etsType = mergeAxisType(entityTsType, views.head)
     require(views.forall(v => mergeAxisType(entityTsType, v) == etsType),
@@ -201,18 +195,12 @@ object PointInTimeJoin {
     // axis greatest(ts, created) and (b) an order STRUCT for its running
     // max_by — null on every other view's rows and on probes, so max_by
     // skips them.
-    case class ViewCols(
-        view: FeatureView, src: DataFrame, feats: Seq[String],
-        visTime: Column, payload: Column, payloadType: DataType,
-        ordStruct: Option[(String, Column, DataType)],
-        ords: Seq[(String, Column, DataType)])
     val infos = views.zipWithIndex.map { case (v, i) =>
       val createdFilter = filterByCreatedTs && v.createdTsCol.nonEmpty
       // created-filter mode hides rows with NULL created_ts (SQL semantics
       // of the reference's `created <= entity_ts` join predicate,
       // spark.py:1799; dask's NaT compare masks them too) — without this,
-      // greatest() would skip the null and leave the row visible, diverging
-      // from the join path (PropertySpec pins the equivalence)
+      // greatest() would skip the null and leave the row visible
       val src0 = prepare(entityDf, v, entityTsCol, Some(bounds))
       val src =
         if (createdFilter) src0.filter(col(v.createdTsCol.get).isNotNull) else src0
@@ -263,13 +251,67 @@ object PointInTimeJoin {
     val pSide = sideSelect(entityDf, Seq(
       col(quote(entityTsCol)).cast(etsType).as("__t"), lit(1).as("__p"),
       entity.as("__ent")), ownerIdx = -1)
+    ((fSides :+ pSide).reduce(_ unionByName _), infos)
+  }
 
-    val w = Window.partitionBy(keys.map(col): _*)
+  /** The sort-merge as-of kernel (see object doc): N views sharing the
+    * SAME join keys enrich the entity frame through ONE union → ONE
+    * shuffle/sort → ONE window pass; a single view is the N = 1 case and a
+    * keyless view the one-key case.
+    *
+    * Per-key order: (visibility ts, side [features before probes at equal
+    * ts — `<=` semantics], view-0 ords…, view-N ords… nulls-first [null
+    * created loses]), ords being created then tiebreaks. Each view's
+    * payload struct (columns travel atomically: a null feature value must
+    * NOT fall through to an older row) and ords are null on every other
+    * view's rows and on probes, so view i's running `last(__payload_i,
+    * ignoreNulls)` at a probe row is exactly its max_by(ts, created,
+    * tiebreaks) winner. TTL then qualifies that winner, per view — anything
+    * older is further below the window's lower bound.
+    *
+    * Created-ts filter mode (reference template spark.py:1799-1801 / dask
+    * masking dask.py:1203-1226): a view's merge axis becomes the visibility
+    * time `greatest(ts, created_ts)`, so `__t <= event_ts` is exactly
+    * `ts <= event_ts AND created_ts <= event_ts`; that stream is not in
+    * winner order, so the running `last` becomes a running `max_by(payload,
+    * (ts, created, tiebreaks))` under the same sort — linear at TTL = 0.
+    *
+    * No join-back: probe rows carry every entity column in one `__ent`
+    * struct through the exchange and the sort.
+    * Duplicate probes are adjacent and read the same running winner, so the
+    * window output already is the result, multiplicity kept.
+    *
+    * Hot keys split into time chunks, each seeded with the carried winner
+    * of the key's earlier chunks (object doc; [[withCarry]]); `chunking`
+    * forces a split mode.
+    *
+    * Time axis ([[mergeAxisType]]): a DateType entity ts promotes to the
+    * views' (shared) feature-ts type — casting feature times down to dates
+    * would leak same-day future rows; otherwise the entity type wins (e.g.
+    * tz vs ntz normalization).
+    */
+  def enrichMergeFused(
+      entityDf: DataFrame,
+      views: Seq[FeatureView],
+      entityTsCol: String = "event_ts",
+      fullFeatureNames: Boolean = false,
+      filterByCreatedTs: Boolean = false,
+      precomputedBounds: Option[Row] = None,
+      chunking: Chunking = Chunking.Auto
+  ): DataFrame = {
+    val keys = views.head.joinKeys
+    val (unioned, infos) =
+      mergeStream(entityDf, views, entityTsCol, filterByCreatedTs, precomputedBounds)
+    val (stream, part) = split(unioned, keys, chunking) match {
+      case (_, Seq()) => (unioned, keys)
+      case (by, bounds) =>
+        (withCarry(chunked(unioned, by, bounds), keys, infos), keys :+ "__chunk")
+    }
+    val w = Window.partitionBy(part.map(col): _*)
       .orderBy((Seq(col("__t").asc, col("__p").asc) ++
         infos.flatMap(_.ords).map { case (name, _, _) => col(name).asc_nulls_first }): _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
 
-    val unioned = (fSides :+ pSide).reduce(_ unionByName _)
     // per-view running winner: the sorted-stream `last` normally; a running
     // max_by over the view's own (ts, created, tiebreaks) struct in
     // created-filter mode, where the stream is visibility-ordered rather
@@ -283,7 +325,7 @@ object PointInTimeJoin {
       }
       s"__best_$i" -> best
     }
-    val filled = unioned.withColumns(bests.toMap).filter(col("__p") === 1)
+    val filled = stream.withColumns(bests.toMap).filter(col("__p") === 1)
     val featCols = infos.zipWithIndex.flatMap { case (inf, i) =>
       val best = col(s"__best_$i")
       val qualified =
@@ -299,6 +341,128 @@ object PointInTimeJoin {
     filled.select(entityDf.columns.toSeq.map(c => ent.getField(c).as(c)) ++ featCols: _*)
   }
 
+  /** The keys the kernel splits for this retrieval and their chunk bounds,
+    * as rows `(split-by columns…, __bounds)` (see [[split]]); empty when it
+    * splits nothing. Runs the detection jobs the kernel would run.
+    */
+  private[graft] def splitKeys(
+      entityDf: DataFrame,
+      views: Seq[FeatureView],
+      entityTsCol: String = "event_ts",
+      chunking: Chunking = Chunking.Auto
+  ): Seq[Row] =
+    split(mergeStream(entityDf, views, entityTsCol, false, None)._1,
+      views.head.joinKeys, chunking)._2
+
+  /** Which keys of a merge stream to split, and where: the split-by columns
+    * (the join keys, or none to split every key alike) and one row
+    * `(split-by values…, __bounds)` per split key, `__bounds` its sorted
+    * chunk start times on the merge axis. Bounds are approximate quantiles
+    * of the key's `__t`, so chunks hold about equal row counts; the kernel's
+    * result does not depend on where they fall.
+    */
+  private def split(stream: DataFrame, keys: Seq[String], chunking: Chunking): (Seq[String], Seq[Row]) = {
+    val conf = SQLConf.get
+    val rowBytes = math.max(1L, stream.schema.defaultSize.toLong)
+    def ceilDiv(a: Long, b: Long) = (a + b - 1) / math.max(1L, b)
+    // keys with at least minRows merge rows and their chunk counts. A key
+    // that large shows in a ~1000/minRows sample with ~1000 rows, so the
+    // count runs over the sample; a near-threshold miss only costs speed
+    def hotKeys(minRows: Long, chunksOf: Long => Long): Map[Seq[Any], Int] = {
+      val p = math.min(1.0, 1000.0 / math.max(1L, minRows))
+      (if (p < 1) stream.sample(p, 0L) else stream)
+        .groupBy(keys.map(col): _*).agg(count(lit(1)).as("__n"))
+        .filter(col("__n") >= math.max(1.0, minRows * p)).collect()
+        .map(r => r.toSeq.init ->
+          math.max(2L, chunksOf((r.getLong(keys.size) / p).toLong)).toInt).toMap
+    }
+    val (by, hot): (Seq[String], Map[Seq[Any], Int]) = chunking match {
+      case Chunking.Auto =>
+        val threshold = conf.getConf(SQLConf.SKEW_JOIN_SKEWED_PARTITION_THRESHOLD)
+        val chunkBytes = conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+        // an input estimated below the threshold holds no key above it.
+        // The analyzed plan's statistics run no job and, unlike the
+        // optimized plan's, no second optimizer pass over the stream
+        if (!conf.getConf(SQLConf.SKEW_JOIN_ENABLED) ||
+          stream.queryExecution.analyzed.stats.sizeInBytes < threshold) (keys, Map.empty)
+        else (keys, hotKeys(threshold / rowBytes, n => ceilDiv(n * rowBytes, chunkBytes)))
+      case Chunking.HotKeys(minRows) => (keys, hotKeys(minRows, n => ceilDiv(n, minRows)))
+      case Chunking.EveryKey(chunks) => (Nil, Map(Seq.empty[Any] -> math.max(2, chunks)))
+    }
+    if (hot.isEmpty) (by, Nil)
+    else {
+      // one quantile grid fine enough for the most-split key; a key with
+      // c chunks takes every (grid / c)-th point
+      val grid = hot.values.max
+      val keyType = StructType(by.map(stream.schema(_)))
+      val rows =
+        if (by.isEmpty) stream
+        else stream.join(broadcast(stream.sparkSession.createDataFrame(
+          hot.keys.toSeq.map(Row.fromSeq).asJava, keyType)), by, "left_semi")
+      val bounds = rows.groupBy(by.map(col): _*)
+        .agg(percentile_approx(col("__t"),
+          lit((1 until grid).map(_.toDouble / grid).toArray), lit(10000)).as("__q"))
+        .filter(col("__q").isNotNull).collect().toSeq.map { r =>
+          val key = r.toSeq.init
+          val c = hot(key)
+          val q = r.getSeq[Any](by.size)
+          Row.fromSeq(key :+ (1 until c).map(j => q(j * grid / c - 1)).distinct)
+        }
+      (by, bounds)
+    }
+  }
+
+  /** Tag every merge row with its `__chunk`: the number of its key's chunk
+    * bounds at or before its `__t` (0 for a key that is not split), so rows
+    * at one `__t` share a chunk and chunks follow the axis.
+    */
+  private def chunked(stream: DataFrame, by: Seq[String], bounds: Seq[Row]): DataFrame = {
+    val schema = StructType(by.map(stream.schema(_)))
+      .add(StructField("__bounds", ArrayType(stream.schema("__t").dataType)))
+    val b = broadcast(stream.sparkSession.createDataFrame(bounds.asJava, schema))
+    val tagged = if (by.isEmpty) stream.crossJoin(b) else stream.join(b, by, "left")
+    tagged.withColumn("__chunk",
+      when(col("__bounds").isNull, lit(0))
+        .otherwise(size(filter(col("__bounds"), t => t <= col("__t")))))
+      .drop("__bounds")
+  }
+
+  /** Seed each `(key, __chunk)` with one carried feature row per view: the
+    * view's winner over all of the key's earlier chunks, with its own `__t`,
+    * payload and ords. Its `__t` lies in an earlier chunk, so it sorts
+    * before every row of its chunk. The winner order is the kernel's:
+    * (ts, ords) — `__t` is the ts outside created-filter mode — or the
+    * view's created-filter order struct.
+    */
+  private def withCarry(stream: DataFrame, keys: Seq[String], infos: Seq[ViewCols]): DataFrame = {
+    val part = keys :+ "__chunk"
+    def mine(i: Int): Seq[String] =
+      Seq("__t", s"__payload_$i") ++ (infos(i).ords ++ infos(i).ordStruct).map(_._1)
+    def order(i: Int): Column = infos(i).ordStruct match {
+      case Some((name, _, _)) => col(name)
+      case None => when(col(s"__payload_$i").isNotNull,
+        struct((col("__t") +: infos(i).ords.map(o => col(o._1))): _*))
+    }
+    val winners = infos.indices.map { i =>
+      max_by(struct(order(i).as("o"), struct(mine(i).map(col): _*).as("r")), order(i))
+        .as(s"__w_$i")
+    }
+    val perChunk = stream.groupBy(part.map(col): _*).agg(winners.head, winners.tail: _*)
+    val earlier = Window.partitionBy(keys.map(col): _*).orderBy(col("__chunk"))
+      .rangeBetween(Window.unboundedPreceding, -1)
+    val carried = perChunk.select(part.map(col) ++ infos.indices.map(i =>
+      max_by(col(s"__w_$i"), col(s"__w_$i.o")).over(earlier).as(s"__c_$i")): _*)
+    infos.indices.foldLeft(stream) { (acc, i) =>
+      acc.unionByName(carried.filter(col(s"__c_$i").isNotNull).select(
+        stream.columns.toSeq.map { c =>
+          if (part.contains(c)) col(c)
+          else if (c == "__p") lit(0).as(c)
+          else if (mine(i).contains(c)) col(s"__c_$i.r.$c").as(c)
+          else lit(null).cast(stream.schema(c).dataType).as(c)
+        }: _*))
+    }
+  }
+
   /** The merge kernel's time-axis type for `view` against an entity ts of
     * type `entityTsType`: the entity type, except that a DateType entity ts
     * promotes to the view's feature-ts type (see [[enrichMergeFused]]).
@@ -309,116 +473,9 @@ object PointInTimeJoin {
       case t => t
     }
 
-  /** The bucketed range-join path (see object doc, strategy 2). */
-  def enrichJoin(
-      entityDf: DataFrame,
-      view: FeatureView,
-      entityTsCol: String = "event_ts",
-      fullFeatureNames: Boolean = false,
-      filterByCreatedTs: Boolean = false,
-      saltBuckets: Int = 0,
-      hotKeyRowThreshold: Long = 5000000L,
-      precomputedBounds: Option[Row] = None
-  ): DataFrame = {
-    val keys = view.joinKeys
-    val feats = view.resolvedFeatures
-    val src = prepare(entityDf, view, entityTsCol, precomputedBounds)
-    // J2: deduplicated probe side — one row per (keys, event_ts).
-    val probeRaw = entityDf.select((keys :+ entityTsCol).map(col): _*)
-      .dropDuplicates(keys :+ entityTsCol)
-
-    // Hot-conversation salting (north rule; graft.skew.Salting): split keys
-    // with > hotKeyRowThreshold source rows into saltBuckets sub-keys. The
-    // feature side spreads by xxhash64(ts); the probe side replicates per
-    // salt. The groupBy below re-merges across salts (max_by is
-    // order-associative), so results are byte-identical to the unsalted
-    // plan — SaltingSpec asserts this.
-    val saltKeys = if (saltBuckets > 1 && keys.nonEmpty) Seq("__salt") else Nil
-    val (srcS, probeS) =
-      if (saltKeys.nonEmpty) {
-        val hot = graft.skew.Salting.detectHotKeys(
-          src.select(keys.map(col): _*), keys, hotKeyRowThreshold, saltBuckets)
-        (graft.skew.Salting.saltLarge(src, hot, keys, col(view.tsCol)),
-          graft.skew.Salting.saltSmall(probeRaw, hot, keys))
-      } else (src, probeRaw)
-
-    // Bounded-fan-out range join (the classic time-bucketing rewrite — OSS
-    // Spark has no range-join optimization): with a TTL, add a coarse
-    // time-bucket equi-key — feature rows at floor(ts/ttl), probe rows
-    // exploded over the 2 buckets covering [event_ts − ttl, event_ts].
-    // SMJ/HashJoin then pairs only rows within 2·ttl of each other instead
-    // of EVERY (turn, probe) pair of a conversation. Theta conditions below
-    // keep the semantics exact.
-    val bucketKeys = if (view.ttlSeconds > 0) Seq("__tb") else Nil
-    val bucketUs = view.ttlSeconds * 1000000L
-    val (srcB, probeB) =
-      if (bucketKeys.nonEmpty) {
-        (srcS.withColumn("__tb",
-          floor(unix_micros(col(view.tsCol).cast("timestamp")) / bucketUs)),
-          probeS.withColumn("__tb",
-            explode(sequence(
-              floor((unix_micros(col(entityTsCol).cast("timestamp")) - bucketUs) / bucketUs),
-              floor(unix_micros(col(entityTsCol).cast("timestamp")) / bucketUs)))))
-      } else (srcS, probeS)
-
-    val probe =
-      if (saltKeys.isEmpty && bucketKeys.isEmpty &&
-        shouldBroadcast(entityDf))
-        broadcast(probeB)
-      else probeB
-
-    // J3: equi+theta range join. The theta condition seeds the fold — a
-    // keyless view with no TTL has no equi keys at all and must still
-    // plan (an empty .reduce would throw).
-    val fts = col("__src." + view.tsCol)
-    val ets = col("__probe." + entityTsCol)
-    var cond: Column = (keys ++ saltKeys ++ bucketKeys)
-      .map(k => col("__src." + k) === col("__probe." + k))
-      .foldLeft(fts <= ets)(_ && _)
-    if (view.ttlSeconds > 0)
-      cond = cond && (fts >= ets - expr(s"INTERVAL ${view.ttlSeconds} SECONDS"))
-    view.createdTsCol.foreach { c =>
-      if (filterByCreatedTs) cond = cond && (col("__src." + c) <= ets)
-    }
-    val joined = srcB.alias("__src").join(probe.alias("__probe"), cond, "inner")
-
-    // J4+J5+J6 fused: latest-row selection as a single partial-aggregable
-    // max_by instead of row_number + join-back. Ordering: (ts desc, created
-    // desc nulls-last, tiebreaks desc) — nulls must LOSE ties, matching
-    // dask's na_position="first", keep="last" (dask.py:1240-1268), hence the
-    // coalesce to -infinity.
-    val minTs = lit("1900-01-01 00:00:00").cast("timestamp")
-    val ordCols: Seq[Column] =
-      fts +:
-        (view.createdTsCol.map(c => coalesce(col("__src." + c), minTs)).toSeq ++
-          view.tieBreakCols.map(c => col("__src." + c)))
-    val ord = struct(ordCols: _*)
-    val payload = struct(feats.map(f => col("__src." + f).as(f)): _*)
-    val latest = joined
-      .groupBy((keys.map(k => col("__probe." + k)) :+ ets): _*)
-      .agg(max_by(payload, ord).as("__best"))
-      .select(
-        keys.map(col) ++ Seq(col(entityTsCol)) ++
-          feats.map(f => col("__best." + f).as(outName(view, f, fullFeatureNames))): _*)
-
-    // J7: final assembly — every entity row and column survives.
-    entityDf.join(latest, keys :+ entityTsCol, "left")
-  }
-
   private[graft] def outName(view: FeatureView, feat: String, full: Boolean): String =
     if (full) s"${view.name}__$feat" else feat
 
   /** A column name as an identifier: dots and backticks stay literal. */
   private[graft] def quote(c: String): String = "`" + c.replace("`", "``") + "`"
-
-  private def shouldBroadcast(df: DataFrame): Boolean = {
-    // Cheap static heuristic: auto-broadcast only when the plan's row-count
-    // estimate is known and small; otherwise the join still benefits from
-    // AQE's runtime broadcast.
-    try {
-      val stats = df.queryExecution.optimizedPlan.stats
-      stats.rowCount.exists(_ <= BigInt(DefaultBroadcastRows)) ||
-      stats.sizeInBytes <= 64L * 1024 * 1024
-    } catch { case _: Throwable => false }
-  }
 }

@@ -6,7 +6,6 @@ import org.apache.spark.sql.types.{DateType, StringType}
 import graft.engine.Backfill
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 
 /** Resumable-backfill properties (north rule): kill mid-run → resume skips
@@ -15,7 +14,7 @@ import scala.jdk.CollectionConverters._
   */
 class BackfillSpec extends SparkTestBase {
 
-  private val tmp = Files.createTempDirectory("graft-backfill").toString
+  private val tmp = tempDir("graft-backfill")
   private val srcDir = s"$tmp/src"
 
   private lazy val source = {
@@ -295,7 +294,7 @@ class BackfillSpec extends SparkTestBase {
   test("iceberg e2e: table scan + snapshot pinning (skips without runtime)") {
     assume(graft.sources.IcebergSource.available(spark),
       "iceberg-spark-runtime not on classpath — explicit tested skip")
-    val warehouse = Files.createTempDirectory("graft_iceberg").toString
+    val warehouse = tempDir("graft_iceberg")
     spark.conf.set("spark.sql.catalog.graft_ice", "org.apache.iceberg.spark.SparkCatalog")
     spark.conf.set("spark.sql.catalog.graft_ice.type", "hadoop")
     spark.conf.set("spark.sql.catalog.graft_ice.warehouse", warehouse)
@@ -377,37 +376,6 @@ class BackfillSpec extends SparkTestBase {
         .filterNot(l => timingFields.exists(t => l.contains(s"\"$t\""))).mkString("\n")
     }.toMap
     finally stream.close()
-  }
-
-  /** Spark jobs started while `body` runs, as a listener counts them. */
-  private def jobsStartedBy(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val (before, after) = ("backfill-spec-before", "backfill-spec-after")
-    val jobs = new AtomicInteger(-1)
-    val drained = new CountDownLatch(1)
-    // the bus delivers events in order, and late events of earlier jobs
-    // too: count only the jobs between the two marker jobs
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.job.description")).orNull match {
-          case `before` => jobs.set(0)
-          case `after` => drained.countDown()
-          case _ => if (jobs.get >= 0) jobs.incrementAndGet()
-        }
-    }
-    def marker(name: String): Unit = {
-      sc.setJobDescription(name)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-    }
-    sc.addSparkListener(listener)
-    try {
-      marker(before)
-      body
-      marker(after)
-      assert(drained.await(30, TimeUnit.SECONDS), "listener bus did not drain")
-      jobs.get
-    } finally sc.removeSparkListener(listener)
   }
 
   test("a null partition value fails loudly, on the file-index and the job listing") {

@@ -47,7 +47,7 @@ class CachePolicySpec extends SparkTestBase {
   }
 
   test("dedup chain is byte-identical under the reliable-checkpoint policy") {
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
+    val ckpt = tempDir("graft_ckpt")
     spark.sparkContext.setCheckpointDir(ckpt)
     val (clustersLocal, keptLocal) = runChain()
     val (clustersRel, keptRel) = withPolicy("reliable")(runChain())

@@ -168,7 +168,7 @@ class CorpusHygieneSpec extends SparkTestBase {
 
   test("bloom prefilter is a narrow map over the train scan (no pre-filter exchange)") {
     // parquet-backed so Catalyst can't fold the corpus into a LocalTableScan
-    val dir = java.nio.file.Files.createTempDirectory("graft_bloomplan").toString
+    val dir = tempDir("graft_bloomplan")
     (0L until 50L).map(i => (i, s"w$i x$i y$i z$i common tail words here"))
       .toDF("doc_id", "text").write.mode("overwrite").parquet(dir)
     val docs = spark.read.parquet(dir)

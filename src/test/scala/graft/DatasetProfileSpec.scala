@@ -50,7 +50,7 @@ class DatasetProfileSpec extends SparkTestBase {
   }
 
   test("saveWithProfile round trip validates clean; drifted data fails loudly") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_profile").toString
+    val dir = tempDir("graft_profile")
     val path = s"$dir/ds"
     DatasetProfile.saveWithProfile(data, path, exact = true)
     val ref = DatasetProfile.loadProfile(spark, path)

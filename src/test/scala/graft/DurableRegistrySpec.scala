@@ -14,10 +14,10 @@ class DurableRegistrySpec extends SparkTestBase {
   import spark.implicits._
 
   private def tmpReg(): String =
-    java.nio.file.Files.createTempDirectory("graft_regspec").toString + "/registry.json"
+    tempDir("graft_regspec") + "/registry.json"
 
   private def writeSource(): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_regsrc").toString + "/src"
+    val dir = tempDir("graft_regsrc") + "/src"
     Seq(
       ("a", java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), 1L, "x"),
       ("a", java.sql.Timestamp.valueOf("2024-01-02 00:00:00"), 2L, "y"),
@@ -177,7 +177,7 @@ class DurableRegistrySpec extends SparkTestBase {
   test("saved-dataset + validation references persist and resolve through the file") {
     import graft.engine.{SavedDatasetSpec, ValidationSpec}
     val path = tmpReg()
-    val base = java.nio.file.Files.createTempDirectory("graft_sdspec").toString
+    val base = tempDir("graft_sdspec")
     val data = Seq(("a", 1.0), ("b", 2.0), ("c", 3.0)).toDF("k", "v")
     stats.DatasetProfile.saveWithProfile(data, s"$base/sd", Seq("v"), exact = true)
     DurableRegistry.apply(path,

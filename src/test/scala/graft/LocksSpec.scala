@@ -1,6 +1,5 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
 import graft.engine.Locks
 
 /** The cross-process lock primitive under same-JVM contention.
@@ -17,7 +16,7 @@ import graft.engine.Locks
   * same lock family as Java's FileLock on Linux), so the hazard itself is
   * what's asserted, not an implementation detail.
   */
-class LocksSpec extends AnyFunSuite {
+class LocksSpec extends SparkTestBase {
 
   private def python3: Option[String] =
     Seq("/usr/bin/python3", "/usr/local/bin/python3").find(p => new java.io.File(p).canExecute)
@@ -46,7 +45,7 @@ class LocksSpec extends AnyFunSuite {
   test("a failed same-JVM try-claim must not void a sibling thread's held OS lock") {
     val py = python3
     assume(py.isDefined, "python3 not available for the cross-process probe")
-    val dir = java.nio.file.Files.createTempDirectory("graft_locks").toString
+    val dir = tempDir("graft_locks")
     val target = s"$dir/manifest.json"
     val lockFile = s"$target.lock"
 

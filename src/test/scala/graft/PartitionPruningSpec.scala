@@ -9,7 +9,7 @@ import graft.pit.PointInTimeJoin
   */
 class PartitionPruningSpec extends SparkTestBase {
 
-  private val tmp = Files.createTempDirectory("graft-prune").toString
+  private val tmp = tempDir("graft-prune")
 
   private lazy val src = {
     Transcripts.synthetic(spark, nConvs = 40, turnsPerConv = 15, seed = 21L)

@@ -34,7 +34,7 @@ class PlanContractSpec extends SparkTestBase {
   // into a precomputed LocalTableScan, which would make every contract here
   // pass vacuously — a FileScan forces the real distributed plan
   private lazy val docs: DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_plandocs").toString
+    val dir = tempDir("graft_plandocs")
     (1 to 200).map { i =>
       (i.toLong, s"some sample document text number $i with shared words " * 3)
     }.toDF("doc_id", "text").write.mode("overwrite").parquet(dir)
@@ -202,7 +202,7 @@ class PlanContractSpec extends SparkTestBase {
     df.queryExecution.executedPlan.toString.linesIterator.count(_.contains(node))
 
   private lazy val transcript: DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_plantranscript").toString
+    val dir = tempDir("graft_plantranscript")
     Transcripts.synthetic(spark, nConvs = 20, turnsPerConv = 12, seed = 5L)
       .withColumn("ds", date_format(col("ts"), "yyyy-MM-dd"))
       .write.partitionBy("ds").mode("overwrite").parquet(dir)
@@ -239,7 +239,7 @@ class PlanContractSpec extends SparkTestBase {
   }
 
   test("TTL-derived scan bounds push into the parquet source scan") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_plancontract").toString
+    val dir = tempDir("graft_plancontract")
     (1 to 500).map { i =>
       (s"conv${i % 20}", new Timestamp(1700000000000L + i * 60000L), i)
     }.toDF("conv_id", "ts", "turn_idx").write.mode("overwrite").parquet(dir)

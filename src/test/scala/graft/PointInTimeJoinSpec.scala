@@ -91,10 +91,10 @@ class PointInTimeJoinSpec extends SparkTestBase {
       .toDF("conv_id", "event_ts")
     val v = FeatureView("dv", src, Seq("conv_id"), "ts", None, 0L,
       features = Seq("v"), tieBreakCols = Seq("v"))
-    // both physical strategies must agree: the date promotes to midnight,
-    // feature timestamps keep their time-of-day
+    // the merge kernel and the range-join reference must agree: the date
+    // promotes to midnight, feature timestamps keep their time-of-day
     val m = PointInTimeJoin.enrich(entity, v)
-    val j = PointInTimeJoin.enrichJoin(entity, v)
+    val j = RangeJoinReference.enrich(entity, v)
     assert(m.select("v").as[Int].head() == 42, "merge path leaked a future row")
     assert(j.select("v").as[Int].head() == 42)
   }
@@ -221,7 +221,7 @@ class PointInTimeJoinSpec extends SparkTestBase {
     val fused = PointInTimeJoin.enrichMergeFused(dateEntity, views,
       fullFeatureNames = true)
     val joined = views.foldLeft(dateEntity)((acc, v) =>
-      PointInTimeJoin.enrichJoin(acc, v, fullFeatureNames = true))
+      RangeJoinReference.enrich(acc, v, fullFeatureNames = true))
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("conv_id", "event_ts", "label", "turn_stats__turn_idx",
         "quality__score").collect().map(_.toSeq.map(String.valueOf).mkString("|"))
@@ -234,7 +234,7 @@ class PointInTimeJoinSpec extends SparkTestBase {
     val endOfDay = dateEntity.withColumn("event_ts",
       col("event_ts").cast("timestamp") + expr("INTERVAL 86399 SECONDS"))
     val leaky = views.foldLeft(endOfDay)((acc, v) =>
-      PointInTimeJoin.enrichJoin(acc, v, fullFeatureNames = true))
+      RangeJoinReference.enrich(acc, v, fullFeatureNames = true))
     for (f <- Seq("turn_stats__turn_idx", "quality__score"))
       assert(fused.select("conv_id", "label", f).except(
         leaky.select("conv_id", "label", f)).count() > 0,
@@ -288,8 +288,9 @@ class PointInTimeJoinSpec extends SparkTestBase {
   test("NULL join keys behave like SQL on every physical strategy") {
     // a NULL-key source row matches nothing; a NULL-key probe row comes
     // back with null features — and the slim merge, non-slim merge, and
-    // salted join must all agree (the merge's window partitioning would
-    // naively group NULLs together and attach features the join never would)
+    // every-key chunked merge must all agree (the merge's window
+    // partitioning would naively group NULLs together and attach features
+    // a SQL join never would)
     val src = Seq[(String, Timestamp, Long)](
       ("c1", ts("2026-01-01 01:00:00"), 1L),
       (null, ts("2026-01-01 01:00:00"), 99L)
@@ -305,9 +306,9 @@ class PointInTimeJoinSpec extends SparkTestBase {
     val slim = values(PointInTimeJoin.enrich(ents, v, "event_ts"))
     val nonSlim = values(PointInTimeJoin.enrich(
       ents.withColumn("extra", lit(1)), v, "event_ts"))
-    val salted = values(PointInTimeJoin.enrichJoin(ents, v, "event_ts",
-      saltBuckets = 4))
-    assert(slim == nonSlim && slim == salted, s"$slim vs $nonSlim vs $salted")
+    val chunked = values(PointInTimeJoin.enrichMergeFused(ents, Seq(v), "event_ts",
+      chunking = PointInTimeJoin.Chunking.EveryKey(4)))
+    assert(slim == nonSlim && slim == chunked, s"$slim vs $nonSlim vs $chunked")
     assert(slim.collect { case (null, f) => f } == Seq(null),
       "a NULL-key probe must get null features, never the null-key source row")
     assert(slim.collect { case ("c1", f) => f } == Seq(1L))

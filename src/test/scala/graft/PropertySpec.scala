@@ -83,9 +83,78 @@ class PropertySpec extends SparkTestBase {
         features = Seq("v"), tieBreakCols = Seq("tb"))
       for (cf <- Seq(false, true)) {
         val m = PointInTimeJoin.enrich(entityDf, view, filterByCreatedTs = cf)
-        val j = PointInTimeJoin.enrichJoin(entityDf, view, filterByCreatedTs = cf)
+        val j = RangeJoinReference.enrich(entityDf, view, filterByCreatedTs = cf)
         assert(m.except(j).isEmpty && j.except(m).isEmpty,
           s"physical paths diverge at ttl=$ttl createdFilter=$cf")
+      }
+    }
+  }
+
+  // a coarse 5-minute grid puts feature rows and probes at the same ts,
+  // chunk bounds included (bounds are quantiles of the merge axis, so they
+  // are row times); no feature row falls in [3000, 4800) s, where a third
+  // of the probes land, so some chunks hold probes only
+  private val featOff: Gen[Long] =
+    Gen.choose(0L, 18L).map(i => (if (i < 10) i else i + 6) * 300L)
+  private val chunkTableGen: Gen[(List[Rec], List[Rec], List[(String, Long)])] = for {
+    recs <- Gen.listOfN(40, for {
+      key <- Gen.frequency(6 -> "k1", 2 -> "k2", 2 -> "k3")
+      ts <- featOff
+      created <- Gen.option(featOff)
+      v <- Gen.choose(-100, 100)
+    } yield Rec(key, new Timestamp(base + ts * 1000),
+      created.map(c => new Timestamp(base + c * 1000)), 0L, v.toDouble))
+    recs2 <- Gen.listOfN(30, for {
+      key <- Gen.oneOf("k1", "k2", "k3")
+      ts <- featOff
+      v <- Gen.choose(-100, 100)
+    } yield Rec(key, new Timestamp(base + ts * 1000), None, 0L, v.toDouble))
+    probes <- Gen.listOfN(30, for {
+      k <- Gen.frequency(4 -> "k1", 2 -> "k2", 2 -> "k3", 1 -> "k_absent")
+      off <- Gen.frequency(2 -> Gen.choose(-2L, 26L), 1 -> Gen.choose(10L, 15L))
+    } yield (k, off * 300L))
+  } yield (recs, recs2, probes)
+
+  test("property: chunked merge equals the plain merge byte for byte") {
+    import PointInTimeJoin.Chunking
+    def frame(recs: List[Rec]) = recs.zipWithIndex
+      .map { case (r, i) => (r.key, r.ts, r.created.orNull, i.toLong, r.value) }
+      .toDF("k", "ts", "created_ts", "tb", "v")
+    for ((ttl, seed) <- Seq(0L, 600L, 3600L).zip(Seq(0x5EEDL, 0xF00DL, 0xD1CEL))) {
+      val (recs, recs2, probes) = samples(chunkTableGen, 1, seed).head
+      val entityDf = probes.zipWithIndex
+        .map { case ((k, off), i) => (k, new Timestamp(base + off * 1000), i) }
+        .toDF("k", "event_ts", "row_i")
+      val a = FeatureView("a", frame(recs), Seq("k"), "ts", Some("created_ts"), ttl,
+        features = Seq("v"), tieBreakCols = Seq("tb"))
+      val b = FeatureView("b", frame(recs2).drop("created_ts"), Seq("k"), "ts", None,
+        1800L, features = Seq("v"), tieBreakCols = Seq("tb"))
+      val keyless = a.copy(name = "g", source = frame(recs).drop("k"), joinKeys = Nil)
+      // the fixture bites: a chunk bound where a feature row and a probe
+      // meet, and a known key's probe in a chunk with no row of that key
+      val bounds = PointInTimeJoin.splitKeys(entityDf, Seq(a),
+        chunking = Chunking.EveryKey(5)).head.getSeq[Timestamp](0)
+      def chunkOf(t: Timestamp) = bounds.count(!_.after(t))
+      val probeTs = probes.map { case (k, off) => (k, new Timestamp(base + off * 1000)) }
+      assert(bounds.exists(b => recs.exists(_.ts == b) && probeTs.exists(_._2 == b)),
+        s"fixture too weak at ttl=$ttl: no feature row and probe on a chunk bound")
+      assert(probeTs.exists { case (k, t) => k != "k_absent" &&
+        !recs.exists(r => r.key == k && chunkOf(r.ts) == chunkOf(t)) },
+        s"fixture too weak at ttl=$ttl: every probe's chunk holds its key's rows")
+      for {
+        (shape, views) <- Seq("one view" -> Seq(a), "two fused views" -> Seq(a, b),
+          "keyless view" -> Seq(keyless))
+        cf <- Seq(false, true)
+      } {
+        val plain = PointInTimeJoin.enrichMergeFused(entityDf, views,
+          fullFeatureNames = true, filterByCreatedTs = cf)
+        for (mode <- Seq(Chunking.HotKeys(12L), Chunking.EveryKey(5))) {
+          val chunked = PointInTimeJoin.enrichMergeFused(entityDf, views,
+            fullFeatureNames = true, filterByCreatedTs = cf, chunking = mode)
+          val at = s"$shape, ttl=$ttl, createdFilter=$cf, $mode"
+          assert(chunked.schema == plain.schema, at)
+          assert(chunked.except(plain).isEmpty && plain.except(chunked).isEmpty, at)
+        }
       }
     }
   }

@@ -13,7 +13,7 @@ object SinksSpec {
 class SinksSpec extends SparkTestBase {
   import spark.implicits._
 
-  private val tmp = Files.createTempDirectory("graft-sinks").toString
+  private val tmp = tempDir("graft-sinks")
 
   test("append sink aligns, casts, and json-serializes structs") {
     val df = Seq((1, 2L, "x")).toDF("a", "b", "c")
@@ -131,7 +131,7 @@ class SinksSpec extends SparkTestBase {
   test("iceberg e2e: appendIceberg aligns columns and advances snapshots (skips without runtime)") {
     assume(graft.sources.IcebergSource.available(spark),
       "iceberg-spark-runtime not on classpath — explicit tested skip")
-    val warehouse = Files.createTempDirectory("graft_ice_sink").toString
+    val warehouse = tempDir("graft_ice_sink")
     spark.conf.set("spark.sql.catalog.graft_ices", "org.apache.iceberg.spark.SparkCatalog")
     spark.conf.set("spark.sql.catalog.graft_ices.type", "hadoop")
     spark.conf.set("spark.sql.catalog.graft_ices.warehouse", warehouse)

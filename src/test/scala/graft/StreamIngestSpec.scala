@@ -12,7 +12,7 @@ import graft.streaming.StreamIngest
 class StreamIngestSpec extends SparkTestBase {
   import spark.implicits._
 
-  private val tmp = Files.createTempDirectory("graft-stream").toString
+  private val tmp = tempDir("graft-stream")
   private def ts(s: String) = Timestamp.valueOf(s)
   private val created = ts("2026-02-01 00:00:00")
 

@@ -39,7 +39,7 @@ class TextEqualitySpec extends SparkTestBase {
   }
 
   test("backfill preserves per-turn text under stable (conv_id, turn_idx) order") {
-    val tmp = Files.createTempDirectory("graft-texteq").toString
+    val tmp = tempDir("graft-texteq")
     ds.toDF().withColumn("ds", date_format(col("ts"), "yyyy-MM-dd"))
       .write.partitionBy("ds").mode("overwrite").parquet(s"$tmp/src")
     val src = spark.read.option("basePath", s"$tmp/src").parquet(s"$tmp/src")
