@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.json4s.JDecimal
+import scala.collection.immutable.ListMap
 
 /** Benchmark main (driver contract). Prints ONE JSON line.
   *
@@ -22,6 +24,11 @@ object Bench {
     body
     (System.nanoTime() - t0) / 1e9
   }
+
+  /** `x` at a fixed number of decimal places, which the record keeps
+    * (a plain `BigDecimal` would be written as a double: 0.300 as 0.3). */
+  private def fixed(x: Double, places: Int): JDecimal =
+    JDecimal(BigDecimal(x).setScale(places, BigDecimal.RoundingMode.HALF_UP))
 
   /** Force FULL execution. `.count()` lets Catalyst eliminate the final
     * left join (aggregate keys are provably unique) and everything under
@@ -60,7 +67,7 @@ object Bench {
     * winners, a (key, chunk) window). Results are byte-identical to the
     * plain kernel (PropertySpec / ChunkingSpec pin this at test scale).
     */
-  private def retrievalSaltedJoin(spark: SparkSession, path: String): DataFrame = {
+  private def retrievalEveryKeyChunked(spark: SparkSession, path: String): DataFrame = {
     val (entity, view) = scaleInputs(spark, path)
     pit.PointInTimeJoin.enrichMergeFused(entity, Seq(view),
       chunking = pit.PointInTimeJoin.Chunking.EveryKey(8))
@@ -222,7 +229,7 @@ object Bench {
     // a 2-core session is minutes, and unbounded floor-hunting must not
     // blow the round's bench budget.
     def floorHunt(job: (SparkSession, String) => DataFrame, path: String,
-        jobTurns: Long, budgetMin: Long, reps: Int): String = {
+        jobTurns: Long, budgetMin: Long, reps: Int): ListMap[String, Any] = {
       val order = Seq(nLarge, nSmall, nLarge, nSmall, nLarge, nSmall, nLarge,
         nSmall, nLarge, nSmall)
       val mins = scala.collection.mutable.Map[Int, Double]()
@@ -231,7 +238,7 @@ object Bench {
       // record: drift windows are then VISIBLE in the artifact (a bad
       // window at one level shows up as an outlier round) instead of
       // silently shaping a single number
-      val rounds = scala.collection.mutable.ArrayBuffer[(Int, Double, Double)]()
+      val rounds = scala.collection.mutable.ArrayBuffer[ListMap[String, Any]]()
       var round = 0
       var sinceImprovement = 0
       val deadline = System.currentTimeMillis() + budgetMin * 60000L
@@ -242,7 +249,7 @@ object Bench {
             System.currentTimeMillis() < deadline))) {
         val c = order(round)
         val (t, task) = sessionMin(c, reps, job, path)
-        rounds += ((c, t, task))
+        rounds += ListMap("cores" -> c, "sec" -> fixed(t, 2), "task_sec" -> fixed(task, 1))
         taskSecs(c) = math.min(taskSecs.getOrElse(c, Double.MaxValue), task)
         if (t < mins.getOrElse(c, Double.MaxValue)) {
           mins(c) = t; sinceImprovement = 0
@@ -258,34 +265,28 @@ object Bench {
       // 4N relative to N (≈1 ⇒ zero parallelization overhead; steal-immune
       // complement to the wall-clock efficiency on this noisy VM)
       val workRatio = taskSecs(nLarge) / taskSecs(nSmall)
-      val roundsJson = rounds.map { case (c, t, task) =>
-        f"""{"cores":$c,"sec":$t%.2f,"task_sec":$task%.1f}"""
-      }.mkString("[", ",", "]")
-      s"""{"cores_n":$nSmall,"cores_4n":$nLarge,"turns":$jobTurns,""" +
-        f""""sec_n":$secN%.2f,"sec_4n":$sec4N%.2f,""" +
-        f""""turns_per_sec_n":$thrN%.1f,"turns_per_sec_4n":$thr4N%.1f,""" +
-        f""""task_sec_n":${taskSecs(nSmall)}%.1f,"task_sec_4n":${taskSecs(nLarge)}%.1f,""" +
-        f""""work_ratio":$workRatio%.3f,"efficiency":$efficiency%.3f,""" +
-        s""""rounds":$roundsJson}"""
+      ListMap("cores_n" -> nSmall, "cores_4n" -> nLarge, "turns" -> jobTurns,
+        "sec_n" -> fixed(secN, 2), "sec_4n" -> fixed(sec4N, 2),
+        "turns_per_sec_n" -> fixed(thrN, 1), "turns_per_sec_4n" -> fixed(thr4N, 1),
+        "task_sec_n" -> fixed(taskSecs(nSmall), 1), "task_sec_4n" -> fixed(taskSecs(nLarge), 1),
+        "work_ratio" -> fixed(workRatio, 3), "efficiency" -> fixed(efficiency, 3),
+        "rounds" -> rounds.toList)
     }
-    val scaling = if (!blocks("scaling")) "null" else
+    val scaling = if (!blocks("scaling")) null else
       floorHunt(retrieval, scalePath, turns,
         sys.env.getOrElse("SPARK_GRAFT_SCALE_BUDGET_MIN", "25").toLong, reps = 3)
     // second block: the every-key chunked kernel (skew machinery) on the
     // quarter-size table — evidences that the split path, not just the
     // plain kernel, scales N→4N with work_ratio ≈ 1
-    val scalingJoin = if (!blocks("scaling_join")) "null" else
-      floorHunt(retrievalSaltedJoin, joinScalePath, joinTurns,
+    val scalingJoin = if (!blocks("scaling_join")) null else
+      floorHunt(retrievalEveryKeyChunked, joinScalePath, joinTurns,
         sys.env.getOrElse("SPARK_GRAFT_SCALE_JOIN_BUDGET_MIN", "12").toLong, reps = 2)
 
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
-      .mkString("{", ",", "}")
-    val total = results.map(_._2).sum
-    val record =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,""" +
-        s""""errors":${JsonCodec.compact(errors)},"sf":${JsonCodec.compact(sfDir)},""" +
-        s""""flagship":"pit_latest_turn",""" +
-        s""""scaling":$scaling,"scaling_join":$scalingJoin}"""
+    val record = JsonCodec.compact(ListMap(
+      "metric" -> "total", "value" -> fixed(results.map(_._2).sum, 3), "unit" -> "sec",
+      "queries" -> ListMap(results.map { case (k, v) => k -> fixed(v, 3) }: _*),
+      "errors" -> errors, "sf" -> sfDir, "flagship" -> "pit_latest_turn",
+      "scaling" -> scaling, "scaling_join" -> scalingJoin))
     println(record)
     // the record also goes to a FILE: the driver captures the process log
     // TAIL, which has truncated per-query timings out of past rounds'

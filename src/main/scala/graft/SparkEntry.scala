@@ -1,5 +1,6 @@
 package graft
 
+import java.nio.file.{Files, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.agg.{Aggregations, Tiling}
@@ -19,6 +20,34 @@ object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("pit_latest_turn")(spark, "/root/testdata/sf0.001")
+
+  /** Runs `body` with the given Spark SQL confs set on `spark` (session
+    * wide), then puts back each key's earlier value or unsets it, also when
+    * `body` throws.
+    */
+  private[graft] def withSqlConf[A](spark: SparkSession, confs: Map[String, String])(body: => A): A = {
+    val saved = confs.keys.map(k => k -> spark.conf.getAll.get(k))
+    try { confs.foreach { case (k, v) => spark.conf.set(k, v) }; body }
+    finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
+  /** Skew settings under which the automatic hot-key policy splits about
+    * half of the conversations at sf0.001 to sf0.1: in the flagship
+    * retrieval (117-byte merge rows) a conversation is hot from ~70 merge
+    * rows and gets chunks of ~35.
+    */
+  private val lowSkewThreshold = Map(
+    "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "8k",
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "4k")
+
+  /** The queries' files go under one directory per JVM, deleted at exit. */
+  private lazy val runDir: Path = {
+    val d = Files.createTempDirectory("graft_run")
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(d.toFile))
+    d
+  }
+
+  private def tempDir(prefix: String): String = Files.createTempDirectory(runDir, prefix).toString
 
   // --- shared view builders -------------------------------------------------
 
@@ -101,20 +130,20 @@ object SparkEntry {
       Historical.getHistoricalFeatures(
         Transcripts.entityFrame(s, dir),
         Seq(turnStatsView(s, dir, ttlSec = 4 * 3600L)))),
-    // Hot-key chunked variant of the same join (north rule skew handling:
-    // conversations with >= 80 merge rows, about half of them, split into
-    // time chunks inside the merge kernel) — must produce identical rows
-    // to pit_latest_turn.
+    // Hot-key chunked variant of the same join (north rule skew handling):
+    // built under lowered skew settings, the automatic policy splits about
+    // half of the conversations into time chunks inside the merge kernel —
+    // must produce identical rows to pit_latest_turn.
     "pit_salted" -> ((s, dir) =>
-      pit.PointInTimeJoin.enrichMergeFused(
+      withSqlConf(s, lowSkewThreshold)(Historical.getHistoricalFeatures(
         Transcripts.entityFrame(s, dir),
-        Seq(turnStatsView(s, dir, ttlSec = 4 * 3600L)),
-        chunking = pit.PointInTimeJoin.Chunking.HotKeys(80L))),
+        Seq(turnStatsView(s, dir, ttlSec = 4 * 3600L))))),
     // North-star zero-temporal-leakage audit (BASELINE.json north rule):
     // the SAME retrieval through three physical paths of the merge kernel
-    // ("merge": plain, "join": every key chunked, "salted": hot keys
-    // chunked), carrying the contributing feature timestamp and emitting
-    // leaked = max_fts > event_ts per output row.
+    // ("merge": plain, "join": every key chunked, "salted": the automatic
+    // hot-key policy under pit_salted's lowered skew settings), carrying the
+    // contributing feature timestamp and emitting leaked = max_fts >
+    // event_ts per output row.
     // The oracle recomputes max_fts and leaked independently, so a leak
     // on ANY path is a hash mismatch — and the all-false leaked
     // column is durable per-row evidence in the correctness artifact.
@@ -127,11 +156,11 @@ object SparkEntry {
           col("turn_ts").as("max_fts"),
           coalesce(col("turn_ts") > col("event_ts"), lit(false)).as("leaked"),
           lit(strategy).as("strategy"))
-      def chunked(c: pit.PointInTimeJoin.Chunking) =
-        pit.PointInTimeJoin.enrichMergeFused(ents, Seq(v), chunking = c)
       audit(pit.PointInTimeJoin.enrich(ents, v), "merge")
-        .unionByName(audit(chunked(pit.PointInTimeJoin.Chunking.EveryKey(8)), "join"))
-        .unionByName(audit(chunked(pit.PointInTimeJoin.Chunking.HotKeys(80L)), "salted"))
+        .unionByName(audit(pit.PointInTimeJoin.enrichMergeFused(ents, Seq(v),
+          chunking = pit.PointInTimeJoin.Chunking.EveryKey(8)), "join"))
+        .unionByName(audit(withSqlConf(s, lowSkewThreshold)(
+          pit.PointInTimeJoin.enrich(ents, v)), "salted"))
     }),
     // No-TTL variant (offline_utils.py:144-147 — ttl 0 = unbounded below).
     "pit_no_ttl" -> ((s, dir) =>
@@ -192,15 +221,15 @@ object SparkEntry {
           convQualityView(s, dir)),
         fullFeatureNames = true, filterByCreatedTs = true)
     }),
-    // Entityless / global view via DUMMY_ENTITY (J9; feature_view.py:95-108).
+    // Entityless / global view as a keyless key group (J9; feature_view.py:95-108).
     "pit_entityless" -> ((s, dir) => {
       val g = s.read.parquet(s"$dir/events.parquet")
         .filter(pmod(col("event_id"), lit(11)) === 0)
         .select(col("ts"), col("value").as("gscore"), col("event_id"))
-      Historical.enrichEntityless(
+      Historical.getHistoricalFeatures(
         Transcripts.entityFrame(s, dir),
-        FeatureView("global_stats", g, Nil, "ts", None, 0L,
-          features = Seq("gscore"), tieBreakCols = Seq("event_id")))
+        Seq(FeatureView("global_stats", g, Nil, "ts", None, 0L,
+          features = Seq("gscore"), tieBreakCols = Seq("event_id"))))
     }),
     // Field-mapping renames applied before the join (P1; utils.py:227-306).
     "pit_field_mapping" -> ((s, dir) => {
@@ -305,8 +334,7 @@ object SparkEntry {
     // registry's oracle exactly.
     "registry_durable" -> ((s, dir) => {
       import graft.engine.{DurableRegistry, OdfvSpec, OutputExpr, SourceSpec, ViewSpec}
-      val regPath = java.nio.file.Files
-        .createTempDirectory("graft_reg").toString + "/registry.json"
+      val regPath = tempDir("graft_reg") + "/registry.json"
       val turnStatsSql =
         """SELECT conv_id, ts, turn_idx, role, length(text) AS text_len,
           |  tool IS NOT NULL AS is_tool, ts AS turn_ts
@@ -356,8 +384,7 @@ object SparkEntry {
     // changes the hashed output.
     "registry_entities" -> ((s, dir) => {
       import graft.engine.{DurableRegistry, EntitySpec}
-      val regPath = java.nio.file.Files
-        .createTempDirectory("graft_reg_ent").toString + "/registry.json"
+      val regPath = tempDir("graft_reg_ent") + "/registry.json"
       DurableRegistry.apply(regPath, entities = Seq(
         EntitySpec("conversation", "conv_id", "string",
           "one multi-turn conversation"),
@@ -544,8 +571,7 @@ object SparkEntry {
       val target = StructType(Seq(
         StructField("conv_id", StringType), StructField("turn_idx", LongType),
         StructField("meta", StringType), StructField("ts", TimestampNTZType)))
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_sink").toString + "/out"
+      val path = tempDir("graft_sink") + "/out"
       sources.Sinks.appendWithSchemaCast(t, target, path)
       s.read.parquet(path)
     }),
@@ -992,7 +1018,7 @@ object SparkEntry {
     "registry_validation" -> ((s, dir) => {
       import graft.engine.{DurableRegistry, SavedDatasetSpec, ValidationSpec}
       val docs = s.read.parquet(s"$dir/documents.parquet")
-      val base = java.nio.file.Files.createTempDirectory("graft_regval").toString
+      val base = tempDir("graft_regval")
       stats.DatasetProfile.saveWithProfile(
         docs.filter(pmod(col("doc_id"), lit(2)) === 0), s"$base/ref_docs",
         Seq("n_chars", "lang"), exact = true)
@@ -1101,16 +1127,14 @@ object SparkEntry {
       val res = Historical.getHistoricalFeatures(
         Transcripts.entityFrame(s, dir),
         Seq(turnStatsView(s, dir, ttlSec = 4 * 3600L)))
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_saved").toString + "/ds"
+      val path = tempDir("graft_saved") + "/ds"
       sources.Sinks.saveDataset(res, path)
       sources.Sinks.loadDataset(s, path)
     }),
     // S8: remote-storage export — stage as parquet, hand off the data-file
     // list, read exactly those files back (spark.py:1153-1201).
     "export_roundtrip" -> ((s, dir) => {
-      val staging = java.nio.file.Files
-        .createTempDirectory("graft_export").toString + "/stage"
+      val staging = tempDir("graft_export") + "/stage"
       val files = sources.Sinks.exportToStaging(
         Transcripts.convQuality(s, dir), staging)
       s.read.parquet(files: _*)
@@ -1122,8 +1146,7 @@ object SparkEntry {
       val served = Materialize.latestPerKey(convQualityView(s, dir),
         java.sql.Timestamp.valueOf("2024-01-10 00:00:00"),
         java.sql.Timestamp.valueOf("2024-01-20 00:00:00")).drop("event_id")
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_log").toString + "/log"
+      val path = tempDir("graft_log") + "/log"
       sources.Sinks.logFeatures(served, "req-42",
         java.sql.Timestamp.valueOf("2026-02-01 00:00:00"), path)
       s.read.parquet(path)
@@ -1133,7 +1156,7 @@ object SparkEntry {
     // its rows to a file (the online-store client shape), then the written
     // data is read back through a schema'd csv scan (spark/utils.py:128-225).
     "foreach_sink" -> ((s, dir) => {
-      val out = java.nio.file.Files.createTempDirectory("graft_fsink").toString
+      val out = tempDir("graft_fsink")
       val served = Transcripts.convQuality(s, dir)
         .select(col("conv_id"), col("event_id"), col("score"))
       sources.Sinks.foreachPartitionSink(served, rows => {

@@ -170,19 +170,6 @@ object Historical {
     getHistoricalFeatures(entities.toDF(), views,
       fullFeatureNames = fullFeatureNames)
 
-  /** Entityless ("global") view support: the reference joins such views via
-    * a DUMMY_ENTITY literal (feature_view.py:95-108; spark.py:150). A
-    * keyless view is the merge kernel's one-key case, so it needs no dummy
-    * key.
-    */
-  def enrichEntityless(
-      entityDf: DataFrame,
-      view: FeatureView,
-      entityTsCol: String = "event_ts",
-      fullFeatureNames: Boolean = false
-  ): DataFrame =
-    PointInTimeJoin.enrich(entityDf, view, entityTsCol, fullFeatureNames)
-
   /** Non-entity retrieval mode (reference spark.py:1336-1387 W5): discover
     * the entity universe as UNION DISTINCT of each view's keys, stamp every
     * discovered key with `asOf`, then run the normal retrieval.

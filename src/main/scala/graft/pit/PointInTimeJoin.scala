@@ -49,7 +49,8 @@ import scala.jdk.CollectionConverters._
   * (nothing is split when `spark.sql.adaptive.skewJoin.enabled` is off). A
   * key group whose plan-estimated input is below the threshold can hold no
   * hot key: it runs no detection job and plans exactly as the unsplit
-  * kernel.
+  * kernel. This is the one hot-key rule: checks of the split at small
+  * sizes lower these settings, they force no mode.
   *
   * Scale levers:
   *   - scan bounds [min(event_ts) − ttl, max(event_ts)] derived from the
@@ -60,17 +61,14 @@ import scala.jdk.CollectionConverters._
   */
 object PointInTimeJoin {
 
-  /** How [[enrichMergeFused]] splits keys into time chunks. Retrievals use
-    * [[Chunking.Auto]]; the forced modes are for the driver queries, the
-    * bench and the specs, which must reach the split kernel at small sizes.
+  /** How [[enrichMergeFused]] splits keys into time chunks: retrievals use
+    * [[Chunking.Auto]]; [[Chunking.EveryKey]] is the fully chunked shape of
+    * the bench and the leakage audit.
     */
   private[graft] sealed trait Chunking
   private[graft] object Chunking {
     /** Hot keys from the data and Spark's skew settings (see object doc). */
     case object Auto extends Chunking
-    /** Keys with at least `minRows` merge rows, in chunks of about
-      * `minRows` rows. */
-    case class HotKeys(minRows: Long) extends Chunking
     /** Every key, split at the same `chunks` time quantiles of the whole
       * merge stream. */
     case class EveryKey(chunks: Int) extends Chunking
@@ -90,11 +88,9 @@ object PointInTimeJoin {
       view: FeatureView,
       entityTsCol: String = "event_ts",
       fullFeatureNames: Boolean = false,
-      filterByCreatedTs: Boolean = false,
-      precomputedBounds: Option[Row] = None
+      filterByCreatedTs: Boolean = false
   ): DataFrame =
-    enrichMergeFused(entityDf, Seq(view), entityTsCol, fullFeatureNames,
-      filterByCreatedTs, precomputedBounds)
+    enrichMergeFused(entityDf, Seq(view), entityTsCol, fullFeatureNames, filterByCreatedTs)
 
   /** One entity-frame (min, max) event-ts scan, shared across views of a
     * retrieval (reference computes it once per job too,
@@ -104,12 +100,9 @@ object PointInTimeJoin {
     entityDf.agg(min(col(entityTsCol)).as("mn"), max(col(entityTsCol)).as("mx")).head()
 
   /** Shared source prep: field mapping (P1), early projection, scan bounds
-    * from the entity range (P4/P5), date-partition predicates (P6).
+    * from the entity range `bounds` (P4/P5), date-partition predicates (P6).
     */
-  private def prepare(
-      entityDf: DataFrame, view: FeatureView, entityTsCol: String,
-      precomputedBounds: Option[Row]
-  ): DataFrame = {
+  private def prepare(view: FeatureView, bounds: Row): DataFrame = {
     val keys = view.joinKeys
     val feats = view.resolvedFeatures
     val neededCols =
@@ -125,7 +118,6 @@ object PointInTimeJoin {
     if (keys.nonEmpty)
       src = src.filter(keys.map(col(_).isNotNull).reduce(_ && _))
 
-    val bounds: Row = precomputedBounds.getOrElse(entityBounds(entityDf, entityTsCol))
     val lowerTs =
       if (view.ttlSeconds > 0 && !bounds.isNullAt(0))
         Some(lit(bounds.get(0)) - expr(s"INTERVAL ${view.ttlSeconds} SECONDS"))
@@ -201,7 +193,7 @@ object PointInTimeJoin {
       // of the reference's `created <= entity_ts` join predicate,
       // spark.py:1799; dask's NaT compare masks them too) — without this,
       // greatest() would skip the null and leave the row visible
-      val src0 = prepare(entityDf, v, entityTsCol, Some(bounds))
+      val src0 = prepare(v, bounds)
       val src =
         if (createdFilter) src0.filter(col(v.createdTsCol.get).isNotNull) else src0
       val feats = v.resolvedFeatures
@@ -282,8 +274,8 @@ object PointInTimeJoin {
     * window output already is the result, multiplicity kept.
     *
     * Hot keys split into time chunks, each seeded with the carried winner
-    * of the key's earlier chunks (object doc; [[withCarry]]); `chunking`
-    * forces a split mode.
+    * of the key's earlier chunks (object doc; [[withCarry]]);
+    * [[Chunking.EveryKey]] splits every key instead.
     *
     * Time axis ([[mergeAxisType]]): a DateType entity ts promotes to the
     * views' (shared) feature-ts type — casting feature times down to dates
@@ -346,13 +338,8 @@ object PointInTimeJoin {
     * splits nothing. Runs the detection jobs the kernel would run.
     */
   private[graft] def splitKeys(
-      entityDf: DataFrame,
-      views: Seq[FeatureView],
-      entityTsCol: String = "event_ts",
-      chunking: Chunking = Chunking.Auto
-  ): Seq[Row] =
-    split(mergeStream(entityDf, views, entityTsCol, false, None)._1,
-      views.head.joinKeys, chunking)._2
+      entityDf: DataFrame, views: Seq[FeatureView], chunking: Chunking = Chunking.Auto): Seq[Row] =
+    split(mergeStream(entityDf, views, "event_ts", false, None)._1, views.head.joinKeys, chunking)._2
 
   /** Which keys of a merge stream to split, and where: the split-by columns
     * (the join keys, or none to split every key alike) and one row
@@ -362,31 +349,31 @@ object PointInTimeJoin {
     * result does not depend on where they fall.
     */
   private def split(stream: DataFrame, keys: Seq[String], chunking: Chunking): (Seq[String], Seq[Row]) = {
-    val conf = SQLConf.get
-    val rowBytes = math.max(1L, stream.schema.defaultSize.toLong)
-    def ceilDiv(a: Long, b: Long) = (a + b - 1) / math.max(1L, b)
-    // keys with at least minRows merge rows and their chunk counts. A key
-    // that large shows in a ~1000/minRows sample with ~1000 rows, so the
-    // count runs over the sample; a near-threshold miss only costs speed
-    def hotKeys(minRows: Long, chunksOf: Long => Long): Map[Seq[Any], Int] = {
-      val p = math.min(1.0, 1000.0 / math.max(1L, minRows))
-      (if (p < 1) stream.sample(p, 0L) else stream)
-        .groupBy(keys.map(col): _*).agg(count(lit(1)).as("__n"))
-        .filter(col("__n") >= math.max(1.0, minRows * p)).collect()
-        .map(r => r.toSeq.init ->
-          math.max(2L, chunksOf((r.getLong(keys.size) / p).toLong)).toInt).toMap
-    }
     val (by, hot): (Seq[String], Map[Seq[Any], Int]) = chunking match {
       case Chunking.Auto =>
+        val conf = SQLConf.get
         val threshold = conf.getConf(SQLConf.SKEW_JOIN_SKEWED_PARTITION_THRESHOLD)
-        val chunkBytes = conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+        val chunkBytes = math.max(1L, conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
         // an input estimated below the threshold holds no key above it.
         // The analyzed plan's statistics run no job and, unlike the
         // optimized plan's, no second optimizer pass over the stream
         if (!conf.getConf(SQLConf.SKEW_JOIN_ENABLED) ||
           stream.queryExecution.analyzed.stats.sizeInBytes < threshold) (keys, Map.empty)
-        else (keys, hotKeys(threshold / rowBytes, n => ceilDiv(n * rowBytes, chunkBytes)))
-      case Chunking.HotKeys(minRows) => (keys, hotKeys(minRows, n => ceilDiv(n, minRows)))
+        else {
+          // a hot key (minRows or more) shows in a ~1000/minRows sample
+          // with ~1000 rows, so the count runs over the sample; a
+          // near-threshold miss only costs speed
+          val rowBytes = math.max(1L, stream.schema.defaultSize.toLong)
+          val minRows = math.max(1L, threshold / rowBytes)
+          val p = math.min(1.0, 1000.0 / minRows)
+          (keys, (if (p < 1) stream.sample(p, 0L) else stream)
+            .groupBy(keys.map(col): _*).agg(count(lit(1)).as("__n"))
+            .filter(col("__n") >= minRows * p).collect()
+            .map { r =>
+              val bytes = (r.getLong(keys.size) / p).toLong * rowBytes
+              r.toSeq.init -> math.max(2L, (bytes + chunkBytes - 1) / chunkBytes).toInt
+            }.toMap)
+        }
       case Chunking.EveryKey(chunks) => (Nil, Map(Seq.empty[Any] -> math.max(2, chunks)))
     }
     if (hot.isEmpty) (by, Nil)

@@ -4,7 +4,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.engine.Historical
 import graft.pit.PointInTimeJoin
-import graft.pit.PointInTimeJoin.Chunking
 
 /** Hot keys split into time chunks inside the merge kernel: the split
   * output must be byte-identical to the unsplit kernel on skewed data
@@ -30,32 +29,39 @@ class ChunkingSpec extends SparkTestBase {
 
   private val hotConvs = Set("conv_000007", "conv_000107")
 
-  /** Runs `body` with Spark's skew threshold lowered so that a hot
-    * conversation (~625 merge rows) is above it and a cold one (~13) is
-    * not, chunks of a few KB, and AQE partition coalescing off; restores
-    * the session's settings afterwards.
+  /** Spark's skew threshold lowered so that a hot conversation (~625 merge
+    * rows) is above it and a cold one (~13) is not, chunks of a few KB, and
+    * AQE partition coalescing off.
     */
-  private def withLowSkewThreshold[A](body: => A): A = {
-    val lowered = Map(
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "16k",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "4k",
-      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
-    val saved = lowered.keys.map(k => k -> spark.conf.getAll.get(k)).toMap
-    lowered.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
+  private val lowSkew = Map(
+    "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "16k",
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "4k",
+    "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
 
   private def assertSameRows(a: DataFrame, b: DataFrame): Unit = {
     assert(a.schema == b.schema)
     assert(a.except(b).isEmpty && b.except(a).isEmpty, "results must match exactly")
   }
 
+  test("withSqlConf restores set and unset keys after a return and after a throw") {
+    val (setKey, unsetKey) = ("spark.sql.adaptive.advisoryPartitionSizeInBytes",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes")
+    def explicit = Seq(setKey, unsetKey).map(spark.conf.getAll.get)
+    val lowered = Map(setKey -> "4k", unsetKey -> "16k")
+    spark.conf.set(setKey, "32m")
+    try {
+      assert(explicit == Seq(Some("32m"), None))
+      assert(SparkEntry.withSqlConf(spark, lowered)(explicit) == Seq(Some("4k"), Some("16k")))
+      assert(explicit == Seq(Some("32m"), None))
+      intercept[IllegalStateException](
+        SparkEntry.withSqlConf(spark, lowered)(throw new IllegalStateException("in the block")))
+      assert(explicit == Seq(Some("32m"), None))
+    } finally spark.conf.unset(setKey)
+  }
+
   test("hot-key detection finds exactly the hot conversations") {
-    val split = withLowSkewThreshold(PointInTimeJoin.splitKeys(entityDf, Seq(view(3600L))))
+    val split = SparkEntry.withSqlConf(spark, lowSkew)(
+      PointInTimeJoin.splitKeys(entityDf, Seq(view(3600L))))
     assert(split.map(_.getString(0)).toSet == hotConvs)
     assert(split.forall(_.getSeq[Any](1).size > 1))
     // restored: the whole input is below the default threshold again
@@ -64,15 +70,30 @@ class ChunkingSpec extends SparkTestBase {
 
   test("hot-key chunked output equals the plain output on skewed transcripts") {
     val plain = PointInTimeJoin.enrich(entityDf, view(ttl = 3600L))
-    val chunked = PointInTimeJoin.enrichMergeFused(entityDf, Seq(view(ttl = 3600L)),
-      chunking = Chunking.HotKeys(100L))
-    assertSameRows(chunked, plain)
-    assert(chunked.count() == entityDf.count())
+    SparkEntry.withSqlConf(spark, lowSkew) {
+      // the fixture bites: the automatic policy splits keys here
+      assert(PointInTimeJoin.splitKeys(entityDf, Seq(view(3600L))).nonEmpty)
+      val chunked = PointInTimeJoin.enrichMergeFused(entityDf, Seq(view(ttl = 3600L)))
+      assertSameRows(chunked, plain)
+      assert(chunked.count() == entityDf.count())
+    }
   }
 
   test("with no hot keys the output and the physical plan equal the plain ones") {
-    val chunked = PointInTimeJoin.enrichMergeFused(entityDf, Seq(view(ttl = 0L)),
-      chunking = Chunking.HotKeys(1000000L))
+    // 128 KB is about 1,260 merge rows: above every conversation (a hot
+    // one holds ~625) and below the stream's plan estimate (~480 KB), so
+    // detection runs and finds nothing to split
+    val noHotKey = lowSkew + (
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "128k")
+    def build() = PointInTimeJoin.enrichMergeFused(entityDf, Seq(view(ttl = 0L)))
+    val (chunked, jobs) = SparkEntry.withSqlConf(spark, noHotKey) {
+      assert(PointInTimeJoin.splitKeys(entityDf, Seq(view(0L))).isEmpty)
+      var df: DataFrame = null
+      val n = jobsStartedBy { df = build() }
+      (df, n)
+    }
+    assert(jobs > jobsStartedBy(PointInTimeJoin.entityBounds(entityDf, "event_ts")),
+      "a detection job ran")
     val plain = PointInTimeJoin.enrich(entityDf, view(ttl = 0L))
     assertSameRows(chunked, plain)
     assert(chunked.queryExecution.sparkPlan.canonicalized ==
@@ -81,7 +102,7 @@ class ChunkingSpec extends SparkTestBase {
 
   test("above the lowered skew threshold a hot conversation spans several window tasks") {
     val plain = Historical.getHistoricalFeatures(entityDf, Seq(view(3600L)))
-    withLowSkewThreshold {
+    SparkEntry.withSqlConf(spark, lowSkew) {
       val out = Historical.getHistoricalFeatures(entityDf, Seq(view(3600L)))
       // no exchange follows the window: an output row's partition is the
       // window task that produced it (a feature column keeps the window
@@ -101,6 +122,6 @@ class ChunkingSpec extends SparkTestBase {
     // the entity-bounds scan is the only work of planning a retrieval
     assert(jobsStartedBy(build()) ==
       jobsStartedBy(PointInTimeJoin.entityBounds(entityDf, "event_ts")))
-    assert(withLowSkewThreshold(jobsStartedBy(build())) > 1)
+    assert(SparkEntry.withSqlConf(spark, lowSkew)(jobsStartedBy(build())) > 1)
   }
 }

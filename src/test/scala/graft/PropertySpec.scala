@@ -117,6 +117,11 @@ class PropertySpec extends SparkTestBase {
 
   test("property: chunked merge equals the plain merge byte for byte") {
     import PointInTimeJoin.Chunking
+    // the automatic policy splits keys of about a dozen merge rows or more
+    // (76–144-byte rows, by shape), in chunks of about that size
+    val lowSkew = Map(
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "1200",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1200")
     def frame(recs: List[Rec]) = recs.zipWithIndex
       .map { case (r, i) => (r.key, r.ts, r.created.orNull, i.toLong, r.value) }
       .toDF("k", "ts", "created_ts", "tb", "v")
@@ -148,10 +153,15 @@ class PropertySpec extends SparkTestBase {
       } {
         val plain = PointInTimeJoin.enrichMergeFused(entityDf, views,
           fullFeatureNames = true, filterByCreatedTs = cf)
-        for (mode <- Seq(Chunking.HotKeys(12L), Chunking.EveryKey(5))) {
-          val chunked = PointInTimeJoin.enrichMergeFused(entityDf, views,
-            fullFeatureNames = true, filterByCreatedTs = cf, chunking = mode)
+        for ((mode, confs) <- Seq(Chunking.Auto -> lowSkew,
+            Chunking.EveryKey(5) -> Map.empty[String, String])) {
           val at = s"$shape, ttl=$ttl, createdFilter=$cf, $mode"
+          val chunked = SparkEntry.withSqlConf(spark, confs) {
+            assert(PointInTimeJoin.splitKeys(entityDf, views, chunking = mode).nonEmpty,
+              s"$at: nothing split")
+            PointInTimeJoin.enrichMergeFused(entityDf, views,
+              fullFeatureNames = true, filterByCreatedTs = cf, chunking = mode)
+          }
           assert(chunked.schema == plain.schema, at)
           assert(chunked.except(plain).isEmpty && plain.except(chunked).isEmpty, at)
         }

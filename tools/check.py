@@ -3,8 +3,12 @@
 against the DuckDB oracle (oracle_sql.json) on the same parquet tables.
 
 Usage: python3 tools/check.py <sfDir> <verifyOutDir>
+
+DuckDB may use half of the host's memory and spills the rest into a fresh
+directory under the system temp dir, removed on exit, so the larger oracles
+run at sf0.1 instead of being killed for memory.
 """
-import sys, json, glob, math
+import sys, json, glob, math, os, tempfile
 import duckdb
 import pandas as pd
 
@@ -38,7 +42,17 @@ def compare(name, spark_df, oracle_df):
 
 def main():
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
+    with tempfile.TemporaryDirectory(prefix="graft_check_") as spill:
+        fails = check(sf_dir, out_dir, spill)
+    print(f"{'ALL OK' if fails == 0 else str(fails) + ' FAILURES'}")
+    sys.exit(1 if fails else 0)
+
+
+def check(sf_dir, out_dir, spill):
     con = duckdb.connect()
+    mem_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21  # half, in MB
+    con.execute(f"SET memory_limit = '{mem_mb}MB'")
+    con.execute(f"SET temp_directory = '{spill}'")
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
@@ -57,8 +71,8 @@ def main():
             print(f"FAIL {name}: {err}"); fails += 1
         else:
             print(f"OK   {name}: {len(spark_df)} rows")
-    print(f"{'ALL OK' if fails == 0 else str(fails) + ' FAILURES'}")
-    sys.exit(1 if fails else 0)
+    con.close()
+    return fails
 
 
 if __name__ == "__main__":
