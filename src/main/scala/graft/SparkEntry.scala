@@ -1272,11 +1272,6 @@ object SparkEntry {
       |FROM p JOIN n na ON na.doc_id = p.a JOIN n nb ON nb.doc_id = p.b
       |WHERE round(inter * 1.0 / (na.ns + nb.ns - inter), 6) >= 0.8""".stripMargin)
 
-  /** Exact cosine top-5 — shared by brute force and by IVF with
-    * nprobe = nlist (exhaustive probing ⇒ exact).
-    */
-  // shared by stats_profile_validate and its durable-registry variant
-  // registry_validation — the resolution path must not change the numbers
   // shared by `decontaminate` (broadcast exact set) and `decontaminate_bloom`
   // (sketch prefilter + exact verify) — both are exact, same output
   private val decontaminateOracle = withTables(
@@ -1299,6 +1294,8 @@ object SparkEntry {
       |  UNION ALL SELECT t.doc_id FROM tshort t JOIN bshort USING (g)))
       |SELECT doc_id FROM train WHERE doc_id NOT IN (SELECT doc_id FROM contam)""".stripMargin)
 
+  // shared by stats_profile_validate and its durable-registry variant
+  // registry_validation — the resolution path must not change the numbers
   private val profileValidateOracle = withTables(
     s""", refd AS (SELECT * FROM documents WHERE doc_id % 2 = 0),
        |refp AS (
@@ -1332,6 +1329,9 @@ object SparkEntry {
        |  abs(g.got_value - r.ref_value) <= 1e-9 + 0.05 * abs(r.ref_value) AS passed
        |FROM refp r JOIN gotp g ON r."column" = g."column" AND r.metric = g.metric""".stripMargin)
 
+  /** Exact cosine top-5 — shared by brute force and by IVF with
+    * nprobe = nlist (exhaustive probing ⇒ exact).
+    */
   private val annTopkOracle = withTables(
     """, q AS (SELECT vec_id AS q_id, CAST(embedding AS DOUBLE[]) AS qv
       |       FROM embeddings WHERE vec_id % 50 = 0),

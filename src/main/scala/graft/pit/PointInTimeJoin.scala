@@ -45,12 +45,14 @@ import scala.jdk.CollectionConverters._
   * TTL still qualifies the winner after the window. A key is hot when its
   * merge rows (counted over a sample) are estimated above Spark's
   * `spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes`, and gets
-  * chunks of about `spark.sql.adaptive.advisoryPartitionSizeInBytes`
-  * (nothing is split when `spark.sql.adaptive.skewJoin.enabled` is off). A
-  * key group whose plan-estimated input is below the threshold can hold no
-  * hot key: it runs no detection job and plans exactly as the unsplit
-  * kernel. This is the one hot-key rule: checks of the split at small
-  * sizes lower these settings, they force no mode.
+  * about one chunk per `spark.sql.adaptive.advisoryPartitionSizeInBytes`,
+  * equal-width slices of its `__t` range from the same aggregate: one
+  * detection action per key group, no second pass (nothing is split when
+  * `spark.sql.adaptive.skewJoin.enabled` is off). A key group whose
+  * plan-estimated input is below the threshold can hold no hot key: it
+  * runs no job and plans exactly as the unsplit kernel. This is the one
+  * hot-key rule: checks of the split at small sizes lower these settings,
+  * they force no mode.
   *
   * Scale levers:
   *   - scan bounds [min(event_ts) − ttl, max(event_ts)] derived from the
@@ -69,8 +71,8 @@ object PointInTimeJoin {
   private[graft] object Chunking {
     /** Hot keys from the data and Spark's skew settings (see object doc). */
     case object Auto extends Chunking
-    /** Every key, split at the same `chunks` time quantiles of the whole
-      * merge stream. */
+    /** Every key, split into the same `chunks` equal-width slices of the
+      * entity frame's event-ts range; runs no job. */
     case class EveryKey(chunks: Int) extends Chunking
   }
 
@@ -164,12 +166,12 @@ object PointInTimeJoin {
 
   /** The merge stream of a key group: every view's feature rows (`__p` 0)
     * and the probe rows (`__p` 1) on one axis `__t`, keyed by the views'
-    * shared join keys. See [[enrichMergeFused]].
+    * shared join keys, and the entity (mn, mx) row it used. See [[enrichMergeFused]].
     */
   private def mergeStream(
       entityDf: DataFrame, views: Seq[FeatureView], entityTsCol: String,
       filterByCreatedTs: Boolean, precomputedBounds: Option[Row]
-  ): (DataFrame, Seq[ViewCols]) = {
+  ): (DataFrame, Seq[ViewCols], Row) = {
     val keys = views.head.joinKeys
     require(views.forall(_.joinKeys == keys),
       "fused merge requires identical join keys across views")
@@ -243,7 +245,7 @@ object PointInTimeJoin {
     val pSide = sideSelect(entityDf, Seq(
       col(quote(entityTsCol)).cast(etsType).as("__t"), lit(1).as("__p"),
       entity.as("__ent")), ownerIdx = -1)
-    ((fSides :+ pSide).reduce(_ unionByName _), infos)
+    ((fSides :+ pSide).reduce(_ unionByName _), infos, bounds)
   }
 
   /** The sort-merge as-of kernel (see object doc): N views sharing the
@@ -292,9 +294,9 @@ object PointInTimeJoin {
       chunking: Chunking = Chunking.Auto
   ): DataFrame = {
     val keys = views.head.joinKeys
-    val (unioned, infos) =
+    val (unioned, infos, entity) =
       mergeStream(entityDf, views, entityTsCol, filterByCreatedTs, precomputedBounds)
-    val (stream, part) = split(unioned, keys, chunking) match {
+    val (stream, part) = split(unioned, keys, chunking, entity) match {
       case (_, Seq()) => (unioned, keys)
       case (by, bounds) =>
         (withCarry(chunked(unioned, by, bounds), keys, infos), keys :+ "__chunk")
@@ -335,21 +337,26 @@ object PointInTimeJoin {
 
   /** The keys the kernel splits for this retrieval and their chunk bounds,
     * as rows `(split-by columns…, __bounds)` (see [[split]]); empty when it
-    * splits nothing. Runs the detection jobs the kernel would run.
+    * splits nothing. Runs the detection job the kernel would run.
     */
   private[graft] def splitKeys(
-      entityDf: DataFrame, views: Seq[FeatureView], chunking: Chunking = Chunking.Auto): Seq[Row] =
-    split(mergeStream(entityDf, views, "event_ts", false, None)._1, views.head.joinKeys, chunking)._2
+      entityDf: DataFrame, views: Seq[FeatureView], chunking: Chunking = Chunking.Auto): Seq[Row] = {
+    val (stream, _, entity) = mergeStream(entityDf, views, "event_ts", false, None)
+    split(stream, views.head.joinKeys, chunking, entity)._2
+  }
 
   /** Which keys of a merge stream to split, and where: the split-by columns
     * (the join keys, or none to split every key alike) and one row
     * `(split-by values…, __bounds)` per split key, `__bounds` its sorted
-    * chunk start times on the merge axis. Bounds are approximate quantiles
-    * of the key's `__t`, so chunks hold about equal row counts; the kernel's
-    * result does not depend on where they fall.
+    * chunk start times on the merge axis ([[slices]] of a time range).
+    * [[Chunking.Auto]] takes each hot key's range and chunk count from its
+    * detection aggregate; [[Chunking.EveryKey]] slices the `entity` range
+    * and runs no job. The kernel's result does not depend on the bounds.
     */
-  private def split(stream: DataFrame, keys: Seq[String], chunking: Chunking): (Seq[String], Seq[Row]) = {
-    val (by, hot): (Seq[String], Map[Seq[Any], Int]) = chunking match {
+  private def split(stream: DataFrame, keys: Seq[String], chunking: Chunking,
+      entity: Row): (Seq[String], Seq[Row]) = {
+    val axis = stream.schema("__t").dataType
+    val (by, ranges): (Seq[String], Option[DataFrame]) = chunking match {
       case Chunking.Auto =>
         val conf = SQLConf.get
         val threshold = conf.getConf(SQLConf.SKEW_JOIN_SKEWED_PARTITION_THRESHOLD)
@@ -358,7 +365,7 @@ object PointInTimeJoin {
         // The analyzed plan's statistics run no job and, unlike the
         // optimized plan's, no second optimizer pass over the stream
         if (!conf.getConf(SQLConf.SKEW_JOIN_ENABLED) ||
-          stream.queryExecution.analyzed.stats.sizeInBytes < threshold) (keys, Map.empty)
+          stream.queryExecution.analyzed.stats.sizeInBytes < threshold) (keys, None)
         else {
           // a hot key (minRows or more) shows in a ~1000/minRows sample
           // with ~1000 rows, so the count runs over the sample; a
@@ -366,38 +373,28 @@ object PointInTimeJoin {
           val rowBytes = math.max(1L, stream.schema.defaultSize.toLong)
           val minRows = math.max(1L, threshold / rowBytes)
           val p = math.min(1.0, 1000.0 / minRows)
-          (keys, (if (p < 1) stream.sample(p, 0L) else stream)
-            .groupBy(keys.map(col): _*).agg(count(lit(1)).as("__n"))
-            .filter(col("__n") >= minRows * p).collect()
-            .map { r =>
-              val bytes = (r.getLong(keys.size) / p).toLong * rowBytes
-              r.toSeq.init -> math.max(2L, (bytes + chunkBytes - 1) / chunkBytes).toInt
-            }.toMap)
+          (keys, Some((if (p < 1) stream.sample(p, 0L) else stream)
+            .groupBy(keys.map(col): _*)
+            .agg(count(lit(1)).as("__n"), min(col("__t")).as("__lo"), max(col("__t")).as("__hi"))
+            .filter(col("__n") >= minRows * p)
+            .withColumn("__c", greatest(lit(2L), ceil(col("__n") / p * rowBytes / chunkBytes)))))
         }
-      case Chunking.EveryKey(chunks) => (Nil, Map(Seq.empty[Any] -> math.max(2, chunks)))
+      case Chunking.EveryKey(chunks) =>
+        // a projection of one local row: folded on the driver, no job
+        (Nil, Some(stream.sparkSession.createDataFrame(Seq(Row()).asJava, new StructType())
+          .select(lit(entity.get(0)).cast(axis).as("__lo"),
+            lit(entity.get(1)).cast(axis).as("__hi"), lit(math.max(2, chunks)).as("__c"))))
     }
-    if (hot.isEmpty) (by, Nil)
-    else {
-      // one quantile grid fine enough for the most-split key; a key with
-      // c chunks takes every (grid / c)-th point
-      val grid = hot.values.max
-      val keyType = StructType(by.map(stream.schema(_)))
-      val rows =
-        if (by.isEmpty) stream
-        else stream.join(broadcast(stream.sparkSession.createDataFrame(
-          hot.keys.toSeq.map(Row.fromSeq).asJava, keyType)), by, "left_semi")
-      val bounds = rows.groupBy(by.map(col): _*)
-        .agg(percentile_approx(col("__t"),
-          lit((1 until grid).map(_.toDouble / grid).toArray), lit(10000)).as("__q"))
-        .filter(col("__q").isNotNull).collect().toSeq.map { r =>
-          val key = r.toSeq.init
-          val c = hot(key)
-          val q = r.getSeq[Any](by.size)
-          Row.fromSeq(key :+ (1 until c).map(j => q(j * grid / c - 1)).distinct)
-        }
-      (by, bounds)
-    }
+    (by, ranges.toSeq.flatMap(_.filter(col("__lo").isNotNull)
+      .select(by.map(col) :+ slices(col("__lo"), col("__hi"), col("__c"), axis).as("__bounds"): _*)
+      .collect()))
   }
+
+  /** The `c − 1` equal-width points inside [lo, hi] as `axis` values (a
+    * date plus an interval comes back as a timestamp, hence the cast). */
+  private def slices(lo: Column, hi: Column, c: Column, axis: DataType): Column =
+    array_distinct(transform(sequence(lit(1), c.cast("int") - 1),
+      j => (lo + (hi - lo) / c * j).cast(axis)))
 
   /** Tag every merge row with its `__chunk`: the number of its key's chunk
     * bounds at or before its `__t` (0 for a key that is not split), so rows

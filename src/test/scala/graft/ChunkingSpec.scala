@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.engine.Historical
 import graft.pit.PointInTimeJoin
+import graft.pit.PointInTimeJoin.Chunking
 
 /** Hot keys split into time chunks inside the merge kernel: the split
   * output must be byte-identical to the unsplit kernel on skewed data
@@ -37,6 +38,13 @@ class ChunkingSpec extends SparkTestBase {
     "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "16k",
     "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "4k",
     "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
+
+  /** 128 KB is about 1,260 merge rows: above every conversation (a hot
+    * one holds ~625) and below the stream's plan estimate (~480 KB), so
+    * detection runs and finds nothing to split.
+    */
+  private val noHotKey = lowSkew + (
+    "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "128k")
 
   private def assertSameRows(a: DataFrame, b: DataFrame): Unit = {
     assert(a.schema == b.schema)
@@ -80,11 +88,6 @@ class ChunkingSpec extends SparkTestBase {
   }
 
   test("with no hot keys the output and the physical plan equal the plain ones") {
-    // 128 KB is about 1,260 merge rows: above every conversation (a hot
-    // one holds ~625) and below the stream's plan estimate (~480 KB), so
-    // detection runs and finds nothing to split
-    val noHotKey = lowSkew + (
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "128k")
     def build() = PointInTimeJoin.enrichMergeFused(entityDf, Seq(view(ttl = 0L)))
     val (chunked, jobs) = SparkEntry.withSqlConf(spark, noHotKey) {
       assert(PointInTimeJoin.splitKeys(entityDf, Seq(view(0L))).isEmpty)
@@ -124,4 +127,43 @@ class ChunkingSpec extends SparkTestBase {
       jobsStartedBy(PointInTimeJoin.entityBounds(entityDf, "event_ts")))
     assert(SparkEntry.withSqlConf(spark, lowSkew)(jobsStartedBy(build())) > 1)
   }
+
+  test("splitting hot keys starts no more jobs than detection that finds none") {
+    def build(): Unit = Historical.getHistoricalFeatures(entityDf, Seq(view(3600L)))
+    val hot = SparkEntry.withSqlConf(spark, lowSkew) {
+      assert(PointInTimeJoin.splitKeys(entityDf, Seq(view(3600L))).nonEmpty)
+      jobsStartedBy(build())
+    }
+    // the detection aggregate's min/max are the bounds: no job follows it
+    assert(hot <= SparkEntry.withSqlConf(spark, noHotKey)(jobsStartedBy(build())))
+  }
+
+  test("an every-key split starts no job beyond the entity bounds") {
+    assert(jobsStartedBy(PointInTimeJoin.enrichMergeFused(entityDf, Seq(view(3600L)),
+      chunking = Chunking.EveryKey(4))) ==
+      jobsStartedBy(PointInTimeJoin.entityBounds(entityDf, "event_ts")))
+  }
+
+  // the bounds are sliced on each merge-axis type: timestamp_ntz (parquet
+  // timestamps read as NTZ), a Date entity ts promoted to the views'
+  // timestamp, and a Date entity ts over a Date feature ts, where the
+  // interval sum comes back as a timestamp and is cast back to date
+  for ((axis, entityTs, featureTs, boundClass) <- Seq(
+      ("timestamp_ntz", "timestamp_ntz", "timestamp_ntz", classOf[java.time.LocalDateTime]),
+      ("timestamp under a date entity ts", "date", "timestamp", classOf[java.sql.Timestamp]),
+      ("date", "date", "date", classOf[java.sql.Date])))
+    test(s"chunked output equals the plain output on a $axis merge axis") {
+      val v = view(3600L).copy(source = turns.select(col("conv_id"),
+        col("ts").cast(featureTs).as("ts"), col("turn_idx"), col("role")))
+      val ents = entityDf.withColumn("event_ts", col("event_ts").cast(entityTs))
+      val plain = PointInTimeJoin.enrich(ents, v)
+      for ((mode, confs) <- Seq(Chunking.Auto -> lowSkew,
+          Chunking.EveryKey(4) -> Map.empty[String, String]))
+        SparkEntry.withSqlConf(spark, confs) {
+          val split = PointInTimeJoin.splitKeys(ents, Seq(v), mode)
+          assert(split.nonEmpty, s"$mode: nothing split")
+          assert(split.flatMap(_.getSeq[Any](split.head.size - 1)).forall(boundClass.isInstance))
+          assertSameRows(PointInTimeJoin.enrichMergeFused(ents, Seq(v), chunking = mode), plain)
+        }
+    }
 }

@@ -91,11 +91,14 @@ class PropertySpec extends SparkTestBase {
   }
 
   // a coarse 5-minute grid puts feature rows and probes at the same ts,
-  // chunk bounds included (bounds are quantiles of the merge axis, so they
-  // are row times); no feature row falls in [3000, 4800) s, where a third
-  // of the probes land, so some chunks hold probes only
+  // chunk bounds included: the probe range is pinned to [-1500, 9000] s,
+  // so EveryKey(5)'s equal-width bounds fall every 2,100 s at 600, 2700,
+  // 4800 and 6900 s, grid times of feature rows where a quarter of the
+  // probes land; no feature row falls in [3000, 4800) s, where another
+  // quarter land, so some chunks hold probes only
   private val featOff: Gen[Long] =
     Gen.choose(0L, 18L).map(i => (if (i < 10) i else i + 6) * 300L)
+  private val probeKey = Gen.frequency(4 -> "k1", 2 -> "k2", 2 -> "k3", 1 -> "k_absent")
   private val chunkTableGen: Gen[(List[Rec], List[Rec], List[(String, Long)])] = for {
     recs <- Gen.listOfN(40, for {
       key <- Gen.frequency(6 -> "k1", 2 -> "k2", 2 -> "k3")
@@ -109,11 +112,13 @@ class PropertySpec extends SparkTestBase {
       ts <- featOff
       v <- Gen.choose(-100, 100)
     } yield Rec(key, new Timestamp(base + ts * 1000), None, 0L, v.toDouble))
-    probes <- Gen.listOfN(30, for {
-      k <- Gen.frequency(4 -> "k1", 2 -> "k2", 2 -> "k3", 1 -> "k_absent")
-      off <- Gen.frequency(2 -> Gen.choose(-2L, 26L), 1 -> Gen.choose(10L, 15L))
+    probes <- Gen.listOfN(28, for {
+      k <- probeKey
+      off <- Gen.frequency(2 -> Gen.choose(-5L, 30L), 1 -> Gen.choose(10L, 15L),
+        1 -> Gen.oneOf(2L, 9L, 16L, 23L))
     } yield (k, off * 300L))
-  } yield (recs, recs2, probes)
+    ends <- Gen.listOfN(2, probeKey)
+  } yield (recs, recs2, probes ++ ends.zip(Seq(-5L, 30L).map(_ * 300L)))
 
   test("property: chunked merge equals the plain merge byte for byte") {
     import PointInTimeJoin.Chunking

@@ -4,11 +4,13 @@ against the DuckDB oracle (oracle_sql.json) on the same parquet tables.
 
 Usage: python3 tools/check.py <sfDir> <verifyOutDir>
 
-DuckDB may use half of the host's memory and spills the rest into a fresh
+DuckDB may use a third of the host's memory and spills the rest into a fresh
 directory under the system temp dir, removed on exit, so the larger oracles
-run at sf0.1 instead of being killed for memory.
+run at sf0.1 instead of being killed for memory. The pandas frames of a
+query (Spark result and oracle result, outside DuckDB's limit) are dropped
+before the next query runs.
 """
-import sys, json, glob, math, os, tempfile
+import sys, json, glob, gc, math, os, tempfile
 import duckdb
 import pandas as pd
 
@@ -50,7 +52,7 @@ def main():
 
 def check(sf_dir, out_dir, spill):
     con = duckdb.connect()
-    mem_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21  # half, in MB
+    mem_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // (3 * 2**20)  # a third, in MB
     con.execute(f"SET memory_limit = '{mem_mb}MB'")
     con.execute(f"SET temp_directory = '{spill}'")
     for t in TABLES:
@@ -71,6 +73,8 @@ def check(sf_dir, out_dir, spill):
             print(f"FAIL {name}: {err}"); fails += 1
         else:
             print(f"OK   {name}: {len(spark_df)} rows")
+        del spark_df, oracle_df
+        gc.collect()
     con.close()
     return fails
 
