@@ -42,17 +42,18 @@ import scala.jdk.CollectionConverters._
   * `max_by` over (ts, created, tiebreaks), then a running `max_by` across
   * chunks). The carried row keeps its own axis time, so it sorts before
   * everything in its chunk; an empty chunk still passes the winner on, and
-  * TTL still qualifies the winner after the window. A key is hot when its
+  * TTL still qualifies the winner after the window. Rows older than every
+  * probe reach the window only through the carry. A key is hot when its
   * merge rows (counted over a sample) are estimated above Spark's
   * `spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes`, and gets
   * about one chunk per `spark.sql.adaptive.advisoryPartitionSizeInBytes`,
-  * equal-width slices of its `__t` range from the same aggregate: one
-  * detection action per key group, no second pass (nothing is split when
-  * `spark.sql.adaptive.skewJoin.enabled` is off). A key group whose
-  * plan-estimated input is below the threshold can hold no hot key: it
-  * runs no job and plans exactly as the unsplit kernel. This is the one
-  * hot-key rule: checks of the split at small sizes lower these settings,
-  * they force no mode.
+  * bounded at equal-count ranks of its sampled `__t` from the same
+  * aggregate: one detection action per key group, no second pass (nothing
+  * is split when `spark.sql.adaptive.skewJoin.enabled` is off). A key
+  * group whose plan-estimated input is below the threshold can hold no hot
+  * key: it runs no job and plans exactly as the unsplit kernel. This is the
+  * one hot-key rule: checks of the split at small sizes lower these
+  * settings, they force no mode.
   *
   * Scale levers:
   *   - scan bounds [min(event_ts) − ttl, max(event_ts)] derived from the
@@ -166,12 +167,12 @@ object PointInTimeJoin {
 
   /** The merge stream of a key group: every view's feature rows (`__p` 0)
     * and the probe rows (`__p` 1) on one axis `__t`, keyed by the views'
-    * shared join keys, and the entity (mn, mx) row it used. See [[enrichMergeFused]].
+    * shared join keys; `bounds` is the entity (mn, mx) row. See [[enrichMergeFused]].
     */
   private def mergeStream(
       entityDf: DataFrame, views: Seq[FeatureView], entityTsCol: String,
-      filterByCreatedTs: Boolean, precomputedBounds: Option[Row]
-  ): (DataFrame, Seq[ViewCols], Row) = {
+      filterByCreatedTs: Boolean, bounds: Row
+  ): (DataFrame, Seq[ViewCols]) = {
     val keys = views.head.joinKeys
     require(views.forall(_.joinKeys == keys),
       "fused merge requires identical join keys across views")
@@ -180,7 +181,6 @@ object PointInTimeJoin {
     require(views.forall(v => mergeAxisType(entityTsType, v) == etsType),
       "fused merge of a Date entity timestamp requires one feature-ts type " +
         "across views; merge views with differing ts types separately")
-    val bounds = precomputedBounds.getOrElse(entityBounds(entityDf, entityTsCol))
     val minTs = lit("1900-01-01 00:00:00").cast("timestamp")
     def typeOf(df: DataFrame, e: Column): DataType = df.select(e.as("x")).schema("x").dataType
 
@@ -245,7 +245,7 @@ object PointInTimeJoin {
     val pSide = sideSelect(entityDf, Seq(
       col(quote(entityTsCol)).cast(etsType).as("__t"), lit(1).as("__p"),
       entity.as("__ent")), ownerIdx = -1)
-    ((fSides :+ pSide).reduce(_ unionByName _), infos, bounds)
+    ((fSides :+ pSide).reduce(_ unionByName _), infos)
   }
 
   /** The sort-merge as-of kernel (see object doc): N views sharing the
@@ -275,9 +275,7 @@ object PointInTimeJoin {
     * Duplicate probes are adjacent and read the same running winner, so the
     * window output already is the result, multiplicity kept.
     *
-    * Hot keys split into time chunks, each seeded with the carried winner
-    * of the key's earlier chunks (object doc; [[withCarry]]);
-    * [[Chunking.EveryKey]] splits every key instead.
+    * Hot keys split into time chunks seeded by [[withCarry]] (object doc).
     *
     * Time axis ([[mergeAxisType]]): a DateType entity ts promotes to the
     * views' (shared) feature-ts type — casting feature times down to dates
@@ -294,12 +292,12 @@ object PointInTimeJoin {
       chunking: Chunking = Chunking.Auto
   ): DataFrame = {
     val keys = views.head.joinKeys
-    val (unioned, infos, entity) =
-      mergeStream(entityDf, views, entityTsCol, filterByCreatedTs, precomputedBounds)
+    val entity = precomputedBounds.getOrElse(entityBounds(entityDf, entityTsCol))
+    val (unioned, infos) = mergeStream(entityDf, views, entityTsCol, filterByCreatedTs, entity)
     val (stream, part) = split(unioned, keys, chunking, entity) match {
       case (_, Seq()) => (unioned, keys)
       case (by, bounds) =>
-        (withCarry(chunked(unioned, by, bounds), keys, infos), keys :+ "__chunk")
+        (withCarry(chunked(unioned, by, bounds), keys, infos, entity.get(0)), keys :+ "__chunk")
     }
     val w = Window.partitionBy(part.map(col): _*)
       .orderBy((Seq(col("__t").asc, col("__p").asc) ++
@@ -341,64 +339,65 @@ object PointInTimeJoin {
     */
   private[graft] def splitKeys(
       entityDf: DataFrame, views: Seq[FeatureView], chunking: Chunking = Chunking.Auto): Seq[Row] = {
-    val (stream, _, entity) = mergeStream(entityDf, views, "event_ts", false, None)
+    val entity = entityBounds(entityDf, "event_ts")
+    val (stream, _) = mergeStream(entityDf, views, "event_ts", false, entity)
     split(stream, views.head.joinKeys, chunking, entity)._2
   }
 
   /** Which keys of a merge stream to split, and where: the split-by columns
     * (the join keys, or none to split every key alike) and one row
-    * `(split-by values…, __bounds)` per split key, `__bounds` its sorted
-    * chunk start times on the merge axis ([[slices]] of a time range).
-    * [[Chunking.Auto]] takes each hot key's range and chunk count from its
-    * detection aggregate; [[Chunking.EveryKey]] slices the `entity` range
-    * and runs no job. The kernel's result does not depend on the bounds.
+    * `(split-by values…, __bounds)` per split key, `__bounds` its chunk
+    * start times on the merge axis. The first is the entity min, so rows
+    * before every probe form chunk −1. [[Chunking.Auto]] puts a hot key's
+    * others at equal-count ranks of its sampled `__t` from there on, which
+    * its detection aggregate collects; [[Chunking.EveryKey]] slices the
+    * entity range into equal widths and runs no job. The kernel's result
+    * does not depend on the bounds.
     */
   private def split(stream: DataFrame, keys: Seq[String], chunking: Chunking,
       entity: Row): (Seq[String], Seq[Row]) = {
     val axis = stream.schema("__t").dataType
-    val (by, ranges): (Seq[String], Option[DataFrame]) = chunking match {
-      case Chunking.Auto =>
-        val conf = SQLConf.get
-        val threshold = conf.getConf(SQLConf.SKEW_JOIN_SKEWED_PARTITION_THRESHOLD)
-        val chunkBytes = math.max(1L, conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
-        // an input estimated below the threshold holds no key above it.
-        // The analyzed plan's statistics run no job and, unlike the
-        // optimized plan's, no second optimizer pass over the stream
-        if (!conf.getConf(SQLConf.SKEW_JOIN_ENABLED) ||
-          stream.queryExecution.analyzed.stats.sizeInBytes < threshold) (keys, None)
-        else {
-          // a hot key (minRows or more) shows in a ~1000/minRows sample
-          // with ~1000 rows, so the count runs over the sample; a
-          // near-threshold miss only costs speed
-          val rowBytes = math.max(1L, stream.schema.defaultSize.toLong)
-          val minRows = math.max(1L, threshold / rowBytes)
-          val p = math.min(1.0, 1000.0 / minRows)
-          (keys, Some((if (p < 1) stream.sample(p, 0L) else stream)
-            .groupBy(keys.map(col): _*)
-            .agg(count(lit(1)).as("__n"), min(col("__t")).as("__lo"), max(col("__t")).as("__hi"))
-            .filter(col("__n") >= minRows * p)
-            .withColumn("__c", greatest(lit(2L), ceil(col("__n") / p * rowBytes / chunkBytes)))))
-        }
-      case Chunking.EveryKey(chunks) =>
-        // a projection of one local row: folded on the driver, no job
-        (Nil, Some(stream.sparkSession.createDataFrame(Seq(Row()).asJava, new StructType())
-          .select(lit(entity.get(0)).cast(axis).as("__lo"),
-            lit(entity.get(1)).cast(axis).as("__hi"), lit(math.max(2, chunks)).as("__c"))))
-    }
-    (by, ranges.toSeq.flatMap(_.filter(col("__lo").isNotNull)
-      .select(by.map(col) :+ slices(col("__lo"), col("__hi"), col("__c"), axis).as("__bounds"): _*)
-      .collect()))
+    val from = lit(entity.get(0)).cast(axis)
+    val (by, bounds): (Seq[String], Option[DataFrame]) =
+      if (entity.isNullAt(0)) (keys, None) else chunking match {
+        case Chunking.Auto =>
+          val conf = SQLConf.get
+          val threshold = conf.getConf(SQLConf.SKEW_JOIN_SKEWED_PARTITION_THRESHOLD)
+          val chunkBytes = math.max(1L, conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
+          // an input estimated below the threshold holds no key above it; the
+          // analyzed plan's statistics run no job and no second optimizer pass
+          if (!conf.getConf(SQLConf.SKEW_JOIN_ENABLED) ||
+            stream.queryExecution.analyzed.stats.sizeInBytes < threshold) (keys, None)
+          else {
+            // a hot key (minRows or more) shows in a ~1000/minRows sample
+            // with ~1000 rows, so the count runs over the sample; a
+            // near-threshold miss only costs speed
+            val rowBytes = math.max(1L, stream.schema.defaultSize.toLong)
+            val minRows = math.max(1L, threshold / rowBytes)
+            val p = math.min(1.0, 1000.0 / minRows)
+            val (ts, sampled) = (col("__ts"), if (p < 1) stream.sample(p, 0L) else stream)
+            val c = greatest(lit(2), ceil(size(ts) / p * rowBytes / chunkBytes).cast("int"))
+            (keys, Some(sampled.groupBy(keys.map(col): _*).agg(count(lit(1)).as("__n"),
+                sort_array(collect_list(when(col("__t") >= from, col("__t")))).as("__ts"))
+              .filter(col("__n") >= minRows * p)
+              .select(keys.map(col) :+ array_compact(array_distinct(concat(array(from),
+                transform(sequence(lit(1), c - 1), j => get(ts, (j * size(ts) / c).cast("int"))))))
+                .as("__bounds"): _*)))
+          }
+        case Chunking.EveryKey(chunks) => // folded on the driver: no job
+          // a date plus an interval comes back as a timestamp, hence the cast
+          val (to, c) = (lit(entity.get(1)).cast(axis), math.max(1, chunks))
+          (Nil, Some(stream.sparkSession.createDataFrame(Seq(Row()).asJava, new StructType())
+            .select(array_distinct(transform(sequence(lit(0), lit(c - 1)),
+              j => (from + (to - from) / c * j).cast(axis))).as("__bounds"))))
+      }
+    (by, bounds.toSeq.flatMap(_.collect()))
   }
 
-  /** The `c − 1` equal-width points inside [lo, hi] as `axis` values (a
-    * date plus an interval comes back as a timestamp, hence the cast). */
-  private def slices(lo: Column, hi: Column, c: Column, axis: DataType): Column =
-    array_distinct(transform(sequence(lit(1), c.cast("int") - 1),
-      j => (lo + (hi - lo) / c * j).cast(axis)))
-
-  /** Tag every merge row with its `__chunk`: the number of its key's chunk
-    * bounds at or before its `__t` (0 for a key that is not split), so rows
-    * at one `__t` share a chunk and chunks follow the axis.
+  /** Tag every merge row with its `__chunk`: its key's chunk bounds at or
+    * before its `__t`, less one (0 for a key that is not split and for a
+    * probe with no time), so rows at one `__t` share a chunk and chunks
+    * follow the axis.
     */
   private def chunked(stream: DataFrame, by: Seq[String], bounds: Seq[Row]): DataFrame = {
     val schema = StructType(by.map(stream.schema(_)))
@@ -406,8 +405,8 @@ object PointInTimeJoin {
     val b = broadcast(stream.sparkSession.createDataFrame(bounds.asJava, schema))
     val tagged = if (by.isEmpty) stream.crossJoin(b) else stream.join(b, by, "left")
     tagged.withColumn("__chunk",
-      when(col("__bounds").isNull, lit(0))
-        .otherwise(size(filter(col("__bounds"), t => t <= col("__t")))))
+      when(col("__bounds").isNull || col("__t").isNull, lit(0))
+        .otherwise(size(filter(col("__bounds"), t => t <= col("__t"))) - 1))
       .drop("__bounds")
   }
 
@@ -416,9 +415,11 @@ object PointInTimeJoin {
     * payload and ords. Its `__t` lies in an earlier chunk, so it sorts
     * before every row of its chunk. The winner order is the kernel's:
     * (ts, ords) — `__t` is the ts outside created-filter mode — or the
-    * view's created-filter order struct.
+    * view's created-filter order struct. Chunk −1 (`__t` < `from`, tested
+    * first: no second chunk count) holds no probe and only feeds the carry.
     */
-  private def withCarry(stream: DataFrame, keys: Seq[String], infos: Seq[ViewCols]): DataFrame = {
+  private def withCarry(
+      stream: DataFrame, keys: Seq[String], infos: Seq[ViewCols], from: Any): DataFrame = {
     val part = keys :+ "__chunk"
     def mine(i: Int): Seq[String] =
       Seq("__t", s"__payload_$i") ++ (infos(i).ords ++ infos(i).ordStruct).map(_._1)
@@ -436,7 +437,8 @@ object PointInTimeJoin {
       .rangeBetween(Window.unboundedPreceding, -1)
     val carried = perChunk.select(part.map(col) ++ infos.indices.map(i =>
       max_by(col(s"__w_$i"), col(s"__w_$i.o")).over(earlier).as(s"__c_$i")): _*)
-    infos.indices.foldLeft(stream) { (acc, i) =>
+    val inWindow = col("__t") >= lit(from).cast(stream.schema("__t").dataType) || col("__chunk") >= 0
+    infos.indices.foldLeft(stream.filter(inWindow)) { (acc, i) =>
       acc.unionByName(carried.filter(col(s"__c_$i").isNotNull).select(
         stream.columns.toSeq.map { c =>
           if (part.contains(c)) col(c)

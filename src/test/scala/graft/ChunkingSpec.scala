@@ -87,6 +87,35 @@ class ChunkingSpec extends SparkTestBase {
     }
   }
 
+  test("a hot key's bounds follow its rows: a late burst spreads over the chunks") {
+    import spark.implicits._
+    // one key: 20 rows an hour apart, then 600 rows a second apart, and a
+    // probe at every row; equal-width slices would put the burst in one
+    val base = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
+    val times = (0 until 20).map(_ * 3600000L) ++ (0 until 600).map(20 * 3600000L + _ * 1000L)
+    val src = times.zipWithIndex
+      .map { case (t, i) => ("k", new java.sql.Timestamp(base + t), i) }.toDF("k", "ts", "v")
+    val v = FeatureView("burst", src, Seq("k"), "ts", None, 0L, features = Seq("v"))
+    val ents = src.select(col("k"), col("ts").as("event_ts"))
+    SparkEntry.withSqlConf(spark, lowSkew) {
+      val bounds = PointInTimeJoin.splitKeys(ents, Seq(v)).head.getSeq[java.sql.Timestamp](1)
+      val perChunk = times.groupBy(t => bounds.count(_.getTime <= base + t)).values.map(_.size)
+      assert(bounds.size > 2 && perChunk.max <= 2 * times.size / bounds.size, perChunk)
+      assertSameRows(PointInTimeJoin.enrichMergeFused(ents, Seq(v)), PointInTimeJoin.enrich(ents, v))
+    }
+  }
+
+  test("a probe with no event time keeps its row, with null features, under every split") {
+    val ents = entityDf.unionByName(entityDf.limit(1).withColumn("event_ts", lit(null).cast("timestamp")))
+    val plain = PointInTimeJoin.enrich(ents, view(3600L))
+    for ((mode, confs) <- Seq(Chunking.Auto -> lowSkew, Chunking.EveryKey(4) -> Map.empty[String, String]))
+      SparkEntry.withSqlConf(spark, confs) {
+        assert(PointInTimeJoin.splitKeys(ents, Seq(view(3600L)), mode).nonEmpty, s"$mode: nothing split")
+        assertSameRows(PointInTimeJoin.enrichMergeFused(ents, Seq(view(3600L)), chunking = mode), plain)
+      }
+    assert(plain.filter(col("event_ts").isNull && col("role").isNull).count() == 1)
+  }
+
   test("with no hot keys the output and the physical plan equal the plain ones") {
     def build() = PointInTimeJoin.enrichMergeFused(entityDf, Seq(view(ttl = 0L)))
     val (chunked, jobs) = SparkEntry.withSqlConf(spark, noHotKey) {

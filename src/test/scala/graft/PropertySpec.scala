@@ -92,12 +92,14 @@ class PropertySpec extends SparkTestBase {
 
   // a coarse 5-minute grid puts feature rows and probes at the same ts,
   // chunk bounds included: the probe range is pinned to [-1500, 9000] s,
-  // so EveryKey(5)'s equal-width bounds fall every 2,100 s at 600, 2700,
-  // 4800 and 6900 s, grid times of feature rows where a quarter of the
-  // probes land; no feature row falls in [3000, 4800) s, where another
-  // quarter land, so some chunks hold probes only
-  private val featOff: Gen[Long] =
-    Gen.choose(0L, 18L).map(i => (if (i < 10) i else i + 6) * 300L)
+  // so EveryKey(5)'s equal-width bounds fall every 2,100 s from the first
+  // probe: at -1500 s, then at 600, 2700, 4800 and 6900 s, grid times of
+  // feature rows where a quarter of the probes land; feature rows at -2100
+  // and -1800 s precede every probe (chunk -1); no feature row falls in
+  // [3000, 4800) s, where another quarter land, so some chunks hold probes
+  // only
+  private val featOff: Gen[Long] = Gen.choose(-2L, 18L)
+    .map(i => (if (i < 0) i - 5 else if (i < 10) i else i + 6) * 300L)
   private val probeKey = Gen.frequency(4 -> "k1", 2 -> "k2", 2 -> "k3", 1 -> "k_absent")
   private val chunkTableGen: Gen[(List[Rec], List[Rec], List[(String, Long)])] = for {
     recs <- Gen.listOfN(40, for {
@@ -148,6 +150,8 @@ class PropertySpec extends SparkTestBase {
       val probeTs = probes.map { case (k, off) => (k, new Timestamp(base + off * 1000)) }
       assert(bounds.exists(b => recs.exists(_.ts == b) && probeTs.exists(_._2 == b)),
         s"fixture too weak at ttl=$ttl: no feature row and probe on a chunk bound")
+      assert(recs.exists(r => bounds.forall(r.ts.before)),
+        s"fixture too weak at ttl=$ttl: no feature row before every probe")
       assert(probeTs.exists { case (k, t) => k != "k_absent" &&
         !recs.exists(r => r.key == k && chunkOf(r.ts) == chunkOf(t)) },
         s"fixture too weak at ttl=$ttl: every probe's chunk holds its key's rows")
