@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.json4s.JDecimal
 import scala.collection.immutable.ListMap
 
 /** Benchmark main (driver contract). Prints ONE JSON line.
@@ -25,10 +24,9 @@ object Bench {
     (System.nanoTime() - t0) / 1e9
   }
 
-  /** `x` at a fixed number of decimal places, which the record keeps
-    * (a plain `BigDecimal` would be written as a double: 0.300 as 0.3). */
-  private def fixed(x: Double, places: Int): JDecimal =
-    JDecimal(BigDecimal(x).setScale(places, BigDecimal.RoundingMode.HALF_UP))
+  /** `x` at a fixed number of decimal places, which the record keeps. */
+  private def fixed(x: Double, places: Int): BigDecimal =
+    BigDecimal(x).setScale(places, BigDecimal.RoundingMode.HALF_UP)
 
   /** Force FULL execution. `.count()` lets Catalyst eliminate the final
     * left join (aggregate keys are provably unique) and everything under

@@ -14,7 +14,9 @@ import scala.util.Try
   */
 private[graft] object JsonCodec {
 
-  private implicit val formats: Formats = DefaultFormats
+  // a Scala BigDecimal is written with its scale (0.300, not 0.3); numbers
+  // read back as BigDecimal and still extract into Double fields
+  private implicit val formats: Formats = DefaultFormats.withBigDecimal
 
   // one field per line as `"key": value` (Jackson's default is `"key" : value`)
   private val prettyWriter = JsonMethods.mapper.writer(new DefaultPrettyPrinter()

@@ -1,7 +1,7 @@
 package graft.pit
 
 import graft.FeatureView
-import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, Row}
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, Row}
 import org.apache.spark.sql.catalyst.expressions.KnownNotNull
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -37,13 +37,13 @@ import scala.jdk.CollectionConverters._
   *
   * Hot keys split by time inside the same kernel. The window partitions by
   * `(keys, __chunk)`: `__chunk` is 0 for a cold key and a time chunk of the
-  * merge axis for a hot key. Each chunk is seeded with one carried row per
-  * view, the winner of all of that key's earlier chunks (a per-chunk
-  * `max_by` over (ts, created, tiebreaks), then a running `max_by` across
-  * chunks). The carried row keeps its own axis time, so it sorts before
-  * everything in its chunk; an empty chunk still passes the winner on, and
-  * TTL still qualifies the winner after the window. Rows older than every
-  * probe reach the window only through the carry. A key is hot when its
+  * merge axis for a hot key. Each chunk is seeded with one carried row that
+  * holds, per view, the winner of all of that key's earlier chunks (a
+  * per-chunk `max_by` over (ts, created, tiebreaks), then a running `max_by`
+  * across chunks). Its axis time lies in an earlier chunk, so it sorts
+  * before everything in its chunk; an empty chunk still passes the winners
+  * on, and TTL still qualifies each winner after the window. Rows older
+  * than every probe reach the window only through the carry. A key is hot when its
   * merge rows (counted over a sample) are estimated above Spark's
   * `spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes`, and gets
   * about one chunk per `spark.sql.adaptive.advisoryPartitionSizeInBytes`,
@@ -155,19 +155,19 @@ object PointInTimeJoin {
     src
   }
 
-  /** One view's columns in the merge stream: payload struct, the ords that
-    * break ts ties (created then tiebreaks), and in created-filter mode the
-    * visibility axis and the order struct of its running max_by.
+  /** One view's columns in the merge stream (`__payload_i` is its payload
+    * struct) and its ords: the flat sort keys (created, tiebreaks) that
+    * break ts ties for the sorted stream's `last`, or in created-filter
+    * mode (`byMaxBy`) the one (ts, created, tiebreaks) struct its running
+    * `max_by` reads, which stays out of the window's ORDER BY.
     */
-  private case class ViewCols(
-      view: FeatureView, src: DataFrame, feats: Seq[String],
-      visTime: Column, payload: Column, payloadType: DataType,
-      ordStruct: Option[(String, Column, DataType)],
-      ords: Seq[(String, Column, DataType)])
+  private case class ViewCols(view: FeatureView, ords: Seq[String], byMaxBy: Boolean)
 
   /** The merge stream of a key group: every view's feature rows (`__p` 0)
     * and the probe rows (`__p` 1) on one axis `__t`, keyed by the views'
-    * shared join keys; `bounds` is the entity (mn, mx) row. See [[enrichMergeFused]].
+    * shared join keys; `bounds` is the entity (mn, mx) row. Each side
+    * selects only its own columns and the union pads the rest with typed
+    * nulls. See [[enrichMergeFused]].
     */
   private def mergeStream(
       entityDf: DataFrame, views: Seq[FeatureView], entityTsCol: String,
@@ -182,14 +182,12 @@ object PointInTimeJoin {
       "fused merge of a Date entity timestamp requires one feature-ts type " +
         "across views; merge views with differing ts types separately")
     val minTs = lit("1900-01-01 00:00:00").cast("timestamp")
-    def typeOf(df: DataFrame, e: Column): DataType = df.select(e.as("x")).schema("x").dataType
 
-    // per-view column descriptors: payload struct + (ord name, expr, type).
-    // A created-filtered view additionally carries (a) a visibility merge
-    // axis greatest(ts, created) and (b) an order STRUCT for its running
-    // max_by — null on every other view's rows and on probes, so max_by
-    // skips them.
-    val infos = views.zipWithIndex.map { case (v, i) =>
+    // A created-filtered view merges on the visibility time
+    // greatest(ts, created) and orders its running max_by by one struct,
+    // null (union padding) on every other view's rows and on probes, so
+    // max_by skips them
+    val (fSides, infos) = views.zipWithIndex.map { case (v, i) =>
       val createdFilter = filterByCreatedTs && v.createdTsCol.nonEmpty
       // created-filter mode hides rows with NULL created_ts (SQL semantics
       // of the reference's `created <= entity_ts` join predicate,
@@ -198,54 +196,26 @@ object PointInTimeJoin {
       val src0 = prepare(v, bounds)
       val src =
         if (createdFilter) src0.filter(col(v.createdTsCol.get).isNotNull) else src0
-      val feats = v.resolvedFeatures
-      val payload = struct((feats.map(col) :+
-        col(v.tsCol).cast(etsType).as("__fts")): _*)
-      val visTime =
+      val ts = col(v.tsCol).cast(etsType)
+      val payload = struct((v.resolvedFeatures.map(col) :+ ts.as("__fts")): _*)
+      val tieOrds = v.createdTsCol.map(c => coalesce(col(c), minTs)).toSeq ++
+        v.tieBreakCols.map(col)
+      val (visTime, ords) =
         if (createdFilter)
-          greatest(col(v.tsCol), col(v.createdTsCol.get)).cast(etsType)
-        else col(v.tsCol).cast(etsType)
-      val ords = (v.createdTsCol.map(c => coalesce(col(c), minTs)).toSeq ++
-        v.tieBreakCols.map(col)).zipWithIndex.map { case (e, k) =>
-          (s"__ord_${i}_$k", e, typeOf(src, e))
-        }
-      // winner order of the created-filter max_by: (ts, ords…)
-      val ordStruct =
-        if (!createdFilter) None
-        else {
-          val e = struct((col(v.tsCol).cast(etsType) +: ords.map(_._2))
-            .zipWithIndex.map { case (e, k) => e.as(s"__o$k") }: _*)
-          Some((s"__mord_$i", e, typeOf(src, e)))
-        }
-      ViewCols(v, src, feats, visTime, payload, typeOf(src, payload), ordStruct, ords)
-    }
-    val owned = infos.zipWithIndex.flatMap { case (inf, i) =>
-      (inf.ords ++ inf.ordStruct).map { case (name, e, dt) => (name, i, e, dt) }
-    }
+          (greatest(col(v.tsCol), col(v.createdTsCol.get)).cast(etsType),
+            Seq(struct((ts +: tieOrds).zipWithIndex.map { case (e, k) => e.as(s"__o$k") }: _*)))
+        else (ts, tieOrds)
+      val names = ords.indices.map(k => s"__ord_${i}_$k")
+      (src.select(keys.map(col) ++ Seq(visTime.as("__t"), lit(0).as("__p"),
+          payload.as(s"__payload_$i")) ++ ords.zip(names).map { case (e, n) => e.as(n) }: _*),
+        ViewCols(v, names, createdFilter))
+    }.unzip
 
     // every entity column, as one struct on the probe side
     val entity = struct(entityDf.columns.toSeq.map(c => col(quote(c)).as(c)): _*)
-    val entityType = typeOf(entityDf, entity)
-
-    def sideSelect(df: DataFrame, head: Seq[Column], ownerIdx: Int): DataFrame =
-      df.select(
-        keys.map(col) ++ head ++
-          infos.zipWithIndex.map { case (inf, j) =>
-            if (j == ownerIdx) inf.payload.as(s"__payload_$j")
-            else lit(null).cast(inf.payloadType).as(s"__payload_$j")
-          } ++
-          owned.map { case (name, owner, e, dt) =>
-            if (owner == ownerIdx) e.as(name) else lit(null).cast(dt).as(name)
-          }: _*)
-
-    val fSides = infos.zipWithIndex.map { case (inf, i) =>
-      sideSelect(inf.src, Seq(inf.visTime.as("__t"), lit(0).as("__p"),
-        lit(null).cast(entityType).as("__ent")), i)
-    }
-    val pSide = sideSelect(entityDf, Seq(
-      col(quote(entityTsCol)).cast(etsType).as("__t"), lit(1).as("__p"),
-      entity.as("__ent")), ownerIdx = -1)
-    ((fSides :+ pSide).reduce(_ unionByName _), infos)
+    val pSide = entityDf.select(keys.map(col) ++ Seq(
+      col(quote(entityTsCol)).cast(etsType).as("__t"), lit(1).as("__p"), entity.as("__ent")): _*)
+    ((fSides :+ pSide).reduce(_.unionByName(_, allowMissingColumns = true)), infos)
   }
 
   /** The sort-merge as-of kernel (see object doc): N views sharing the
@@ -268,7 +238,8 @@ object PointInTimeJoin {
     * time `greatest(ts, created_ts)`, so `__t <= event_ts` is exactly
     * `ts <= event_ts AND created_ts <= event_ts`; that stream is not in
     * winner order, so the running `last` becomes a running `max_by(payload,
-    * (ts, created, tiebreaks))` under the same sort — linear at TTL = 0.
+    * (ts, created, tiebreaks))` under the same sort — linear at TTL = 0. The
+    * view's one ord is that struct, and it stays out of the sort.
     *
     * No join-back: probe rows carry every entity column in one `__ent`
     * struct through the exchange and the sort.
@@ -301,7 +272,7 @@ object PointInTimeJoin {
     }
     val w = Window.partitionBy(part.map(col): _*)
       .orderBy((Seq(col("__t").asc, col("__p").asc) ++
-        infos.flatMap(_.ords).map { case (name, _, _) => col(name).asc_nulls_first }): _*)
+        infos.filterNot(_.byMaxBy).flatMap(_.ords).map(col(_).asc_nulls_first)): _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
 
     // per-view running winner: the sorted-stream `last` normally; a running
@@ -311,11 +282,11 @@ object PointInTimeJoin {
     // and are skipped). TTL qualifies each winner against the probe's
     // (axis-typed) event ts.
     val bests = infos.zipWithIndex.map { case (inf, i) =>
-      val best = inf.ordStruct match {
-        case Some((name, _, _)) => max_by(col(s"__payload_$i"), col(name)).over(w)
-        case None => last(col(s"__payload_$i"), ignoreNulls = true).over(w)
-      }
-      s"__best_$i" -> best
+      val payload = col(s"__payload_$i")
+      val best =
+        if (inf.byMaxBy) max_by(payload, col(inf.ords.head))
+        else last(payload, ignoreNulls = true)
+      s"__best_$i" -> best.over(w)
     }
     val filled = stream.withColumns(bests.toMap).filter(col("__p") === 1)
     val featCols = infos.zipWithIndex.flatMap { case (inf, i) =>
@@ -325,7 +296,7 @@ object PointInTimeJoin {
           when(best("__fts") >=
             col("__t") - expr(s"INTERVAL ${inf.view.ttlSeconds} SECONDS"), best)
         else best
-      inf.feats.map(f => qualified(f).as(outName(inf.view, f, fullFeatureNames)))
+      inf.view.resolvedFeatures.map(f => qualified(f).as(outName(inf.view, f, fullFeatureNames)))
     }
     // the entity frame as it came in, then features per view; a probe row
     // always carries its struct, so entity columns keep their nullability
@@ -410,9 +381,10 @@ object PointInTimeJoin {
       .drop("__bounds")
   }
 
-  /** Seed each `(key, __chunk)` with one carried feature row per view: the
-    * view's winner over all of the key's earlier chunks, with its own `__t`,
-    * payload and ords. Its `__t` lies in an earlier chunk, so it sorts
+  /** Seed each `(key, __chunk)` with one carried feature row that holds
+    * every view's winner over all of the key's earlier chunks: its payload
+    * and ords, padded by the union like any feature row. Its `__t` is the
+    * greatest of the winners' `__t`s, each in an earlier chunk, so it sorts
     * before every row of its chunk. The winner order is the kernel's:
     * (ts, ords) — `__t` is the ts outside created-filter mode — or the
     * view's created-filter order struct. Chunk −1 (`__t` < `from`, tested
@@ -421,32 +393,27 @@ object PointInTimeJoin {
   private def withCarry(
       stream: DataFrame, keys: Seq[String], infos: Seq[ViewCols], from: Any): DataFrame = {
     val part = keys :+ "__chunk"
-    def mine(i: Int): Seq[String] =
-      Seq("__t", s"__payload_$i") ++ (infos(i).ords ++ infos(i).ordStruct).map(_._1)
-    def order(i: Int): Column = infos(i).ordStruct match {
-      case Some((name, _, _)) => col(name)
-      case None => when(col(s"__payload_$i").isNotNull,
-        struct((col("__t") +: infos(i).ords.map(o => col(o._1))): _*))
-    }
-    val winners = infos.indices.map { i =>
-      max_by(struct(order(i).as("o"), struct(mine(i).map(col): _*).as("r")), order(i))
-        .as(s"__w_$i")
+    val winners = infos.zipWithIndex.map { case (inf, i) =>
+      val payload = col(s"__payload_$i")
+      val order =
+        if (inf.byMaxBy) col(inf.ords.head)
+        else when(payload.isNotNull, struct((col("__t") +: inf.ords.map(col)): _*))
+      val row = struct((Seq("__t", s"__payload_$i") ++ inf.ords).map(col): _*)
+      max_by(struct(order.as("o"), row.as("r")), order).as(s"__w_$i")
     }
     val perChunk = stream.groupBy(part.map(col): _*).agg(winners.head, winners.tail: _*)
     val earlier = Window.partitionBy(keys.map(col): _*).orderBy(col("__chunk"))
       .rangeBetween(Window.unboundedPreceding, -1)
     val carried = perChunk.select(part.map(col) ++ infos.indices.map(i =>
-      max_by(col(s"__w_$i"), col(s"__w_$i.o")).over(earlier).as(s"__c_$i")): _*)
+      max_by(col(s"__w_$i.r"), col(s"__w_$i.o")).over(earlier).as(s"__c_$i")): _*)
+    val seeds = carried.select(part.map(col) ++ Seq(
+        infos.indices.map(i => col(s"__c_$i.__t")).reduce(greatest(_, _)).as("__t"),
+        lit(0).as("__p")) ++
+      infos.zipWithIndex.flatMap { case (inf, i) =>
+        (s"__payload_$i" +: inf.ords).map(c => col(s"__c_$i.$c").as(c))
+      }: _*).filter(col("__t").isNotNull)
     val inWindow = col("__t") >= lit(from).cast(stream.schema("__t").dataType) || col("__chunk") >= 0
-    infos.indices.foldLeft(stream.filter(inWindow)) { (acc, i) =>
-      acc.unionByName(carried.filter(col(s"__c_$i").isNotNull).select(
-        stream.columns.toSeq.map { c =>
-          if (part.contains(c)) col(c)
-          else if (c == "__p") lit(0).as(c)
-          else if (mine(i).contains(c)) col(s"__c_$i.r.$c").as(c)
-          else lit(null).cast(stream.schema(c).dataType).as(c)
-        }: _*))
-    }
+    stream.filter(inWindow).unionByName(seeds, allowMissingColumns = true)
   }
 
   /** The merge kernel's time-axis type for `view` against an entity ts of

@@ -2,7 +2,10 @@ package graft
 
 import java.sql.Timestamp
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Physical-plan contracts: the shuffle count of each operator family is an
   * API, not an accident. At 100 TB an extra Exchange is the difference
@@ -200,6 +203,57 @@ class PlanContractSpec extends SparkTestBase {
 
   private def planLines(df: DataFrame, node: String): Int =
     df.queryExecution.executedPlan.toString.linesIterator.count(_.contains(node))
+
+  private def parquet(name: String, df: DataFrame): DataFrame = {
+    val dir = tempDir(s"graft_plan_$name")
+    df.write.mode("overwrite").parquet(dir)
+    spark.read.parquet(dir)
+  }
+
+  test("every-key chunked retrieval of two fused views reads each input twice") {
+    val turns = parquet("turns", (1 to 500).map { i =>
+      (s"conv${i % 20}", new Timestamp(1700000000000L + i * 60000L), i)
+    }.toDF("conv_id", "ts", "turn_idx"))
+    val quality = parquet("quality", (1 to 300).map { i =>
+      (s"conv${i % 20}", new Timestamp(1700000000000L + i * 90000L), i * 1.5)
+    }.toDF("conv_id", "ts", "score"))
+    val entity = parquet("entity", (1 to 50).map { i =>
+      (s"conv${i % 20}", new Timestamp(1700000000000L + i * 600000L))
+    }.toDF("conv_id", "event_ts"))
+    val out = pit.PointInTimeJoin.enrichMergeFused(entity, Seq(
+      FeatureView("turns", turns, Seq("conv_id"), "ts", features = Seq("turn_idx")),
+      FeatureView("quality", quality, Seq("conv_id"), "ts", features = Seq("score"))),
+      chunking = pit.PointInTimeJoin.Chunking.EveryKey(4))
+    // once for the merge stream and once for the carry, which seeds each
+    // chunk with one row for all views (a row per view read them 3 times)
+    assert(planLines(out, "FileScan") == 6,
+      "the carry re-reads the inputs per view:\n" + out.queryExecution.executedPlan)
+  }
+
+  test("created-filter merge stream shuffles one order struct per view") {
+    val src = parquet("versions", (1 to 300).map { i =>
+      (s"conv${i % 20}", new Timestamp(1700000000000L + i * 90000L),
+        new Timestamp(1700000000000L + i * 90000L + (i % 3) * 86400000L), i % 7, i * 1.5)
+    }.toDF("conv_id", "ts", "created_ts", "version", "score"))
+    val entity = parquet("probes", (1 to 50).map { i =>
+      (s"conv${i % 20}", new Timestamp(1700000000000L + i * 600000L))
+    }.toDF("conv_id", "event_ts"))
+    val view = FeatureView("quality", src, Seq("conv_id"), "ts",
+      createdTsCol = Some("created_ts"), features = Seq("score"), tieBreakCols = Seq("version"))
+    val out = pit.PointInTimeJoin.enrich(entity, view, filterByCreatedTs = true)
+    val plan = out.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    val exchanges = plan.collect { case e: ShuffleExchangeExec => e }
+    assert(exchanges.size == 1, plan)
+    // the running max_by reads (ts, created, version) as one struct; no
+    // flat copy of created and version rides along
+    val cols = exchanges.head.child.output.map(a => a.name -> a.dataType).toMap
+    assert(cols.keySet == Set("conv_id", "__t", "__p", "__ent", "__payload_0", "__ord_0_0"),
+      s"merge-stream shuffle columns: ${cols.keys.mkString(", ")}")
+    assert(cols("__ord_0_0").asInstanceOf[StructType].size == 3, cols("__ord_0_0"))
+  }
 
   private lazy val transcript: DataFrame = {
     val dir = tempDir("graft_plantranscript")
